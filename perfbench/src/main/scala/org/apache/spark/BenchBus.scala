@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Listener events are delivered asynchronously; the harness drains the
+  * bus before it reads what its listeners recorded.
+  */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
