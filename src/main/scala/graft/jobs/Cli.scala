@@ -146,10 +146,14 @@ object Cli {
         // run reads only its own files (partition pruning on the path) —
         // never cache() a table whose design point is 100 TB of html.
         // At real scale the source table is already unit-partitioned and
-        // this step disappears.
+        // this step disappears. The round-robin spread gives every task
+        // a share of each unit, so a unit is staged as `cpus` even files:
+        // url-hash mode runs a unit on its input splits, and one file
+        // would run it as one task.
         val staged = s"${args(2)}/_staged_pages"
         pages.withColumn("unit",
             pmod(xxhash64(col("url")), lit(units)).cast("int"))
+          .repartition(cpus.toInt)
           .write.mode("overwrite").partitionBy("unit").parquet(staged)
         // hive partitionBy writes no directory for an empty unit (small
         // inputs / large --units) — treat a missing path as zero rows

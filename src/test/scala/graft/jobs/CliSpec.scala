@@ -75,6 +75,22 @@ class CliSpec extends AnyFunSuite {
     assert(staged.listFiles().map(_.getName).count(_.startsWith("unit=")) == 2)
   }
 
+  test("extract verb: a one-file parquet source is staged as several files per unit") {
+    val work = Files.createTempDirectory("cli-extract-one-file")
+    val src = work.resolve("pages.parquet").toString
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    graft.table.SyntheticPages.generate(spark, 200).toDF().coalesce(1).write.parquet(src)
+    val out = work.resolve("table").toString
+    Cli.main(Array("extract", src, out, "--units", "2"))
+    // url-hash mode runs a unit on its input splits: one staged file
+    // per unit would run its whole cascade as one task
+    for (u <- 0 until 2) {
+      val files = new java.io.File(s"$out/_staged_pages/unit=$u").list()
+      assert(files.count(_.endsWith(".parquet")) > 1, files.mkString(", "))
+    }
+  }
+
   test("extract verb: warc: source ingests .warc.gz files end to end") {
     val work = Files.createTempDirectory("cli-extract-warc")
     val warcDir = work.resolve("crawl")

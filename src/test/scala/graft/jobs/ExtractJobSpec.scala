@@ -8,7 +8,8 @@ import java.nio.file.Files
 
 /** North-rule job mechanics: unit-granular checkpointed resume
   * (kill-and-rerun yields an identical table), manifest lineage,
-  * size-bucketed processing.
+  * map-side url-hash plans, overlapped units that fail cleanly, and
+  * host-grouped size-bucketed processing.
   */
 class ExtractJobSpec extends AnyFunSuite {
 
@@ -23,11 +24,32 @@ class ExtractJobSpec extends AnyFunSuite {
   private val nPages = 240L
   private val cfg = ExtractJobConfig(nUnits = 6, partitionsPerUnit = 4)
 
-  private def unitPages(u: Int): DataFrame = {
+  private def unitPages(u: Int): DataFrame = unitPagesIn(2)(u)
+
+  private def unitPagesIn(partitions: Int)(u: Int): DataFrame = {
     import spark.implicits._
     val perUnit = nPages / cfg.nUnits
-    spark.range(u * perUnit, (u + 1) * perUnit, 1, 2)
+    spark.range(u * perUnit, (u + 1) * perUnit, 1, partitions)
       .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id))).toDF()
+  }
+
+  /** No Spark job is running and no unit write thread is alive. */
+  private def assertNothingRunning(): Unit = {
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a unit write outlived runUnits")
+    val writers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("graft-extract-unit-"))
+    assert(writers.isEmpty, s"write threads left: ${writers.map(_.getName).mkString(", ")}")
+  }
+
+  private def parquetPages(ids: Seq[Long], files: Int): DataFrame = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pages").toString
+    spark.createDataset(ids).repartition(files)
+      .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id)))
+      .toDF().write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
   }
 
   private def tableDigest(t: IcebergLite): Seq[(String, String)] =
@@ -51,11 +73,68 @@ class ExtractJobSpec extends AnyFunSuite {
       ExtractJob.runUnits(spark, unitPages, resumed, cfg, failAfterUnits = 2)
     }
     assert(resumed.committedUnits(spark) == Seq(0, 1))
+    assertNothingRunning()
     val ranResume = ExtractJob.runUnits(spark, unitPages, resumed, cfg)
     assert(ranResume == (2 until cfg.nUnits)) // committed units skipped
 
     assert(tableDigest(clean) == tableDigest(resumed))
     clean.drop(spark); resumed.drop(spark)
+  }
+
+  test("a unit whose pages throw fails the run after the units before it commit") {
+    val dir = Files.createTempDirectory("graft-unit-fail").toString
+    val t = new IcebergLite(dir)
+    def failing(u: Int): DataFrame = {
+      import spark.implicits._
+      // unit 2's ids; unit 3's write is in flight when unit 2 fails
+      if (u != 2) unitPages(u)
+      else spark.range(80, 120, 1, 2).mapPartitions(_.map { id =>
+        if (id == 100) throw new IllegalStateException("page 100 of unit 2 is broken")
+        SyntheticPages.pageFor(42L, id)
+      }).toDF()
+    }
+    val e = intercept[Exception](ExtractJob.runUnits(spark, failing, t, cfg))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.getMessage != null &&
+      c.getMessage.contains("page 100 of unit 2 is broken")), e)
+    assert(t.committedUnits(spark) == Seq(0, 1))
+    assertNothingRunning()
+    t.drop(spark)
+  }
+
+  test("url-hash mode is map-side: one file scan, no exchange; host-grouped keeps its repartition") {
+    val pages = parquetPages(0L until 200L, files = 4) // one file per core
+    val plan = ExtractJob.processUnit(pages, cfg).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, plan)
+    val grouped = ExtractJob.processUnit(pages, cfg.copy(groupByHost = true))
+      .queryExecution.executedPlan.toString
+    assert(grouped.contains("Exchange hashpartitioning"), grouped)
+  }
+
+  test("url-hash mode spreads a unit staged as one file round-robin to the core count") {
+    val out = ExtractJob.processUnit(parquetPages(0L until 200L, files = 1), cfg)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("RoundRobinPartitioning(4)"), plan)
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, plan)
+    assert(out.select("task_partition").distinct().count() == 4)
+  }
+
+  test("output does not depend on the input's partitioning or an extras column") {
+    // one partition takes the round-robin spread, four run map-side
+    val one = new IcebergLite(Files.createTempDirectory("graft-one-part").toString)
+    val four = new IcebergLite(Files.createTempDirectory("graft-four-parts").toString)
+    val layoutCfg = cfg.copy(nUnits = 2)
+    ExtractJob.runUnits(spark, unitPagesIn(1), one, layoutCfg)
+    ExtractJob.runUnits(spark, unitPagesIn(4), four, layoutCfg)
+    assert(tableDigest(one) == tableDigest(four))
+    one.drop(spark); four.drop(spark)
+
+    def rows(df: DataFrame): Seq[String] =
+      ExtractJob.processUnit(df, cfg).drop("task_partition").collect().map(_.toString).sorted.toSeq
+    val plain = unitPages(0)
+    val withExtras = plain.withColumn("extras", map(lit("source"), lit("crawl")))
+    assert(rows(withExtras) == rows(plain))
   }
 
   test("manifest carries per-unit lineage and strategy histogram") {
@@ -81,9 +160,14 @@ class ExtractJobSpec extends AnyFunSuite {
       SyntheticPages.familyOf(42L, id) == "oversized").get
     val df = spark.range(bigId, bigId + 1).mapPartitions(
       _.map(id => SyntheticPages.pageFor(42L, id))).toDF()
-    val out = ExtractJob.processUnit(df, cfg.copy(bigHtmlBytes = 100 * 1024))
-    val row = out.select("strategy_used", "succeeded").collect()(0)
-    assert(row.getBoolean(1))
+    // host-grouped mode routes it through the big bucket; url-hash mode
+    // extracts it where it lies, with the same result
+    val results = Seq(true, false).map { grouped =>
+      ExtractJob.processUnit(df, cfg.copy(bigHtmlBytes = 100 * 1024, groupByHost = grouped))
+        .select("strategy_used", "succeeded").collect().toSeq
+    }
+    assert(results.forall(_.size == 1) && results(0)(0).getBoolean(1))
+    assert(results(0) == results(1))
   }
 
   test("re-publish is atomic: versioned manifest, unit never uncommitted") {
