@@ -18,19 +18,9 @@ import java.nio.file.{Files, Paths}
 object Bench {
 
   private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      // large binary blobs x 4096-row default column batches = GB-scale
-      // batch buffers; size the reader batch for the payload
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.util.Sessions.local(cpus, s"graft-bench-$cpus")
+    // small splits: both scaling levels get enough input partitions
+    s.conf.set("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
     s
   }
 
@@ -42,7 +32,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.util.Sessions.cpus
     // "all" (default) | "queries" | "scaling" — the partial modes exist
     // for isolated measurement; the driver always runs "all"
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "all")
@@ -230,8 +220,8 @@ object Bench {
            |## Full-width (8->32) ceiling adjudication (measured 2026-08-17)
            |
            |The residual 8->32 gap is the MACHINE's, not the engine's —
-           |three independent measurements (tools: ScalingCurve,
-           |MemBandwidth, ExtractRate two-JVM):
+           |three independent measurements (one-off probes, since deleted;
+           |`python3 perfbench/run.py --trace 1` now measures scaling):
            |1. **GC attribution**: after sizing the young gen for 32
            |   allocation-heavy threads (-Xmn16g of 24g, build.sbt — an A/B
            |   worth +25-30%% at local[32] and flat at local[8]), collector

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.table.{IcebergLite, SyntheticPages}
+import graft.util.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,20 +20,6 @@ import org.apache.spark.sql.functions._
   *   graft.jobs.Cli test_pipeline <workDir>
   */
 object Cli {
-
-  private def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def loadPages(spark: SparkSession, src: String): DataFrame =
     if (src.startsWith("synth:"))
@@ -91,7 +78,7 @@ object Cli {
     // global --version callback: print and exit, before any verb
     if (args.contains("--version")) { println(Version); return }
     if (args.isEmpty) { println(usage); sys.exit(2) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     args(0) match {
       case "info" =>
         // the reference echoes the RESOLVED layered config as pretty
@@ -109,7 +96,7 @@ object Cli {
             "embedder" -> "deterministic-hash dim 384"))).toPrettyJson)
 
       case "extract" =>
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         val pages = loadPages(spark, args(1))
         val out = new IcebergLite(args(2))
         val units = opt(args, "--units").map(_.toInt).getOrElse(8)
@@ -140,7 +127,7 @@ object Cli {
           runtimeOverrides =
             if (pipelineOverrides.isEmpty) Map.empty
             else Map("pipeline" -> pipelineOverrides))
-        val cfg = ExtractJobConfig(nUnits = units, partitionsPerUnit = cpus.toInt,
+        val cfg = ExtractJobConfig(nUnits = units, partitionsPerUnit = cpus,
           cascade = graft.util.ScragConfig.cascadeConfig(resolved))
         // Stage the input ONCE, hive-partitioned by unit, so each unit's
         // run reads only its own files (partition pruning on the path) —
@@ -153,7 +140,7 @@ object Cli {
         val staged = s"${args(2)}/_staged_pages"
         pages.withColumn("unit",
             pmod(xxhash64(col("url")), lit(units)).cast("int"))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").partitionBy("unit").parquet(staged)
         // hive partitionBy writes no directory for an empty unit (small
         // inputs / large --units) — treat a missing path as zero rows
@@ -194,7 +181,7 @@ object Cli {
         // reference `scrag embed` (core/cli/app.py:131-215): text file →
         // chunk → embed → embeddings artifact; or pre-chunked input
         // (a parquet with chunk_text) → embed only.
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         import spark.implicits._
         val in = args(1)
         val outPath = args(2)
@@ -238,7 +225,7 @@ object Cli {
       case "index" =>
         // reference `scrag index` (core/cli/app.py:218-271): embeddings
         // artifact → searchable index table, with the dim check.
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         val emb = spark.read.parquet(args(1))
         val dim = opt(args, "--dim").map(_.toInt).getOrElse(
           new graft.rag.DeterministicHashEmbedder().dim)
@@ -257,7 +244,7 @@ object Cli {
         spark.stop()
 
       case "build_rag" =>
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         val pages = loadPages(spark, args(1))
         val out = new IcebergLite(args(2))
         val n = RagJobs.buildAndWrite(pages, out)
@@ -265,7 +252,7 @@ object Cli {
         spark.stop()
 
       case "query" =>
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         val index = new IcebergLite(args(1)).read(spark)
         val topK = opt(args, "--top-k").map(_.toInt).getOrElse(10)
         val text = args.drop(2).filterNot(a => a.startsWith("--") ||
@@ -276,12 +263,12 @@ object Cli {
       case "test_pipeline" =>
         // end-to-end smoke: extract -> build_rag -> query (cli/app.py:453-643)
         val work = args(1)
-        val spark = session(cpus)
+        val spark = Sessions.local(cpus, "graft-cli")
         val pages = SyntheticPages.generate(spark, 500).toDF()
         val extracted = new IcebergLite(s"$work/extracted")
         val ran = ExtractJob.runUnits(spark,
           u => pages.where(pmod(xxhash64(col("url")), lit(4)) === u),
-          extracted, ExtractJobConfig(nUnits = 4, partitionsPerUnit = cpus.toInt))
+          extracted, ExtractJobConfig(nUnits = 4, partitionsPerUnit = cpus))
         val index = new IcebergLite(s"$work/index")
         val n = RagJobs.buildAndWrite(pages, index)
         val answer = RagJobs.query(index.read(spark), "analytics engine processes data", 3)

@@ -222,19 +222,10 @@ object ExtractJob {
     val outPath = args(0)
     val nPages = if (args.length > 1) args(1).toLong else 20000L
     val nUnits = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.Sessions.cpus
+    val spark = graft.util.Sessions.local(cpus, "graft-extract")
 
-    val cfg = ExtractJobConfig(nUnits = nUnits, partitionsPerUnit = cpus.toInt)
+    val cfg = ExtractJobConfig(nUnits = nUnits, partitionsPerUnit = cpus)
     val out = new IcebergLite(outPath)
     val perUnit = (nPages + nUnits - 1) / nUnits
     def unitPages(u: Int): DataFrame = {

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Real byte-pair-encoding token counting.
   *
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[train]]: classic BPE training (Sennrich et al. 2016, public
   *    algorithm) on a bounded corpus sample — deterministic (ties break
-  *    lexicographically), run OFFLINE like the IVF/PQ quantizers, with
+  *    in code-point order), run OFFLINE like the IVF/PQ quantizers, with
   *    the learned merges committed as a text artifact
   *    (golden/bpe_merges.txt).
   *  - [[tokenCountDf]]: greedy lowest-rank merge application inside a
@@ -60,11 +61,9 @@ object Bpe {
     out.toArray
   }
 
-  /** Deterministic BPE training: start from single characters, repeat
-    * `numMerges` times: count adjacent symbol pairs over the distinct
-    * pieces (weighted by piece frequency), merge the most frequent pair
-    * (ties → lexicographically smallest (left, right)). Stops early
-    * when no pair occurs at least `minPairFreq` times.
+  /** Deterministic BPE training over raw texts: counts the corpus's
+    * pretokenizer pieces, then runs [[trainWeighted]]'s merge loop over
+    * that (piece, freq) dict.
     */
   def train(texts: IterableOnce[String], numMerges: Int,
       minPairFreq: Long = 2): Seq[(String, String)] = {
@@ -72,71 +71,11 @@ object Bpe {
     texts.iterator.foreach { t =>
       pretokenize(t).foreach(p => pieceFreq.merge(p, 1L, _ + _))
     }
-    // mutable word representations: piece → current symbol sequence
-    var words: Array[(Array[String], Long)] = {
-      val out = new Array[(Array[String], Long)](pieceFreq.size)
-      val it = pieceFreq.entrySet().iterator()
-      var i = 0
-      while (it.hasNext) {
-        val e = it.next()
-        out(i) = (symbolsOf(e.getKey), e.getValue)
-        i += 1
-      }
-      // deterministic processing order (HashMap order must not leak)
-      out.sortBy(w => (w._1.mkString, w._2))
-    }
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var step = 0
-    var done = false
-    while (step < numMerges && !done) {
-      val pairFreq = new java.util.HashMap[(String, String), Long]()
-      words.foreach { case (syms, f) =>
-        var i = 0
-        while (i + 1 < syms.length) {
-          pairFreq.merge((syms(i), syms(i + 1)), f, _ + _)
-          i += 1
-        }
-      }
-      if (pairFreq.isEmpty) done = true
-      else {
-        var best: (String, String) = null
-        var bestF = 0L
-        val it = pairFreq.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val p = e.getKey
-          val f = e.getValue
-          if (f > bestF || (f == bestF && best != null &&
-              (p._1 < best._1 || (p._1 == best._1 && p._2 < best._2)))) {
-            best = p; bestF = f
-          }
-        }
-        if (bestF < minPairFreq) done = true
-        else {
-          merges += best
-          val merged = best._1 + best._2
-          words = words.map { case (syms, f) =>
-            if (syms.length < 2) (syms, f)
-            else {
-              val out = scala.collection.mutable.ArrayBuffer.empty[String]
-              var i = 0
-              while (i < syms.length) {
-                if (i + 1 < syms.length && syms(i) == best._1 && syms(i + 1) == best._2) {
-                  out += merged; i += 2
-                } else { out += syms(i); i += 1 }
-              }
-              (out.toArray, f)
-            }
-          }
-        }
-      }
-      step += 1
-    }
-    merges.toSeq
+    trainWeighted(pieceFreq.asScala.toArray, numMerges, minPairFreq)
   }
 
   /** Sequential in-rank-order merge application — the TRAINER's view of
-    * a word (train() applies exactly one merge globally per round, so
+    * a word (training applies exactly one merge globally per round, so
     * replaying the merge list in rank order over the raw split
     * reproduces the incremental state bit-for-bit).
     */
@@ -212,16 +151,19 @@ object Bpe {
     a.length - i < b.length - j
   }
 
-  /** Driver-side merge loop over an ALREADY-AGGREGATED (piece, freq)
-    * dict — [[train]]'s incremental algorithm (one global merge per
-    * round) started from the word-frequency table instead of raw
-    * texts, with the argmax tie-break in code-point order to match
-    * the SQL `ORDER BY f DESC, l, r` of the per-round distributed
-    * path. Cost per round is O(total symbols of the dict), so 32k
-    * production merges are driver-cheap once the dict is in hand.
+  /** The merge loop, over an ALREADY-AGGREGATED (piece, freq) dict:
+    * start from single code points, repeat `numMerges` times: count
+    * adjacent symbol pairs over the distinct pieces (weighted by piece
+    * frequency), merge the most frequent pair (ties → smallest (left,
+    * right) in code-point order, matching the SQL `ORDER BY f DESC, l,
+    * r` of the per-round distributed path). Stops early when no pair
+    * occurs at least `minPairFreq` times. Cost per round is O(total
+    * symbols of the dict), so 32k production merges are driver-cheap
+    * once the dict is in hand.
     */
   def trainWeighted(pieces: Array[(String, Long)], numMerges: Int,
       minPairFreq: Long = 2): Seq[(String, String)] = {
+    require(minPairFreq >= 1, s"minPairFreq must be >= 1, got $minPairFreq")
     // deterministic processing order (input order must not leak);
     // counting is order-independent, this just pins iteration for
     // debuggability — the argmax comparison is total regardless
@@ -279,10 +221,9 @@ object Bpe {
     merges.toSeq
   }
 
-  /** DISTRIBUTED BPE training — [[train]]'s semantics (same greedy
-    * argmax, same (count desc, pair asc) tie-break, same minPairFreq
-    * early stop), restructured for a corpus that does not fit one
-    * machine: ONE corpus pass builds the aggregated (piece, freq)
+  /** DISTRIBUTED BPE training — [[train]] (the same [[trainWeighted]]
+    * merge loop) for a corpus that does not fit one machine: ONE
+    * corpus pass builds the aggregated (piece, freq)
     * dict, the dict is collected under a LOUD bound (Heaps' law keeps
     * distinct pretokens ≪ corpus tokens; the `require` fails fast if
     * an adversarial corpus breaks that), and the merge loop runs
@@ -324,6 +265,7 @@ object Bpe {
     */
   def trainDistributedRounds(docs: DataFrame, numMerges: Int,
       minPairFreq: Long = 2): Seq[(String, String)] = {
+    require(minPairFreq >= 1, s"minPairFreq must be >= 1, got $minPairFreq")
     val spark = docs.sparkSession
     import spark.implicits._
     val pieceFreq = pieceFreqTable(docs).as[(String, Long)].persist()
@@ -363,40 +305,16 @@ object Bpe {
     } finally pieceFreq.unpersist()
   }
 
+  /** Post-merge BPE token COUNT of one pretokenizer piece (the billing
+    * metric — the token strings themselves are never materialized
+    * downstream).
+    */
+  def applyCount(piece: String, ranks: java.util.HashMap[(String, String), Int]): Int =
+    applyTokens(piece, ranks).length
+
   /** Greedy merge application: repeatedly merge the lowest-rank
     * adjacent pair present in `ranks` until none remains; returns the
-    * token COUNT (the billing metric — the token strings themselves
-    * are never materialized downstream).
-    */
-  def applyCount(piece: String, ranks: java.util.HashMap[(String, String), Int]): Int = {
-    if (piece.length <= 1) return piece.length
-    val initial = symbolsOf(piece)
-    if (initial.length == 1) return 1
-    val syms = new java.util.ArrayList[String](initial.length)
-    initial.foreach(syms.add)
-    var continue = true
-    while (continue && syms.size > 1) {
-      var bestRank = Int.MaxValue
-      var bestAt = -1
-      var j = 0
-      while (j + 1 < syms.size) {
-        val r = ranks.getOrDefault((syms.get(j), syms.get(j + 1)), Int.MaxValue)
-        if (r < bestRank) { bestRank = r; bestAt = j }
-        j += 1
-      }
-      if (bestAt < 0) continue = false
-      else {
-        syms.set(bestAt, syms.get(bestAt) + syms.get(bestAt + 1))
-        syms.remove(bestAt + 1)
-      }
-    }
-    syms.size
-  }
-
-  /** Post-merge BPE token SEQUENCE of one pretokenizer piece — the
-    * same greedy lowest-rank loop as [[applyCount]], returning the
-    * symbols instead of their count (spec pins
-    * applyTokens(p).length == applyCount(p)).
+    * post-merge BPE token SEQUENCE of one pretokenizer piece.
     */
   def applyTokens(piece: String,
       ranks: java.util.HashMap[(String, String), Int]): Array[String] = {

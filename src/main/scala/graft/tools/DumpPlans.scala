@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: the formatted physical plan of each headline query
@@ -241,14 +240,8 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a fixed width: the dumped plans show partition counts
+    val spark = graft.util.Sessions.local(8, "graft-plans")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries (generated)\n\n")
     sb.append(s"Generated by `runMain graft.tools.DumpPlans $sfDir` — regenerate\n")

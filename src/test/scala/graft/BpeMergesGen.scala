@@ -16,13 +16,7 @@ import java.nio.file.{Files, Paths}
   */
 object BpeMergesGen {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("bpe-merges-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(8, "bpe-merges-gen")
     import spark.implicits._
 
     // bounded, deterministic training sample: the sf0.01 documents in

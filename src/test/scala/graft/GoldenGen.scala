@@ -65,14 +65,7 @@ object GoldenGen {
     println(s"wrote ${lines.size} digest lines + ${byFamily.size} fulltext goldens to $dir")
 
     // ---- golden parquet tables (driver oracles, SparkEntry) ----
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("golden-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(8, "golden-gen")
     import spark.implicits._
 
     val sf001 = "/root/testdata/sf0.01"

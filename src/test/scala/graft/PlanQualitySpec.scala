@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import java.nio.file.Files
   * parquet scan). These assertions fail if a refactor accidentally
   * hides a filter behind a mapPartitions or widens a scan.
   */
-class PlanQualitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-quality-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanQualitySpec extends AnyFunSuite with SparkSuite {
 
   private lazy val pagesPath: String = {
     val dir = Files.createTempDirectory("plan-pages").toString
@@ -82,7 +74,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      import spark.implicits._
+      import testImplicits._
       val facts = (0L until 2000L).map(i => (i % 97, i, i * 1.5)).toDF("k", "a", "b")
       val dims = (0L until 97L).map(i => (i, s"dim_$i")).toDF("k", "name")
       facts.write.mode("overwrite").bucketBy(8, "k").sortBy("k").saveAsTable("pq_facts")
@@ -112,7 +104,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      import spark.implicits._
+      import testImplicits._
       val skewed = spark.range(0, 200000).map { i =>
         val k = if (i % 2 == 0) 0L else i % 97 // half the rows on key 0
         (k, "payload-" + i)

@@ -1,21 +1,13 @@
 package graft.extract
 
+import graft.SparkSuite
 import graft.table.SyntheticPages
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dataset-level extraction: distributed, shuffle-free, deterministic
   * under any partitioning.
   */
-class ExtractSparkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("extract-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtractSparkSpec extends AnyFunSuite with SparkSuite {
 
   test("extractPages: end-to-end over synthetic corpus, errors as data") {
     val pages = SyntheticPages.generate(spark, 300, seed = 42, partitions = 8)

@@ -1,6 +1,6 @@
 package graft.extract
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,18 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * comment/script traps, nested markup in anchors, entity decode,
   * host resolution branches, hrefless anchors.
   */
-class LinksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("links-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LinksSpec extends AnyFunSuite with SparkSuite {
 
   private def links(html: String, url: String = "https://s.example/p") = {
-    import spark.implicits._
+    import testImplicits._
     Links.extractLinks(
         Seq((1L, url, html)).toDF("doc_id", "url", "html"))
       .orderBy(col("link_idx")).collect()
@@ -69,7 +61,7 @@ class LinksSpec extends AnyFunSuite {
   }
 
   test("null/empty html and pages without anchors emit nothing") {
-    import spark.implicits._
+    import testImplicits._
     val out = Links.extractLinks(Seq(
       (1L, "https://s.example/p", null.asInstanceOf[String]),
       (2L, "https://s.example/p", ""),
@@ -79,7 +71,7 @@ class LinksSpec extends AnyFunSuite {
   }
 
   test("partitioning-independent over the synthetic corpus") {
-    import spark.implicits._
+    import testImplicits._
     def run(parts: Int) = {
       val pages = graft.table.SyntheticPages
         .generate(spark, 150, seed = 42, partitions = parts)

@@ -1,12 +1,13 @@
 package graft.extract
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PDF text extraction: generator→parser round-trips (both raw and
   * FlateDecode streams), literal-string escaping, multi-page assembly,
   * and totality on garbage.
   */
-class PdfSpec extends AnyFunSuite {
+class PdfSpec extends AnyFunSuite with SparkSuite {
 
   test("round-trip: uncompressed and Flate-compressed content streams") {
     val pages = Seq(Seq("hello world", "second line"), Seq("page two text"))
@@ -64,12 +65,7 @@ class PdfSpec extends AnyFunSuite {
   }
 
   test("extractPdfs: distributed kernel over binary column") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    import spark.implicits._
+    import testImplicits._
     val pdfs = spark.range(0, 60).map(id => (id, PdfExtract.goldenPdf(id)._1))
       .toDF("id", "payload")
     val out = PdfExtract.extractPdfs(pdfs).collect()

@@ -1,18 +1,11 @@
 package graft.extract
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
-class SitemapSpec extends AnyFunSuite {
+class SitemapSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sitemap-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   private def parse(xml: String) =
     Sitemap.parseSitemaps(Seq((1L, xml)).toDF("site_id", "xml"))

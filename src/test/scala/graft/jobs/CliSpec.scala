@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -7,13 +8,10 @@ import java.nio.file.Files
   * (core/cli/app.py:131-215, 218-271) over the library seams, plus the
   * staged (cache-free) extract path.
   *
-  * Cli.main manages its own SparkSession via getOrCreate/stop; suites
-  * run sequentially in the forked test JVM, so later suites re-create a
-  * fresh session.
+  * Cli.main builds and stops its own session; `spark` starts a fresh
+  * one after it.
   */
-class CliSpec extends AnyFunSuite {
-
-  private def withCpus[A](f: => A): A = f // env SPARK_GRAFT_CPUS inherited
+class CliSpec extends AnyFunSuite with SparkSuite {
 
   test("embed verb: text file → chunked + embedded parquet") {
     val work = Files.createTempDirectory("cli-embed")
@@ -21,10 +19,8 @@ class CliSpec extends AnyFunSuite {
     val body = (1 to 60).map(i => s"Sentence number $i about spark tables and rows.").mkString(" ")
     Files.writeString(txt, body)
     val out = work.resolve("embeddings_out").toString
-    withCpus(Cli.main(Array("embed", txt.toString, out, "--chunk-size", "200")))
+    Cli.main(Array("embed", txt.toString, out, "--chunk-size", "200"))
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val df = spark.read.parquet(out)
     assert(df.columns.toSet == Set("chunk_index", "chunk_text", "embedding"))
     val rows = df.count()
@@ -35,25 +31,21 @@ class CliSpec extends AnyFunSuite {
 
   test("embed verb: pre-chunked parquet without chunk_index gets a distributed id (no global sort)") {
     val work = Files.createTempDirectory("cli-embed-prechunked")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
-    import spark.implicits._
+    import testImplicits._
     val in = work.resolve("chunks_in").toString
     (1 to 200).map(i => s"pre-chunked text body number $i")
       .toDF("chunk_text").repartition(4)
       .write.parquet(in)
     val out = work.resolve("emb_out").toString
     Cli.main(Array("embed", in, out))
-    val spark2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
-    val df = spark2.read.parquet(out)
+    val df = spark.read.parquet(out)
     assert(df.count() == 200)
     // ids must be unique across partitions (monotonically_increasing_id,
     // kept as long — an int cast would collide past 4 partitions)
     assert(df.select("chunk_index").distinct().count() == 200)
     // and the synthesized-id plan must not single-partition sort the
     // input: no Window/global Sort, no SinglePartition exchange
-    val probe = spark2.read.parquet(in)
+    val probe = spark.read.parquet(in)
       .withColumn("chunk_index",
         org.apache.spark.sql.functions.monotonically_increasing_id())
     val plan = probe.queryExecution.executedPlan.toString
@@ -64,8 +56,6 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-extract")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:200", out, "--units", "2"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val t = new graft.table.IcebergLite(out)
     assert(t.committedUnits(spark) == Seq(0, 1))
     assert(t.read(spark).count() == 200)
@@ -78,8 +68,6 @@ class CliSpec extends AnyFunSuite {
   test("extract verb: a one-file parquet source is staged as several files per unit") {
     val work = Files.createTempDirectory("cli-extract-one-file")
     val src = work.resolve("pages.parquet").toString
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     graft.table.SyntheticPages.generate(spark, 200).toDF().coalesce(1).write.parquet(src)
     val out = work.resolve("table").toString
     Cli.main(Array("extract", src, out, "--units", "2"))
@@ -103,8 +91,6 @@ class CliSpec extends AnyFunSuite {
     }
     val out = work.resolve("table").toString
     Cli.main(Array("extract", s"warc:$warcDir", out, "--units", "2"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val t = new graft.table.IcebergLite(out)
     assert(t.read(spark).count() == 50)
     assert(t.read(spark).where(org.apache.spark.sql.functions.col("succeeded"))
@@ -117,8 +103,6 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-extract-empty")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:3", out, "--units", "8"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val t = new graft.table.IcebergLite(out)
     assert(t.committedUnits(spark) == (0 until 8))
     assert(t.read(spark).count() == 3)
@@ -129,8 +113,6 @@ class CliSpec extends AnyFunSuite {
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:100", out,
       "--extractors", "http", "--min-length", "10"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.functions._
     val strategies = new graft.table.IcebergLite(out).read(spark)
       .where(col("succeeded"))
@@ -147,8 +129,6 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-async")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "synth:60", tbl, "--async", "--min-length", "10"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.functions._
     val strategies = new graft.table.IcebergLite(tbl).read(spark)
       .where(col("succeeded")).select("strategy_used").distinct()
@@ -202,8 +182,6 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-url")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "url:example.com/article", tbl, "--units", "1"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val rows = new graft.table.IcebergLite(tbl).read(spark)
       .select("url", "succeeded", "failure_reason").collect()
     assert(rows.length == 1)
@@ -222,8 +200,6 @@ class CliSpec extends AnyFunSuite {
     Cli.main(Array("embed", txt.toString, emb, "--chunk-size", "120"))
     Cli.main(Array("index", emb, idx))
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val table = new graft.table.IcebergLite(idx)
     assert(table.committedUnits(spark) == Seq(0))
     val index = table.read(spark)

@@ -1,7 +1,8 @@
 package graft.jobs
 
+import graft.SparkSuite
 import graft.table.{IcebergLite, SyntheticPages}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -11,15 +12,7 @@ import java.nio.file.Files
   * map-side url-hash plans, overlapped units that fail cleanly, and
   * host-grouped size-bucketed processing.
   */
-class ExtractJobSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("extract-job-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   private val nPages = 240L
   private val cfg = ExtractJobConfig(nUnits = 6, partitionsPerUnit = 4)
@@ -27,7 +20,7 @@ class ExtractJobSpec extends AnyFunSuite {
   private def unitPages(u: Int): DataFrame = unitPagesIn(2)(u)
 
   private def unitPagesIn(partitions: Int)(u: Int): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     val perUnit = nPages / cfg.nUnits
     spark.range(u * perUnit, (u + 1) * perUnit, 1, partitions)
       .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id))).toDF()
@@ -44,7 +37,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   private def parquetPages(ids: Seq[Long], files: Int): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft-pages").toString
     spark.createDataset(ids).repartition(files)
       .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id)))
@@ -85,7 +78,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-unit-fail").toString
     val t = new IcebergLite(dir)
     def failing(u: Int): DataFrame = {
-      import spark.implicits._
+      import testImplicits._
       // unit 2's ids; unit 3's write is in flight when unit 2 fails
       if (u != 2) unitPages(u)
       else spark.range(80, 120, 1, 2).mapPartitions(_.map { id =>
@@ -154,7 +147,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("oversized pages flow through the big bucket and extract correctly") {
-    import spark.implicits._
+    import testImplicits._
     // find an oversized-family id in the first 500
     val bigId = (0L until 500L).find(id =>
       SyntheticPages.familyOf(42L, id) == "oversized").get
@@ -171,7 +164,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("re-publish is atomic: versioned manifest, unit never uncommitted") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft-republish").toString
     val t = new IcebergLite(dir)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -192,7 +185,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("snapshots: time travel reads past table states; expiry bounds storage") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft-snap").toString
     val t = new IcebergLite(dir)
     t.commitUnit(Seq((1L, "a")).toDF("id", "v"), 0)                  // snap 1
@@ -222,7 +215,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("legacy unversioned manifests read as committed (version 0) and retire on republish") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft-legacy").toString
     val t = new IcebergLite(dir)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -246,7 +239,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("legacy version-0 data migrates to v-0: expiry keeps live versions, staged rows stay invisible") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft-legacy-v0").toString
     val t = new IcebergLite(dir)
     def manifest(u: Int): Unit =
@@ -296,7 +289,7 @@ class ExtractJobSpec extends AnyFunSuite {
   }
 
   test("host-grouped mode with salting spreads the hot host") {
-    import spark.implicits._
+    import testImplicits._
     // skew family: all rows on host-0.example
     val skewIds = (0L until 2000L).filter(id =>
       SyntheticPages.familyOf(42L, id) == "skew").take(60)

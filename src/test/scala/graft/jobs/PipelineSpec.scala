@@ -1,7 +1,7 @@
 package graft.jobs
 
+import graft.SparkSuite
 import graft.table.{IcebergLite, SyntheticPages}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -9,14 +9,7 @@ import java.nio.file.Files
 /** PipelineRunner composition parity (core/pipeline.py:26-97) and SQL
   * registration of native expressions.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   test("extract -> processor fold -> store; processors normalize content") {
     val dir = Files.createTempDirectory("pipe").toString

@@ -1,19 +1,12 @@
 package graft.jobs
 
+import graft.SparkSuite
 import graft.table.{IcebergLite, SyntheticPages}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class RagJobsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rag-jobs-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RagJobsSpec extends AnyFunSuite with SparkSuite {
 
   test("buildIndex: pages → extract → chunk → embed, one lazy DAG, stable ids") {
     val pages = SyntheticPages.generate(spark, 200, partitions = 4).toDF()

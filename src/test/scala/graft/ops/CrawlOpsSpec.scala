@@ -1,19 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CrawlOpsSpec extends AnyFunSuite {
+class CrawlOpsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("crawlops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   test("snapshotDiff: all four statuses, digest null on the absent side") {
     val prev = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")

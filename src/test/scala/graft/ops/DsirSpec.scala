@@ -1,19 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DsirSpec extends AnyFunSuite {
+class DsirSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsir-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   test("tokenize: Python-\\s split, per-codepoint lowercase, null/empty safe") {
     assert(Dsir.tokenize("Hello  World\tFOO\nbar\r\fbaz").toSeq ==

@@ -1,19 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   private lazy val docs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1075,7 +1068,7 @@ class OpsSpec extends AnyFunSuite {
       .orderBy(col("bigram")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     val want = spark.read
-      .parquet("/root/repo/src/test/resources/golden/bigram_lm_sf001.parquet")
+      .parquet(s"${graft.SparkEntry.goldenDir}/bigram_lm_sf001.parquet")
       .orderBy(col("bigram")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got == want)
@@ -1152,8 +1145,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("applyTokens: sequence matches applyCount's count on corpus pieces") {
-    val merges = graft.text.Bpe.fromFile(
-      "/root/repo/src/test/resources/golden/bpe_merges.txt")
+    val merges = graft.text.Bpe.fromFile(s"${graft.SparkEntry.goldenDir}/bpe_merges.txt")
     val ranks = graft.text.Bpe.ranksOf(merges)
     val pieces = Seq("the", " value", " aggregation", "window",
       " 12345", "  ", "a", "", " spark-sql", "queryquery")

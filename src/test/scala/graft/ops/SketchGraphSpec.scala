@@ -1,19 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SketchGraphSpec extends AnyFunSuite {
+class SketchGraphSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sketch-graph-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   private lazy val docs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -225,7 +218,7 @@ class SketchGraphSpec extends AnyFunSuite {
   }
 
   test("prefixJaccardPairs: equals the brute-force threshold pair set, any partitioning") {
-    import spark.implicits._
+    import testImplicits._
     val base = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon eta"),   // J(1,2) = 3/5

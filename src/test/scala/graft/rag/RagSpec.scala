@@ -1,6 +1,6 @@
 package graft.rag
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * delete, stats) plus the post-top-k filter quirk
   * (file_store.py:104-121) and the embed determinism contract.
   */
-class RagSpec extends AnyFunSuite {
+class RagSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rag-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   private def orthoIndex = Seq(
     IndexDoc("d1", "doc one", Array(1f, 0f, 0f), "u1", 0, null),

@@ -1,20 +1,12 @@
 package graft.streaming
 
+import graft.SparkSuite
 import graft.table.SyntheticPages
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class StreamingOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("streaming-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("windowed event counts equal the batch equivalent") {
     val path = "/root/testdata/sf0.001/events.parquet"

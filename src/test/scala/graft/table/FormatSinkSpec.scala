@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports the reference storage-format tests (tests/unit/test_storage.py:
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence: JSON bodies are Spark to_json compact form, not Python
   * json.dumps(indent=2); field names and order are pinned here.
   */
-class FormatSinkSpec extends AnyFunSuite {
+class FormatSinkSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("format-sink-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  import spark.implicits._
+  import testImplicits._
 
   private def row(content: String = "Body text.",
       title: String = "Test Article Title!",

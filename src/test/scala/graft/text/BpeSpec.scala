@@ -1,8 +1,9 @@
 package graft.text
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with SparkSuite {
 
   test("pretokenize matches the piece pattern (leading-space words, digits, punct, ws runs)") {
     val pieces = Bpe.pretokenize("Hello world, 42 times!\n").toSeq
@@ -66,13 +67,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("trainDistributed == single-machine train, independent of partitioning") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("bpe-train-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    import spark.implicits._
+    import testImplicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val texts = docs.orderBy("doc_id").as[(Long, String)].collect().map(_._2)
@@ -86,6 +81,23 @@ class BpeSpec extends AnyFunSuite {
     // equality cross-check (VERDICT r05 next #2)
     val rounds = Bpe.trainDistributedRounds(docs.repartition(7), numMerges = 24)
     assert(rounds == local)
+  }
+
+  test("train breaks an astral-vs-U+FB01 tie in code-point order, like trainDistributed") {
+    import testImplicits._
+    // (U+FB01, é) and (U+1D400, é) both occur twice; code-point order
+    // picks the U+FB01 pair, UTF-16 code-unit order the astral one
+    val texts = Seq("\uFB01\u00E9\n\uFB01\u00E9", "\uD835\uDC00\u00E9\n\uD835\uDC00\u00E9")
+    val local = Bpe.train(texts, numMerges = 1)
+    assert(local == Seq(("\uFB01", "\u00E9")))
+    assert(Bpe.trainDistributed(texts.toDF("text"), numMerges = 1) == local)
+  }
+
+  test("minPairFreq below 1 is rejected, never a null merge") {
+    intercept[IllegalArgumentException](Bpe.train(Seq("abab"), numMerges = 4, minPairFreq = 0))
+    intercept[IllegalArgumentException](Bpe.trainWeighted(Array(("ab", 0L)), 1, minPairFreq = 0))
+    // zero-weight pieces: no pair reaches 1, so nothing is merged
+    assert(Bpe.trainWeighted(Array(("ab", 0L)), 1, minPairFreq = 1).isEmpty)
   }
 
   test("cpLess is UTF-8 binary order: astral code points sort above BMP high chars") {
