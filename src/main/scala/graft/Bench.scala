@@ -139,22 +139,23 @@ object Bench {
     // warm-up), which inflated the 7-8 alphabetically-first queries
     // 10-14x in the round-4 driver run; interleaving guarantees every
     // query gets at least two visits against a fully warmed session.
+    // failed query -> exception class, reported on stderr below
+    val failed = scala.collection.mutable.Map.empty[String, String]
     val results = if (mode == "scaling") Seq.empty else {
       val sQ = session(cpus)
       val ordered = SparkEntry.queries.toSeq.sortBy { case (name, _) =>
         (name.startsWith("stream_"), name)
       }
       val bestSecs = scala.collection.mutable.Map.empty[String, Double]
-      val failed = scala.collection.mutable.Set.empty[String]
-      for (_ <- 1 to 3; (name, fn) <- ordered if !failed(name)) {
+      for (_ <- 1 to 3; (name, fn) <- ordered if !failed.contains(name)) {
         try {
           val t = time(fn(sQ, sfDir).count())._2
           if (!bestSecs.get(name).exists(_ <= t)) bestSecs(name) = t
-        } catch { case _: Throwable => failed += name }
+        } catch { case e: Throwable => failed(name) = e.getClass.getName }
       }
       sQ.stop()
       ordered.map { case (name, _) =>
-        name -> (if (failed(name)) -1.0 else bestSecs(name))
+        name -> (if (failed.contains(name)) -1.0 else bestSecs(name))
       }.sortBy(_._1)
     }
 
@@ -186,6 +187,9 @@ object Bench {
     // shutdown hook can run and is byte-identical to the printed line.
     try Files.write(Paths.get("bench_result.json"), (json + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
+    if (failed.nonEmpty)
+      System.err.println("[bench] failed queries: " + failed.toSeq.sorted
+        .map { case (name, cls) => s"$name ($cls)" }.mkString(", "))
     // cheap extra channel: the same line on stderr, unprefixed by any
     // logger formatting
     System.err.println(json)

@@ -3,7 +3,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query contract of Verify and Bench — see SURVEY.md §7.
   *
   * Every query except dedup_simhash carries a DuckDB oracle (same
   * logic, same rounding, same total ORDER BY). Kernel operators that
@@ -58,9 +58,13 @@ object SparkEntry {
     * outputs of the spec'd kernels at sf0.01 (regenerated only on a
     * deliberate semantics change via GoldenGen, like the byte goldens);
     * the media parquet carries generation-time truth columns the decode
-    * kernel must re-derive from the payload BYTES.
+    * kernel must re-derive from the payload BYTES. Resolved against the
+    * working directory, which is the project base for forked `run` and
+    * `Test`; the absolute form keeps the oracle SQL's paths valid from
+    * any directory.
     */
-  val goldenDir = "/root/repo/src/test/resources/golden"
+  val goldenDir: String =
+    java.nio.file.Paths.get("src/test/resources/golden").toAbsolutePath.toString
 
   /** The sf-tier dir oracleSql is being generated against. Verify
     * publishes its sfDir argument here before dumping oracle_sql.json,

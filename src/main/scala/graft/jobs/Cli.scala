@@ -237,9 +237,7 @@ object Cli {
             col("url"), col("chunk_index").cast("int"), col("title"))
         val valid = docs.where(size(col("embedding")) === dim)
         val out = new IcebergLite(args(2))
-        out.writeData(valid, 0)
-        val n = out.readUnit(spark, 0).count()
-        out.publish(spark, 0, Map("rows" -> n.toString, "dim" -> dim.toString))
+        val n = out.commitUnit(valid, 0, Map("dim" -> dim.toString))
         println(s"index: total_documents=$n dimension=$dim index_path=${args(2)}")
         spark.stop()
 

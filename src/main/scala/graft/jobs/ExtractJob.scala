@@ -48,8 +48,8 @@ final case class ExtractJobConfig(
   *  - **Overlapped units.** The next unit's write starts before the
   *    current unit is published; publishes stay serial, in unit order.
   *  - **Lineage.** Every output row carries its task partition id; the
-  *    manifest row carries per-unit row/byte counts and the
-  *    strategy/failure histogram.
+  *    manifest row carries per-unit row/byte counts, which IcebergLite
+  *    reads from the written files, and the strategy/failure histogram.
   */
 object ExtractJob {
 
@@ -189,10 +189,8 @@ object ExtractJob {
 
     def publish(w: UnitWrite): Unit = {
       w.await()
-      val h = w.hist.value
-      val metrics = Map("rows" -> h.values.sum.toString) ++
-        h.map { case (k, v) => s"strategy_$k" -> v.toString }
-      out.publish(spark, w.unit, metrics)
+      out.publish(spark, w.unit,
+        w.hist.value.map { case (k, v) => s"strategy_$k" -> v.toString })
       processed += w.unit
     }
 

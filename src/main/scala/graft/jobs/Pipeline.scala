@@ -42,11 +42,7 @@ object Pipeline {
       .withColumn("content", col("extracted_text"))
     val processed = processors.flatMap(registry.get) // unknown names skipped
       .foldLeft(extracted)((df, p) => p(df))
-    store.foreach { t =>
-      t.writeData(processed, 0)
-      t.publish(processed.sparkSession, 0,
-        Map("rows" -> t.readUnit(processed.sparkSession, 0).count().toString))
-    }
+    store.foreach(_.commitUnit(processed, 0))
     processed
   }
 }

@@ -52,15 +52,11 @@ object RagJobs {
   }
 
   /** Index build + committed write (IcebergLite unit 0; callers with
-    * many input units loop like ExtractJob.runUnits).
+    * many input units loop like ExtractJob.runUnits). Returns the
+    * committed row count.
     */
-  def buildAndWrite(pages: DataFrame, out: IcebergLite): Long = {
-    val idx = buildIndex(pages).toDF()
-    out.writeData(idx, 0)
-    val n = out.readUnit(pages.sparkSession, 0).count()
-    out.publish(pages.sparkSession, 0, Map("rows" -> n.toString))
-    n
-  }
+  def buildAndWrite(pages: DataFrame, out: IcebergLite): Long =
+    out.commitUnit(buildIndex(pages).toDF(), 0)
 
   /** Query an index table: embed the query text driver-side (1 string),
     * broadcast-scalar top-k, format (reference §3.3; one collect of

@@ -617,7 +617,6 @@ object Dedup {
     // pair-volume-bounded) instead of executing the winnow kernel +
     // fp self-join once per consumer (measured 3x at the driver tier).
     val withDiag = substringMatchTable(docs, maxDocFreq).localCheckpoint(true)
-    val matches = withDiag
     val goodDiag = withDiag.groupBy("id_a", "id_b", "diag")
       .agg(count(lit(1)).as("dcnt"))
       .where(col("dcnt") >= minRun)
@@ -635,7 +634,7 @@ object Dedup {
     // shuffle write before AQE can broadcast the tiny pair set, so the
     // "skipped" aggregation was replaced by an equal-sized exchange
     // plus a join. The direct aggregation stands.
-    val sharedMass = matches.groupBy("id_a", "id_b")
+    val sharedMass = withDiag.groupBy("id_a", "id_b")
       .agg(count_distinct(col("fp")).as("shared_fps"))
     // BOTH gates: diffuse trigram-level overlap (many shared fps, no
     // run) is near-dup territory, not substring dedup — a pair counts

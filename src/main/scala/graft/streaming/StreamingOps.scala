@@ -4,6 +4,7 @@ import graft.extract.{CascadeConfig, Extract}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import java.nio.file.{Files, Paths}
 
 /** One event of the stateful sessionizer. `ts` is the watermark column;
   * `ts_us` carries full microsecond precision for the session logic
@@ -55,36 +56,64 @@ object StreamingOps {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** FileStreamSource requires a directory: run `body` on `path` itself,
+    * or on a fresh dir holding a copy of a lone file, deleted once
+    * `body` returns.
+    */
+  private def withSourceDir[T](path: String)(body: String => T): T = {
+    val p = Paths.get(path)
+    if (Files.isDirectory(p)) body(path)
+    else {
+      val d = Files.createTempDirectory("graft-stream-src")
+      try {
+        Files.copy(p, d.resolve(p.getFileName))
+        body(d.toString)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+    }
+  }
+
+  /** Drain a memory-sink stream over `sourcePath` and return its result
+    * table. `build` makes the streaming frame from the source dir; the
+    * query starts under `statePartitions` (see [[withStatePartitions]])
+    * with an AvailableNow trigger and is stopped before a staged source
+    * copy is deleted. The memory sink holds the result, so the returned
+    * frame no longer reads the source.
+    */
+  private def drainToMemory(spark: SparkSession, sourcePath: String,
+      queryNameBase: String, outputMode: String, statePartitions: Int)(
+      build: String => DataFrame): DataFrame = {
+    val queryName = unique(queryNameBase)
+    withSourceDir(sourcePath) { srcDir =>
+      val q = withStatePartitions(spark, statePartitions) {
+        build(srcDir).writeStream
+          .outputMode(outputMode)
+          .format("memory")
+          .queryName(queryName)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    spark.table(queryName)
+  }
+
   /** Tumbling-window event aggregation over a parquet event stream.
     * Complete output mode + memory sink: after processAllAvailable the
     * result equals the equivalent batch GROUP BY (the oracle in
     * SparkEntry relies on this).
     */
   def windowedEventCounts(spark: SparkSession, eventsPath: String,
-      queryNameBase: String = "graft_stream_events"): DataFrame = {
-    val queryName = unique(queryNameBase)
-    val srcDir = stageDir(eventsPath)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema).parquet(srcDir)
-    val agg = stream
-      // parquet carries TIMESTAMP_NTZ; watermarks need TIMESTAMP (UTC session)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 days")
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("w.start").as("day"), col("event_type"), col("n"), col("sum_value"))
-    val q = withStatePartitions(spark, 8) {
-      agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      queryNameBase: String = "graft_stream_events"): DataFrame =
+    drainToMemory(spark, eventsPath, queryNameBase, "complete", 8) { srcDir =>
+      val schema = spark.read.parquet(srcDir).schema
+      spark.readStream.schema(schema).parquet(srcDir)
+        // parquet carries TIMESTAMP_NTZ; watermarks need TIMESTAMP (UTC session)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "2 days")
+        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .select(col("w.start").as("day"), col("event_type"), col("n"), col("sum_value"))
     }
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 
   /** Gap-based sessionization as CUSTOM STREAMING STATE
     * (flatMapGroupsWithState + event-time timeout): the stateful
@@ -103,18 +132,8 @@ object StreamingOps {
   def sessionizeStream(spark: SparkSession, eventsPath: String,
       queryNameBase: String = "graft_stream_sessions",
       gapMinutes: Int = 30): DataFrame = {
-    val queryName = unique(queryNameBase)
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000
-    val srcDir = stageDir(eventsPath)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema).parquet(srcDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"),
-        col("value").cast("double").as("value"))
-      .as[SessionEvent]
 
     def update(userId: Long, events: Iterator[SessionEvent],
         state: GroupState[OpenSession]): Iterator[SessionOut] = {
@@ -153,19 +172,19 @@ object StreamingOps {
       }
     }
 
-    val sessions = stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-    val q = withStatePartitions(spark, 8) {
-      sessions.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    drainToMemory(spark, eventsPath, queryNameBase, "append", 8) { srcDir =>
+      val schema = spark.read.parquet(srcDir).schema
+      spark.readStream.schema(schema).parquet(srcDir)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "0 seconds")
+        .select(col("user_id").cast("long").as("user_id"), col("ts"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("value").cast("double").as("value"))
+        .as[SessionEvent]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+        .toDF()
     }
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
   }
 
   /** Stream-stream interval join — the canonical funnel correlation:
@@ -184,39 +203,27 @@ object StreamingOps {
   def streamStreamJoin(spark: SparkSession, eventsPath: String,
       leftType: String = "click", rightType: String = "purchase",
       windowMinutes: Int = 30,
-      queryNameBase: String = "graft_stream_join"): DataFrame = {
-    val queryName = unique(queryNameBase)
-    val srcDir = stageDir(eventsPath)
-    val schema = spark.read.parquet(srcDir).schema
-    def side(t: String, prefix: String) =
-      spark.readStream.schema(schema).parquet(srcDir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .where(col("event_type") === t)
-        .withWatermark("ts", "2 days")
-        .select(col("event_id").as(s"${prefix}_id"),
-          col("user_id").as(s"${prefix}_user"), col("ts").as(s"${prefix}_ts"))
-    val joined = side(leftType, "l").join(side(rightType, "r"),
-      col("l_user") === col("r_user") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"interval $windowMinutes minutes"))
-      .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
-        col("l_user").as("user_id"))
+      queryNameBase: String = "graft_stream_join"): DataFrame =
     // the symmetric-hash join instantiates FOUR state stores per shuffle
     // partition per micro-batch — the heaviest case for the narrow
     // state partitioning (see withStatePartitions), so it runs at the
     // narrowest setting of the family (4, like streamDedup)
-    val q = withStatePartitions(spark, 4) {
-      joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    drainToMemory(spark, eventsPath, queryNameBase, "append", 4) { srcDir =>
+      val schema = spark.read.parquet(srcDir).schema
+      def side(t: String, prefix: String) =
+        spark.readStream.schema(schema).parquet(srcDir)
+          .withColumn("ts", col("ts").cast("timestamp"))
+          .where(col("event_type") === t)
+          .withWatermark("ts", "2 days")
+          .select(col("event_id").as(s"${prefix}_id"),
+            col("user_id").as(s"${prefix}_user"), col("ts").as(s"${prefix}_ts"))
+      side(leftType, "l").join(side(rightType, "r"),
+        col("l_user") === col("r_user") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr(s"interval $windowMinutes minutes"))
+        .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
+          col("l_user").as("user_id"))
     }
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 
   /** Streaming ingest dedup — at-least-once delivery makes exact
     * duplicates a fact of life at the crawl edge, so the first stateful
@@ -232,52 +239,29 @@ object StreamingOps {
     * set no matter which copy won the race — the batch DISTINCT oracle.
     */
   def streamDedup(spark: SparkSession, docsPath: String,
-      queryNameBase: String = "graft_stream_dedup"): DataFrame = {
-    val queryName = unique(queryNameBase)
-    val srcDir = stageDir(docsPath)
-    val schema = spark.read.parquet(srcDir).schema
-    val deduped = spark.readStream.schema(schema).parquet(srcDir)
-      .withColumn("copy", explode(
-        when(pmod(col("doc_id"), lit(3)) === 0, array(lit(0), lit(1)))
-          .otherwise(array(lit(0)))))
-      .withColumn("ts",
-        to_timestamp(lit("2024-01-01 00:00:00"))
-          + make_dt_interval(lit(0), lit(0), lit(0),
-            col("doc_id").cast("double") + col("copy") * 0.1))
-      .withColumn("sha", sha2(col("text"), 256))
-      // the delay is the DEDUP HORIZON: a key's state lives until the
-      // watermark passes its event time + delay, so batch-DISTINCT
-      // equality needs the delay to exceed the corpus's widest
-      // duplicate event-time gap (synthesized ts spreads ~14h at sf0.1
-      // with twins up to ~1h apart) REGARDLESS of micro-batch split —
-      // with a short delay a multi-file source would evict a twin's
-      // state between batches and re-emit it
-      .withWatermark("ts", "2 days")
-      .dropDuplicatesWithinWatermark("sha")
-      .select(col("sha"))
-    val q = withStatePartitions(spark, 4) {
-      deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      queryNameBase: String = "graft_stream_dedup"): DataFrame =
+    drainToMemory(spark, docsPath, queryNameBase, "append", 4) { srcDir =>
+      val schema = spark.read.parquet(srcDir).schema
+      spark.readStream.schema(schema).parquet(srcDir)
+        .withColumn("copy", explode(
+          when(pmod(col("doc_id"), lit(3)) === 0, array(lit(0), lit(1)))
+            .otherwise(array(lit(0)))))
+        .withColumn("ts",
+          to_timestamp(lit("2024-01-01 00:00:00"))
+            + make_dt_interval(lit(0), lit(0), lit(0),
+              col("doc_id").cast("double") + col("copy") * 0.1))
+        .withColumn("sha", sha2(col("text"), 256))
+        // the delay is the DEDUP HORIZON: a key's state lives until the
+        // watermark passes its event time + delay, so batch-DISTINCT
+        // equality needs the delay to exceed the corpus's widest
+        // duplicate event-time gap (synthesized ts spreads ~14h at sf0.1
+        // with twins up to ~1h apart) REGARDLESS of micro-batch split —
+        // with a short delay a multi-file source would evict a twin's
+        // state between batches and re-emit it
+        .withWatermark("ts", "2 days")
+        .dropDuplicatesWithinWatermark("sha")
+        .select(col("sha"))
     }
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
-
-  /** FileStreamSource requires a directory; stage a lone file into one. */
-  private def stageDir(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(p)) path
-    else {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-src")
-      java.nio.file.Files.copy(p, d.resolve(p.getFileName))
-      d.toString
-    }
-  }
 
   /** Streaming extraction: a growing directory of page parquet files →
     * cascade → checkpointed parquet sink (exactly-once file sink; the
@@ -316,7 +300,10 @@ object StreamingOps {
     * batch-equality property the driver oracle checks.
     *
     * History = doc_id % 5 != 0 (pre-indexed); the new 20% is staged as
-    * `nBatches` parquet files consumed one file per trigger.
+    * `nBatches` parquet files consumed one file per trigger. A staged
+    * copy of a lone input file is deleted once the query stops; the
+    * `graft-stream-inc` work dir stays, because the returned frame
+    * reads its `pairs/` subdir.
     */
   def streamIncrementalDedup(spark: SparkSession, docsPath: String,
       nBatches: Int = 4): DataFrame = {
@@ -324,64 +311,65 @@ object StreamingOps {
     // loop's shuffles to the micro-batch (8 partitions) and measured
     // neutral-to-worse — AQE already coalesces the batch-sized mining
     // joins, so the override only capped the seed build's parallelism
-    import spark.implicits._
-    val docs = spark.read.parquet(stageDir(docsPath))
-      .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
-    val isNew = pmod(col("doc_id"), lit(5)) === 0
-
-    val work = java.nio.file.Files.createTempDirectory("graft-stream-inc")
+    val work = Files.createTempDirectory("graft-stream-inc")
     val (indexDir, textsDir, newDir, pairsDir, ckpt) =
       (s"$work/index", s"$work/texts", s"$work/new", s"$work/pairs", s"$work/ckpt")
-    // seed the persisted index tables with the history; every commit —
-    // seed and per-batch alike — is its OWN subdirectory written with
-    // mode=overwrite, keyed by batchId, so foreachBatch's documented
-    // at-least-once delivery is idempotent: a retried batch rewrites
-    // its subdirs byte-identically instead of double-appending pairs
-    // and double-committing bands (which would make the retry collide
-    // with its own first attempt). Readers glob the subdirs.
-    val oldDocs = docs.where(!isNew)
-    graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
-      shingleSize = 3).write.parquet(s"$indexDir/seed")
-    oldDocs.write.parquet(s"$textsDir/seed")
-    // stage the incoming batches as separate files (one per trigger)
-    docs.where(isNew)
-      .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
-      .write.parquet(newDir)
-    // pairs sink must exist even if every batch emits nothing
-    spark.emptyDataset[(Long, Long, Long)]
-      .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
+    withSourceDir(docsPath) { srcDir =>
+      import spark.implicits._
+      val docs = spark.read.parquet(srcDir)
+        .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
+      val isNew = pmod(col("doc_id"), lit(5)) === 0
 
-    val schema = docs.schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(newDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        // a RETRIED batch may have committed b<id> subdirs before its
-        // first attempt failed; excluding the batch's own ids from the
-        // history views makes the mining input identical on retry
-        // (and gives last-write-wins semantics for re-crawled ids)
-        val bIds = broadcast(b.select(col("doc_id")))
-        val history = spark.read.parquet(s"$indexDir/*")
-          .join(bIds, Seq("doc_id"), "left_anti")
-        val historyTexts = spark.read.parquet(s"$textsDir/*")
-          .join(bIds, Seq("doc_id"), "left_anti")
-        graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
-            threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
-          .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
-        // commit this batch into the index tables — the next batch
-        // mines against history + everything ingested before it
-        graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
-          shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-        b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
-        b.unpersist()
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      // seed the persisted index tables with the history; every commit —
+      // seed and per-batch alike — is its OWN subdirectory written with
+      // mode=overwrite, keyed by batchId, so foreachBatch's documented
+      // at-least-once delivery is idempotent: a retried batch rewrites
+      // its subdirs byte-identically instead of double-appending pairs
+      // and double-committing bands (which would make the retry collide
+      // with its own first attempt). Readers glob the subdirs.
+      val oldDocs = docs.where(!isNew)
+      graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
+        shingleSize = 3).write.parquet(s"$indexDir/seed")
+      oldDocs.write.parquet(s"$textsDir/seed")
+      // stage the incoming batches as separate files (one per trigger)
+      docs.where(isNew)
+        .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
+        .write.parquet(newDir)
+      // pairs sink must exist even if every batch emits nothing
+      spark.emptyDataset[(Long, Long, Long)]
+        .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
+
+      val schema = docs.schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(newDir)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.persist()
+          // a RETRIED batch may have committed b<id> subdirs before its
+          // first attempt failed; excluding the batch's own ids from the
+          // history views makes the mining input identical on retry
+          // (and gives last-write-wins semantics for re-crawled ids)
+          val bIds = broadcast(b.select(col("doc_id")))
+          val history = spark.read.parquet(s"$indexDir/*")
+            .join(bIds, Seq("doc_id"), "left_anti")
+          val historyTexts = spark.read.parquet(s"$textsDir/*")
+            .join(bIds, Seq("doc_id"), "left_anti")
+          graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
+              threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
+            .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
+          // commit this batch into the index tables — the next batch
+          // mines against history + everything ingested before it
+          graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
+            shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
+          b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
+          b.unpersist()
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.read.parquet(s"$pairsDir/*")
   }
 }

@@ -1,6 +1,10 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 
@@ -24,70 +28,28 @@ import java.nio.charset.StandardCharsets
   * 10^12 docs you size them so one unit is a few minutes of cluster
   * work (e.g. 10k units).
   *
+  * The table owns each unit's `rows`, `files` and `bytes`: [[publish]]
+  * reads them from the written files (row counts from the parquet
+  * footers), so they are exact under task retries and no caller runs a
+  * count job.
+  *
   * Uses the Hadoop FileSystem API throughout, so the same code runs on
   * HDFS/S3A on a real cluster.
   */
 final class IcebergLite(val root: String) extends Serializable {
+  import IcebergLite._
 
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Legacy (pre-snapshot) unit data dir; version 0 reads from here. */
-  def dataPath(unit: Int): String = s"$root/data/unit=$unit"
-
   /** Versioned unit data dir. The version segment is deliberately NOT
     * `key=value` syntax (`v-<k>`, not `v=<k>`) so Spark's partition
-    * discovery sees only the `unit=` level — readers get the same
-    * `unit` partition column as before versioning, never a `v` column.
-    * Data files are IMMUTABLE per version: a re-publish writes v(k+1)
-    * beside v(k), which is what makes snapshot reads (time travel)
-    * possible.
+    * discovery sees only the `unit=` level — readers get a `unit`
+    * partition column, never a `v` column. Data files are IMMUTABLE per
+    * version: a re-publish writes v(k+1) beside v(k), which is what
+    * makes snapshot reads (time travel) possible.
     */
-  def dataPath(unit: Int, version: Int): String =
-    if (version == 0) dataPath(unit) else s"$root/data/unit=$unit/v-$version"
-
-  /** Resolve a (unit, version) entry to the dir actually holding its
-    * files. Version 0 is the legacy layout — files originally sit
-    * directly in `data/unit=<u>`, the PARENT of every versioned
-    * `v-<k>` dir — so once [[migrateLegacy]] has moved them into
-    * `v-0`, that subdir is the truth.
-    */
-  private def resolvedDataPath(f: FileSystem, unit: Int, version: Int): String = {
-    val migrated = s"$root/data/unit=$unit/v-0"
-    if (version == 0 && f.exists(new Path(migrated))) migrated
-    else dataPath(unit, version)
-  }
-
-  /** Move loose legacy version-0 files into a `v-0` subdir so version
-    * 0 gets its own immutable dir like any other version. Without
-    * this, reading or expiring version 0 touches the parent of every
-    * versioned dir: readers recursively pick up staged/newer `v-<k>`
-    * files, and expiry would delete ALL live versions of the unit.
-    * Idempotent; no-op for non-legacy units. Runs before staging
-    * ([[writeData]]) and before expiry deletes; read paths pass
-    * `mixedOnly = true` so a PURE legacy unit (loose files, no v-<k>
-    * dirs) stays readable without write access — only the mixed state,
-    * which cannot be read correctly in place, forces the move. Every
-    * rename is verified: a partial migration must fail loudly, not
-    * leave v-0 holding a silent subset of the unit's rows.
-    */
-  private def migrateLegacy(f: FileSystem, unit: Int,
-      mixedOnly: Boolean = false): Unit = {
-    val parent = new Path(dataPath(unit))
-    if (!f.exists(parent)) return
-    val entries = f.listStatus(parent)
-    val loose = entries.filter(_.isFile)
-    if (loose.isEmpty) return
-    if (mixedOnly && !entries.exists(_.isDirectory)) return
-    val v0 = new Path(s"$root/data/unit=$unit/v-0")
-    f.mkdirs(v0)
-    loose.foreach { s =>
-      if (!f.rename(s.getPath, new Path(v0, s.getPath.getName)))
-        sys.error(s"legacy migration of unit $unit failed moving " +
-          s"${s.getPath} into $v0 — aborting so v-0 never holds a " +
-          "partial copy of the unit")
-    }
-  }
+  def dataPath(unit: Int, version: Int): String = s"$root/data/unit=$unit/v-$version"
 
   /** Manifests are versioned: `unit-<u>-v<k>.json`. A re-publish writes
     * v(k+1) via tmp + atomic rename BEFORE deleting vk, so a committed
@@ -99,44 +61,16 @@ final class IcebergLite(val root: String) extends Serializable {
   private def manifestDir = new Path(s"$root/manifest")
   private def manifestPath(unit: Int, version: Int) =
     new Path(s"$root/manifest/unit-$unit-v$version.json")
-  private def legacyManifestPath(unit: Int) =
-    new Path(s"$root/manifest/unit-$unit.json")
 
-  /** Filesystem path of a parsed (unit, version) entry — version 0 may
-    * be a legacy unversioned filename.
-    */
-  private def entryPath(f: FileSystem, unit: Int, version: Int): Path = {
-    val p = manifestPath(unit, version)
-    if (version == 0 && !f.exists(p)) legacyManifestPath(unit) else p
-  }
-
-  /** (unit, version) pairs parsed from manifest filenames. A legacy
-    * unversioned `unit-<u>.json` (written before manifests were
-    * versioned) reads as version 0, so pre-upgrade tables stay
-    * committed and resumable; the next publish writes v1 and retires
-    * the legacy file through the normal superseded-version sweep.
-    */
-  private def manifestEntries(f: FileSystem): Seq[(Int, Int)] = {
-    if (!f.exists(manifestDir)) return Seq.empty
-    f.listStatus(manifestDir).toSeq
-      .map(_.getPath.getName)
-      .collect {
-        case n if n.startsWith("unit-") && n.endsWith(".json") && n.contains("-v") =>
-          val core = n.stripPrefix("unit-").stripSuffix(".json")
-          val cut = core.lastIndexOf("-v")
-          (core.substring(0, cut).toInt, core.substring(cut + 2).toInt)
-        case n if n.startsWith("unit-") && n.endsWith(".json") &&
-            n.stripPrefix("unit-").stripSuffix(".json").forall(_.isDigit) =>
-          (n.stripPrefix("unit-").stripSuffix(".json").toInt, 0)
-      }
-  }
+  /** (unit, version) pairs parsed from one listing of the manifest dir. */
+  private def manifestEntries(f: FileSystem): Seq[(Int, Int)] =
+    if (!f.exists(manifestDir)) Seq.empty
+    else f.listStatus(manifestDir).toSeq.map(_.getPath.getName).collect {
+      case ManifestName(u, v) => (u.toInt, v.toInt)
+    }
 
   /** Latest manifest version per committed unit. */
-  private def latestVersions(f: FileSystem): Map[Int, Int] =
-    manifestEntries(f).groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).max }
-
-  def isCommitted(spark: SparkSession, unit: Int): Boolean =
-    latestVersions(fs(spark)).contains(unit)
+  private def latestVersions(f: FileSystem): Map[Int, Int] = latestOf(manifestEntries(f))
 
   def committedUnits(spark: SparkSession): Seq[Int] =
     latestVersions(fs(spark)).keys.toSeq.sorted
@@ -144,76 +78,70 @@ final class IcebergLite(val root: String) extends Serializable {
   /** Write one unit's rows and commit it: parquet overwrite into the
     * unit dir, then atomic manifest publish. Idempotent — re-running a
     * committed unit is a no-op for readers; re-running an uncommitted
-    * one overwrites its partial data.
+    * one overwrites its partial data. Returns the unit's row count.
     */
   def commitUnit(df: DataFrame, unit: Int,
-      metrics: Map[String, String] = Map.empty): Unit = {
+      metrics: Map[String, String] = Map.empty): Long = {
     writeData(df, unit)
     publish(df.sparkSession, unit, metrics)
   }
-
-  /** The version a writeData/publish pair will create next. */
-  private def nextVersion(f: FileSystem, unit: Int): Int =
-    latestVersions(f).get(unit).map(_ + 1).getOrElse(1)
 
   /** Stage a unit's data files at the NEXT version (not yet visible to
     * readers; re-staging before publish overwrites the same staged
     * version). Committed versions' files are never touched.
     */
   def writeData(df: DataFrame, unit: Int): Unit = {
-    val f = fs(df.sparkSession)
-    migrateLegacy(f, unit) // staged v-<k> must not nest under live legacy files
-    df.write.mode("overwrite").parquet(dataPath(unit, nextVersion(f, unit)))
-  }
-
-  /** Read back a unit's data: the staged next version if present,
-    * otherwise the committed latest.
-    */
-  def readUnit(spark: SparkSession, unit: Int): DataFrame = {
-    val f = fs(spark)
-    val staged = new Path(dataPath(unit, nextVersion(f, unit)))
-    val p =
-      if (f.exists(staged)) staged.toString
-      else resolvedDataPath(f, unit, latestVersions(f).getOrElse(unit,
-        sys.error(s"unit $unit has no staged or committed data")))
-    spark.read.parquet(p)
+    val next = nextVersion(latestVersions(fs(df.sparkSession)), unit)
+    df.write.mode("overwrite").parquet(dataPath(unit, next))
   }
 
   /** Atomically publish a staged unit with lineage + metrics, then
-    * record a table-level snapshot.
+    * record a table-level snapshot. Returns the unit's row count.
+    *
+    * `unit`, `version`, `files`, `bytes` and `rows` come from the table
+    * and the staged files and win over same-named caller `metrics`.
+    * One listing of the manifest dir yields the new version, the
+    * superseded entries to retire and the snapshot state.
     */
   def publish(spark: SparkSession, unit: Int,
-      metrics: Map[String, String] = Map.empty): Unit = {
+      metrics: Map[String, String] = Map.empty): Long = {
     val f = fs(spark)
-    val next = nextVersion(f, unit)
-    // lineage: input fingerprint + row/byte counts from the written files
+    val entries = manifestEntries(f)
+    val latest = latestOf(entries)
+    val next = nextVersion(latest, unit)
     val written = f.listStatus(new Path(dataPath(unit, next)))
       .filter(_.getPath.getName.endsWith(".parquet"))
-    val bytes = written.map(_.getLen).sum
-    val fields = Map(
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = written.map(footerRows(_, conf)).sum
+    val fields = metrics ++ Map(
       "unit" -> unit.toString,
       "version" -> next.toString,
       "files" -> written.length.toString,
-      "bytes" -> bytes.toString) ++ metrics
+      "bytes" -> written.map(_.getLen).sum.toString,
+      "rows" -> rows.toString)
     val json = fields.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": "${v.replace("\\", "\\\\").replace("\"", "\\\"")}"""" }
       .mkString("{", ", ", "}")
-    f.mkdirs(manifestDir)
-    val tmp = new Path(s"$root/manifest/.unit-$unit-v$next.json.tmp")
+    // on rename failure (S3A/HDFS edge) this fails BEFORE retiring
+    // superseded versions, or a committed unit would silently lose its
+    // only manifest entry
+    commitFile(f, manifestDir, manifestPath(unit, next), json)
+    // retire superseded manifest versions only after the new one is
+    // visible — their DATA stays until a snapshot referencing it expires
+    entries.filter { case (u, v) => u == unit && v < next }
+      .foreach { case (u, v) => f.delete(manifestPath(u, v), false) }
+    commitSnapshot(f, latest + (unit -> next))
+    rows
+  }
+
+  /** Write `text` to `dest` via a tmp file in `dir` + atomic rename. */
+  private def commitFile(f: FileSystem, dir: Path, dest: Path, text: String): Unit = {
+    f.mkdirs(dir)
+    val tmp = new Path(dir, s".${dest.getName}.tmp")
     val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
+    out.write(text.getBytes(StandardCharsets.UTF_8))
     out.close()
-    // atomic commit of v(next); on rename failure (S3A/HDFS edge) fail
-    // BEFORE retiring superseded versions, or a committed unit would
-    // silently lose its only manifest entry
-    if (!f.rename(tmp, manifestPath(unit, next)))
-      sys.error(s"manifest commit failed: rename $tmp -> ${manifestPath(unit, next)}")
-    // retire superseded manifest versions (incl. a legacy unversioned
-    // file) only after the new one is visible — their DATA stays until
-    // a snapshot referencing it expires
-    manifestEntries(f).filter { case (u, v) => u == unit && v < next }
-      .foreach { case (u, v) => f.delete(entryPath(f, u, v), false) }
-    commitSnapshot(f)
+    if (!f.rename(tmp, dest)) sys.error(s"commit failed: rename $tmp -> $dest")
   }
 
   // ---------------- snapshots (time travel) ----------------
@@ -228,22 +156,15 @@ final class IcebergLite(val root: String) extends Serializable {
         n.stripPrefix("snap-").stripSuffix(".json").toInt }
       .sorted
 
-  /** Write snapshot N+1 = the current committed (unit → version) map,
-    * via tmp + atomic rename — the Iceberg snapshot-commit idea. Called
-    * on every publish, so each table state is addressable for time
-    * travel until expired.
+  /** Write snapshot N+1 = the committed (unit → version) map, via tmp +
+    * atomic rename — the Iceberg snapshot-commit idea. Called on every
+    * publish, so each table state is addressable for time travel until
+    * expired.
     */
-  private def commitSnapshot(f: FileSystem): Unit = {
-    val state = latestVersions(f).toSeq.sorted
+  private def commitSnapshot(f: FileSystem, state: Map[Int, Int]): Unit = {
     val n = snapshotIdsOf(f).lastOption.getOrElse(0) + 1
-    val json = state.map { case (u, v) => s""""$u": $v""" }.mkString("{", ", ", "}")
-    f.mkdirs(snapshotDir)
-    val tmp = new Path(s"$root/snapshot/.snap-$n.json.tmp")
-    val out = f.create(tmp, true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
-    if (!f.rename(tmp, snapshotPath(n)))
-      sys.error(s"snapshot commit failed: rename $tmp -> ${snapshotPath(n)}")
+    val json = state.toSeq.sorted.map { case (u, v) => s""""$u": $v""" }.mkString("{", ", ", "}")
+    commitFile(f, snapshotDir, snapshotPath(n), json)
   }
 
   /** Committed snapshot ids, oldest first. */
@@ -259,22 +180,21 @@ final class IcebergLite(val root: String) extends Serializable {
       .map(m => (m.group(1).toInt, m.group(2).toInt)).toSeq.sorted
   }
 
+  /** Read the given (unit, version) data dirs as one table. */
+  private def readVersions(spark: SparkSession, state: Seq[(Int, Int)]): DataFrame =
+    spark.read
+      .option("basePath", s"$root/data")
+      .parquet(state.map { case (u, v) => dataPath(u, v) }: _*)
+
   /** TIME TRAVEL: read the table exactly as of snapshot `id` — the
     * (unit, version) data files that snapshot committed, regardless of
     * later publishes. Versioned data is immutable, so this is correct
     * until the snapshot is expired.
     */
   def readAt(spark: SparkSession, id: Int): DataFrame = {
-    val f = fs(spark)
-    val state = snapshotState(f, id)
+    val state = snapshotState(fs(spark), id)
     require(state.nonEmpty, s"snapshot $id is empty")
-    // a pre-upgrade table can hold loose legacy files BESIDE v-k dirs
-    // (the old writeData staged v-1 without migrating); migrate before
-    // resolving or the version-0 read recursively includes v-k files
-    state.foreach { case (u, v) => if (v == 0) migrateLegacy(f, u, mixedOnly = true) }
-    spark.read
-      .option("basePath", s"$root/data")
-      .parquet(state.map { case (u, v) => resolvedDataPath(f, u, v) }: _*)
+    readVersions(spark, state)
   }
 
   /** Expire all but the newest `keepLast` snapshots and DELETE data
@@ -289,38 +209,25 @@ final class IcebergLite(val root: String) extends Serializable {
     val referenced: Set[(Int, Int)] =
       keep.flatMap(snapshotState(f, _)).toSet ++ latestVersions(f).toSeq
     expire.foreach { id =>
-      snapshotState(f, id).foreach { case (u, v) =>
-        if (!referenced((u, v))) {
-          if (v == 0) migrateLegacy(f, u)
-          val p = new Path(resolvedDataPath(f, u, v))
-          // version 0 that never migrated resolves to the PARENT dir of
-          // every versioned dir — nothing legacy remains there, so skip
-          if (v > 0 || p.getName == "v-0") f.delete(p, true)
-        }
-      }
+      snapshotState(f, id).filterNot(referenced)
+        .foreach { case (u, v) => f.delete(new Path(dataPath(u, v)), true) }
       f.delete(snapshotPath(id), false)
     }
   }
 
   /** Read the committed table (only units with manifest entries). */
   def read(spark: SparkSession): DataFrame = {
-    val f = fs(spark)
-    val latest = latestVersions(f).toSeq.sorted
+    val latest = latestVersions(fs(spark)).toSeq.sorted
     require(latest.nonEmpty, s"no committed units under $root")
-    // see readAt: loose legacy files must not coexist with v-k dirs
-    latest.foreach { case (u, v) => if (v == 0) migrateLegacy(f, u, mixedOnly = true) }
-    spark.read
-      .option("basePath", s"$root/data")
-      .parquet(latest.map { case (u, v) => resolvedDataPath(f, u, v) }: _*)
+    readVersions(spark, latest)
   }
 
   /** The manifest itself as a DataFrame (per-unit lineage + metrics),
     * latest version per unit.
     */
   def manifest(spark: SparkSession): DataFrame = {
-    val f = fs(spark)
-    val latest = latestVersions(f).toSeq.sorted
-      .map { case (u, v) => entryPath(f, u, v).toString }
+    val latest = latestVersions(fs(spark)).toSeq.sorted
+      .map { case (u, v) => manifestPath(u, v).toString }
     require(latest.nonEmpty, s"no committed units under $root")
     spark.read.json(latest: _*)
   }
@@ -328,5 +235,26 @@ final class IcebergLite(val root: String) extends Serializable {
   def drop(spark: SparkSession): Unit = {
     val f = fs(spark)
     if (f.exists(new Path(root))) f.delete(new Path(root), true)
+  }
+}
+
+object IcebergLite {
+  private val ManifestName = "unit-(\\d+)-v(\\d+)\\.json".r
+
+  private def latestOf(entries: Seq[(Int, Int)]): Map[Int, Int] =
+    entries.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).max }
+
+  /** The version a writeData/publish pair creates next. */
+  private def nextVersion(latest: Map[Int, Int], unit: Int): Int =
+    latest.get(unit).fold(1)(_ + 1)
+
+  /** Row count of one parquet file, from its footer. The read options
+    * take the caller's conf: the default options build a fresh Hadoop
+    * configuration per file, which measured about 10x the footer read.
+    */
+  private def footerRows(file: FileStatus, conf: Configuration): Long = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf).build())
+    try reader.getRecordCount finally reader.close()
   }
 }

@@ -5,10 +5,10 @@ package graft.util
   * metadata-enrichment habit, SURVEY.md §4.1 item 4).
   *
   * Caveat (standard Spark semantics): accumulators updated inside a
-  * transformation can over-count under task retries/speculation; the
-  * manifest histogram is operational telemetry, while row-level truth
-  * stays in the committed parquet (re-aggregate from the unit files
-  * when exactness matters).
+  * transformation can over-count under task retries/speculation, so the
+  * manifest's `strategy_*` histogram is operational telemetry. The
+  * manifest's `rows` is exact: IcebergLite reads it from the committed
+  * files' parquet footers, never from an accumulator.
   */
 final class MapAccumulator
     extends org.apache.spark.util.AccumulatorV2[String, Map[String, Long]] {

@@ -184,6 +184,37 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("dedup_substring past the checkpoint: no text in any exchange, bounded exchange count") {
+    // substringDupPairs' own plan over the checkpointed match table: the
+    // diagonal prefilter, the island window and the shared-mass
+    // aggregate. The bound is the plan's exchange count when the gate
+    // was added (5)
+    val conf = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "false")
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      import testImplicits._
+      // the plan past the checkpoint does not depend on the input
+      val shared = (1 to 40).map(i => s"w$i").mkString(" ")
+      val docs = Seq((1L, s"alpha $shared beta"), (2L, s"gamma $shared delta"),
+        (3L, "unrelated words only")).toDF("doc_id", "text")
+      val plan = graft.ops.Dedup.substringDupPairs(docs).queryExecution.executedPlan
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      exchanges.foreach { e =>
+        assert(!e.output.exists(_.name.toLowerCase.contains("text")),
+          s"exchange carries text: ${e.output.map(_.name).mkString(", ")}")
+      }
+      assert(exchanges.nonEmpty && exchanges.size <= 5, plan.toString)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("contamination_check broadcasts the eval side; train never shuffles pre-join") {
     // the 10^12-train-doc shape: the held-out eval set is small by
     // construction, so its shingles must arrive at the train side via

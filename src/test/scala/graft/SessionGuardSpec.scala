@@ -5,21 +5,30 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Every session comes from `graft.util.Sessions`: hand-built sessions
-  * are how the mains' and suites' configs drifted apart.
+/** Source guards. Every session comes from `graft.util.Sessions`:
+  * hand-built sessions are how the mains' and suites' configs drifted
+  * apart. Main code names no absolute checkout path: it resolves
+  * project files against the working directory.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
+  /** Scala sources under `root` whose text contains `needle`. */
+  private def sourcesContaining(root: String, needle: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(Paths.get(root))
+    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    sources.filter(p => new String(Files.readAllBytes(p), ISO_8859_1).contains(needle))
+  }
+
   test("session builders appear only in graft.util.Sessions") {
     val needle = "SparkSession" + ".builder()" // split: this file is no hit
-    val sources = Seq("src/main", "src/test").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    val hits = sources.filter(p =>
-      new String(Files.readAllBytes(p), ISO_8859_1).contains(needle))
+    val hits = Seq("src/main", "src/test").flatMap(sourcesContaining(_, needle))
     assert(hits == Seq(Paths.get("src/main/scala/graft/util/Sessions.scala")),
       hits.mkString(", "))
+  }
+
+  test("main code names no absolute checkout path") {
+    val hits = sourcesContaining("src/main", Seq("", "root", "repo").mkString("/"))
+    assert(hits.isEmpty, hits.mkString(", "))
   }
 }

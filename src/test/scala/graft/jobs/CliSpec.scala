@@ -204,6 +204,8 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     assert(table.committedUnits(spark) == Seq(0))
     val index = table.read(spark)
     assert(index.columns.contains("embedding") && index.count() > 0)
+    assert(table.manifest(spark).select("rows").collect()(0).getString(0) ==
+      index.count().toString)
     val answer = RagJobs.query(index, "cosine similarity vector search", topK = 2)
     assert(answer.contains("[Result 1, Score:"))
   }

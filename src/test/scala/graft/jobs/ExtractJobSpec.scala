@@ -141,6 +141,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(cols.exists(_.startsWith("strategy_")))
     val totalRows = m.agg(sum(col("rows").cast("long"))).collect()(0).getLong(0)
     assert(totalRows == nPages)
+    assert(totalRows == t.read(spark).count())
     // output rows carry task-partition lineage
     assert(t.read(spark).columns.contains("task_partition"))
     t.drop(spark)
@@ -168,19 +169,32 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     val dir = Files.createTempDirectory("graft-republish").toString
     val t = new IcebergLite(dir)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    t.commitUnit(df, 0, Map("rows" -> "2"))
-    assert(t.isCommitted(spark, 0))
+    assert(t.commitUnit(df, 0) == 2)
+    assert(t.committedUnits(spark) == Seq(0))
     val firstRows = t.manifest(spark).select("rows").collect()(0).getString(0)
     assert(firstRows == "2")
     // re-publish with new metrics: new version appears before old is
     // retired, so the unit is committed throughout; reader sees latest
     t.writeData(df.union(Seq((3L, "c")).toDF("id", "v")), 0)
-    t.publish(spark, 0, Map("rows" -> "3"))
-    assert(t.isCommitted(spark, 0))
+    assert(t.publish(spark, 0) == 3)
     assert(t.committedUnits(spark) == Seq(0)) // one unit, not one per version
     assert(t.manifest(spark).count() == 1)    // latest version only
     assert(t.manifest(spark).select("rows").collect()(0).getString(0) == "3")
     assert(t.read(spark).count() == 3)
+    t.drop(spark)
+  }
+
+  test("manifest rows, files, bytes and version belong to the table, not the caller") {
+    import testImplicits._
+    val t = new IcebergLite(Files.createTempDirectory("graft-owned").toString)
+    val n = t.commitUnit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0,
+      Map("rows" -> "99", "version" -> "7", "bytes" -> "-1", "files" -> "0", "source" -> "spec"))
+    assert(n == 2)
+    val m = t.manifest(spark).collect()(0)
+    assert(m.getAs[String]("rows") == "2")
+    assert(m.getAs[String]("version") == "1")
+    assert(m.getAs[String]("files").toInt > 0 && m.getAs[String]("bytes").toLong > 0)
+    assert(m.getAs[String]("source") == "spec") // other caller metrics are kept
     t.drop(spark)
   }
 
@@ -212,80 +226,6 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(t.readAt(spark, 3).count() == 3)
     intercept[IllegalArgumentException](t.readAt(spark, 1))
     t.drop(spark)
-  }
-
-  test("legacy unversioned manifests read as committed (version 0) and retire on republish") {
-    import testImplicits._
-    val dir = Files.createTempDirectory("graft-legacy").toString
-    val t = new IcebergLite(dir)
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    // simulate a pre-upgrade table: data + a legacy `unit-0.json` manifest
-    t.writeData(df, 0)
-    val legacy = new java.io.File(s"$dir/manifest")
-    legacy.mkdirs()
-    Files.writeString(legacy.toPath.resolve("unit-0.json"),
-      """{"unit": "0", "rows": "2"}""")
-    assert(t.isCommitted(spark, 0), "legacy manifest must read as committed")
-    assert(t.committedUnits(spark) == Seq(0))
-    assert(t.read(spark).count() == 2)
-    assert(t.manifest(spark).select("rows").collect()(0).getString(0) == "2")
-    // republish writes v1 and retires the legacy file
-    t.publish(spark, 0, Map("rows" -> "2"))
-    assert(t.isCommitted(spark, 0))
-    assert(!Files.exists(legacy.toPath.resolve("unit-0.json")),
-      "legacy manifest not retired after republish")
-    assert(t.manifest(spark).count() == 1)
-    t.drop(spark)
-  }
-
-  test("legacy version-0 data migrates to v-0: expiry keeps live versions, staged rows stay invisible") {
-    import testImplicits._
-    val dir = Files.createTempDirectory("graft-legacy-v0").toString
-    val t = new IcebergLite(dir)
-    def manifest(u: Int): Unit =
-      Files.writeString(java.nio.file.Paths.get(s"$dir/manifest").resolve(s"unit-$u.json"),
-        s"""{"unit": "$u"}""")
-    // pre-upgrade table: loose parquet files directly in data/unit=<u>
-    new java.io.File(s"$dir/manifest").mkdirs()
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/data/unit=0")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir/data/unit=1")
-    manifest(0); manifest(1)
-    assert(t.read(spark).count() == 2)
-    // staging over a legacy unit must not leak into committed reads
-    t.writeData(Seq((3L, "c")).toDF("id", "v"), 0)
-    assert(t.read(spark).count() == 2, "staged v-1 rows leaked into a version-0 read")
-    t.publish(spark, 0)                                   // snap1 = {0:1, 1:0}
-    t.commitUnit(Seq((4L, "d")).toDF("id", "v"), 1)       // snap2 = {0:1, 1:1}
-    t.commitUnit(Seq((5L, "e"), (6L, "f")).toDF("id", "v"), 1) // snap3 = {0:1, 1:2}
-    // expiring snap1 drops (1, 0) — the legacy version — and must NOT
-    // take unit 1's live versioned dirs down with it
-    t.expireSnapshots(spark, keepLast = 2)
-    assert(t.snapshots(spark) == Seq(2, 3))
-    assert(t.read(spark).select("v").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("c", "e", "f"), "live versions destroyed by legacy-version expiry")
-    assert(t.readAt(spark, 2).count() == 2)
-    t.drop(spark)
-
-    // read-only pre-upgrade state (built by the PRE-fix writer): loose
-    // legacy files BESIDE a committed v-1, snapshot 1 referencing
-    // version 0 — time travel must see only the legacy rows
-    val dir2 = Files.createTempDirectory("graft-legacy-ro").toString
-    val t2 = new IcebergLite(dir2)
-    Seq((1L, "old")).toDF("id", "v").write.parquet(s"$dir2/data/unit=0")
-    Seq((2L, "new"), (3L, "new")).toDF("id", "v")
-      .write.parquet(s"$dir2/data/unit=0/v-1")
-    new java.io.File(s"$dir2/manifest").mkdirs()
-    new java.io.File(s"$dir2/snapshot").mkdirs()
-    Files.writeString(java.nio.file.Paths.get(s"$dir2/manifest/unit-0-v1.json"),
-      """{"unit": "0", "version": "1"}""")
-    Files.writeString(java.nio.file.Paths.get(s"$dir2/snapshot/snap-1.json"),
-      """{"0": 0}""")
-    Files.writeString(java.nio.file.Paths.get(s"$dir2/snapshot/snap-2.json"),
-      """{"0": 1}""")
-    assert(t2.readAt(spark, 1).select("v").collect().map(_.getString(0)).toSeq ==
-      Seq("old"), "version-0 time travel must not mix in v-1 files")
-    assert(t2.readAt(spark, 2).count() == 2)
-    t2.drop(spark)
   }
 
   test("host-grouped mode with salting spreads the hot host") {

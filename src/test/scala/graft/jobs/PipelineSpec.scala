@@ -29,7 +29,9 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(result.columns.contains("extracted_text") &&
       result.columns.contains("strategy_used"))
     // stored and committed
-    assert(out.read(spark).count() == 120)
+    val stored = out.read(spark).count()
+    assert(stored == 120)
+    assert(out.manifest(spark).select("rows").collect()(0).getString(0) == stored.toString)
     out.drop(spark)
   }
 

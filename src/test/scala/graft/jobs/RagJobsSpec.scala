@@ -30,6 +30,8 @@ class RagJobsSpec extends AnyFunSuite with SparkSuite {
     val n = RagJobs.buildAndWrite(pages, out)
     assert(n > 0)
     val index = out.read(spark)
+    assert(out.manifest(spark).select("rows").collect()(0).getString(0) ==
+      index.count().toString)
     val answer = RagJobs.query(index, "analytics engine processes web corpus data", topK = 3)
     assert(answer.startsWith("[Result 1, Score: "))
     assert(answer.split("\n\n---\n\n").length <= 3)

@@ -22,6 +22,24 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
     streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
   }
 
+  test("a lone source file's staged copy is deleted once the stream stops") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged(): Int =
+      Option(tmp.list()).fold(0)(_.count(_.startsWith("graft-stream-src")))
+    val dir = Files.createTempDirectory("stream-lone-src")
+    spark.range(20).select(
+        expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, cast(id as int))").as("ts"),
+        when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
+        col("id").cast("double").as("value"))
+      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val lone = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get
+    val before = staged()
+    val rows = StreamingOps.windowedEventCounts(spark, lone.toString, "spec_events_staged")
+      .collect()
+    assert(rows.map(_.getAs[Long]("n")).sum == 20)
+    assert(staged() == before, "graft-stream-src dir left behind")
+  }
+
   test("stream-stream interval join equals the batch join") {
     val path = "/root/testdata/sf0.001/events.parquet"
     val streamed = StreamingOps.streamStreamJoin(spark, path,
