@@ -32,20 +32,6 @@ object SparkEntry {
     else if (dir.contains("sf0.01")) 5000L
     else 1000L
 
-  /** Spread a SMALL single-file blob fixture across the cores before a
-    * CPU-bound decode kernel: a committed media parquet is one input
-    * split under any sane maxPartitionBytes, which serializes the whole
-    * decode behind one task (the Warc.readIndexed descriptor-shuffle
-    * lesson: cost judged by scan bytes, paid downstream in kernel CPU).
-    * No-op whenever the scan already has at least core-count splits —
-    * which every production-scale corpus does — so this never adds a
-    * payload shuffle at scale.
-    */
-  private def spreadBlobScan(s: SparkSession, df: DataFrame): DataFrame = {
-    val cores = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores)
-  }
-
   /** Embedding of a fixed anchor row, used as the ANN query vector. */
   private def anchorVec(s: SparkSession, dir: String): Array[Float] =
     t(s, dir, "embeddings").where(col("vec_id") === 0)
@@ -1089,7 +1075,7 @@ object SparkEntry {
       // dimensions and pixel CRC. Oracle = the generation-time per-frame
       // truth table (computed from the index planes, never through the
       // encoder) filtered to the same stride.
-      val media = spreadBlobScan(s,
+      val media = graft.jobs.ExtractJob.atClusterWidth(
         s.read.parquet(s"$goldenDir/media_anim.parquet"))
       graft.ops.Multimodal.frameSample(media, stride = 2)
         .orderBy(col("id"), col("frame_idx"))
@@ -1103,7 +1089,7 @@ object SparkEntry {
       // computed at generation time STRAIGHT FROM THE PROCEDURAL PIXELS
       // (never through either encoder), so encode and decode are
       // independent derivations meeting at the CRC.
-      val media = spreadBlobScan(s,
+      val media = graft.jobs.ExtractJob.atClusterWidth(
         s.read.parquet(s"$goldenDir/media_px.parquet")
           .select(col("id"), col("payload")))
       graft.ops.Multimodal.resizeImages(media, maxSide = 64).orderBy(col("id"))

@@ -510,8 +510,7 @@ object Extractors {
     * script/style text nodes with leading/trailing Python-space
     * stripped and inner runs collapsed to one ' ', appended directly to
     * `out` behind a lazily-committed "\n\n" separator. Byte-equivalent
-    * to normalizeWhitespace(paragraphText(..)) + appendPara (goldens
-    * enforce this).
+    * to paragraphText(..) + appendPara (goldens enforce this).
     */
   private def appendParaFused(dom: Dom, node: Int,
       out: java.lang.StringBuilder,
@@ -687,7 +686,7 @@ object Extractors {
     if (t != null) return t
     val h1 = dom.findFirst(0, T.H1)
     if (h1 >= 0) {
-      val s = PyText.normalizeWhitespace(paragraphText(dom, h1))
+      val s = paragraphText(dom, h1)
       if (s.nonEmpty) return s
     }
     null
@@ -726,7 +725,7 @@ object Extractors {
         hit < 0
       }
       if (hit >= 0) {
-        val s = PyText.normalizeWhitespace(paragraphText(dom, hit))
+        val s = paragraphText(dom, hit)
         if (s.nonEmpty) found += s.replaceFirst("(?i)^by[:\\s]+", "")
       }
     }

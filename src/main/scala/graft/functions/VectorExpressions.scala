@@ -18,9 +18,8 @@ import org.apache.spark.sql.GraftColumnBridge
   * WholeStageCodegen (the preference order of SURVEY.md §7.3: built-in
   * < custom Expression < UDF).
   *
-  * Semantics match VectorFunctions.cosine: index-ordered double
-  * accumulation, 0.0 for zero-norm inputs; null if either side is null
-  * or lengths differ.
+  * Semantics: index-ordered double accumulation, 0.0 for zero-norm
+  * inputs; null if either side is null or lengths differ.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -97,14 +97,6 @@ final class Dom {
     attrValEnd = java.util.Arrays.copyOf(attrValEnd, n)
   }
 
-  /** Eager attribute (pre-materialized value). */
-  def addAttr(name: String, value: String): Unit = {
-    if (nAttrs == attrNames.length) growAttrs()
-    attrNames(nAttrs) = name
-    attrValues(nAttrs) = value
-    nAttrs += 1
-  }
-
   /** Lazy attribute: value is src[vs, ve), decoded on first read. */
   def addAttrLazy(name: String, vs: Int, ve: Int): Unit = {
     if (nAttrs == attrNames.length) growAttrs()

@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.table.{IcebergLite, SyntheticPages}
 import graft.util.Sessions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit CLI mirroring the reference's verbs
@@ -151,26 +151,28 @@ object Cli {
             val unitPath = s"$staged/unit=$u"
             if (new java.io.File(unitPath).isDirectory) spark.read.parquet(unitPath)
             else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pagesSchema)
+              spark.sparkContext.emptyRDD[Row], pagesSchema)
           }, out, cfg)
-        val rows = out.read(spark).count()
-        val okRows = out.read(spark).where(col("succeeded")).count()
-        println(s"extract: units_run=${ran.size} rows=$rows succeeded=$okRows " +
-          s"failed=${rows - okRows}")
         // the reference's success epilogue (app.py:112-128): completion
         // line, extractor/processors, content size, environment, the
         // below-threshold note, and echoed warnings — batch analogues
-        // (aggregate character count, distinct warnings bounded at 3)
+        // (aggregate character count, distinct warnings bounded at 3).
+        // Counts, characters and the partial probe are one pass.
         val result = out.read(spark)
+        val Row(rows: Long, okRows: Long, chars: Long, partialRows: Long) = result.agg(
+          count(lit(1)), count(when(col("succeeded"), true)),
+          coalesce(sum(length(col("extracted_text"))), lit(0L)),
+          count(when(col("partial"), true))).head()
+        println(s"extract: units_run=${ran.size} rows=$rows succeeded=$okRows " +
+          s"failed=${rows - okRows}")
         if (args.contains("--async")) println("  mode: async (experimental)")
         println("Pipeline completed successfully.")
         println(s"  extractor: ${cfg.cascade.strategies.mkString(", ")}")
         println("  processors: normalize_whitespace")
-        val chars = result.agg(sum(length(col("extracted_text")))).collect()(0)
-        println(s"  content-characters: ${if (chars.isNullAt(0)) 0L else chars.getLong(0)}")
+        println(s"  content-characters: $chars")
         println(s"  saved-to: ${args(2)}")
         println(s"  environment: ${resolved.environment}")
-        if (result.where(col("partial")).limit(1).count() > 0)
+        if (partialRows > 0)
           println("  note: content below configured minimum threshold")
         result.select(explode(col("warnings")).as("w")).distinct()
           .orderBy("w").limit(3).collect().map(_.getString(0))
@@ -210,12 +212,8 @@ object Cli {
         // past 4 partitions
         val embedded = chunks.select(col("chunk_index").cast("long"), col("chunk_text"))
           .as[(Long, String)]
-          .mapPartitions { it =>
-            it.grouped(100).flatMap { batch => // reference batching (100)
-              batch.iterator.zip(embedder.embedBatch(batch.map(_._2)).iterator)
-                .map { case ((ci, text), v) => (ci, text, v) }
-            }
-          }
+          .mapPartitions(it => embedder.embedRows(it)(_._2)
+            .map { case ((ci, text), v) => (ci, text, v) })
           .toDF("chunk_index", "chunk_text", "embedding")
         embedded.write.mode("overwrite").parquet(outPath)
         val n = spark.read.parquet(outPath).count()

@@ -75,9 +75,11 @@ object ExtractJob {
     * byte-range split of a parquet file reads only the row groups
     * assigned to its range, so a unit staged as one large
     * single-row-group file counts as many partitions but runs as one
-    * task: stage units as several files, as `Cli extract` does.
+    * task: stage units as several files, as `Cli extract` does. The
+    * media queries spread their one-file golden scans through it too,
+    * so a CPU-bound decode does not run in one task.
     */
-  private def atClusterWidth(pages: DataFrame): DataFrame = {
+  private[graft] def atClusterWidth(pages: DataFrame): DataFrame = {
     val cores = pages.sparkSession.sparkContext.defaultParallelism
     if (pages.rdd.getNumPartitions >= cores) pages else pages.repartition(cores)
   }

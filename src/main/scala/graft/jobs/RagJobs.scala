@@ -38,15 +38,8 @@ object RagJobs {
         }
       }
       .mapPartitions { it =>
-        val emb = embedder
-        it.grouped(100).flatMap { batch => // reference batching (100)
-          val vecs = emb.embedBatch(batch.map(_._3))
-          batch.iterator.zip(vecs.iterator).map { case ((url, ci, text, title, meta), v) =>
-            IndexDoc(
-              id = url.replace('/', '_').replace(':', '_') + "_chunk_" + ci,
-              content = text, embedding = v, url = url, chunk_index = ci,
-              title = title, meta = meta)
-          }
+        embedder.embedRows(it)(_._3).map { case ((url, ci, text, title, meta), v) =>
+          IndexDoc(IndexDoc.chunkId(url, ci), text, v, url, ci, title, meta)
         }
       }
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.VectorExpr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -877,11 +878,10 @@ object Dedup {
     * oracle path; the scale path is Similarity.lshNearDupPairs).
     */
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double = 0.95): DataFrame = {
-    import graft.rag.VectorFunctions.cosine
     val a = embeddings.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
     val b = embeddings.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("c", cosine(col("emb_a"), col("emb_b")))
+      .withColumn("c", VectorExpr.cosineSim(col("emb_a"), col("emb_b")))
       .where(col("c") >= threshold)
       .withColumn("cos_bp", floor(col("c") * 10000).cast("long"))
       .select("id_a", "id_b", "cos_bp")

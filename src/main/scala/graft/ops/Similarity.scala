@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.rag.VectorFunctions
+import graft.functions.VectorExpr
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ object Similarity {
   def bruteTopK(embeddings: DataFrame, query: Array[Float], k: Int = 10): DataFrame =
     embeddings
       .withColumn("score_bp",
-        floor(VectorFunctions.cosine(col("embedding"), typedLit(query.toSeq)) * 10000)
+        floor(VectorExpr.cosineSim(col("embedding"), typedLit(query.toSeq)) * 10000)
           .cast("long"))
       .orderBy(desc("score_bp"), asc("vec_id"))
       .limit(k)
@@ -337,14 +337,14 @@ object Similarity {
     index
       .where(col("cell").isin(probes: _*))
       .withColumn("score_bp",
-        floor(VectorFunctions.cosine(col("embedding"), typedLit(query.toSeq)) * 10000)
+        floor(VectorExpr.cosineSim(col("embedding"), typedLit(query.toSeq)) * 10000)
           .cast("long"))
       .orderBy(desc("score_bp"), asc("vec_id"))
       .limit(k)
       .select("vec_id", "score_bp")
   }
 
-  /** Corpus-size-adaptive cluster count for [[semanticDedup]] — the
+  /** Corpus-size-adaptive cluster count for [[semanticDedupOnIndex]] — the
     * same occupancy-pinning discipline as [[lshSizing]]. Per-cell
     * pairwise work is quadratic in cell occupancy n/k, so a FIXED k is
     * the scale trap (measured: pinned k=16 cost 3.0× at 10× data,
@@ -362,7 +362,7 @@ object Similarity {
   def semanticSizing(n: Long): Int =
     math.min(4096, math.max(4, math.ceil(n / 32.0).toInt))
 
-  /** [[semanticDedup]] with k derived from the corpus size via
+  /** [[semanticDedupOnIndex]] with k derived from the corpus size via
     * [[semanticSizing]], centroids trained on the spot from the
     * deterministic bounded sample, and TWO-LEVEL assignment
     * ([[trainTwoLevel]]) — the production entry point.
@@ -462,15 +462,10 @@ object Similarity {
     * the semantics relational, so the oracle recomputes it with one
     * correlated self-join per cell.
     *
-    * Returns (vec_id, cell, kept).
-    */
-  def semanticDedup(embeddings: DataFrame, centroids: Array[Array[Double]],
-      threshold: Double = 0.8): DataFrame =
-    semanticDedupOnIndex(ivfIndex(embeddings, centroids), threshold)
-
-  /** The per-cell prune kernel over a pre-built (vec_id, embedding,
-    * cell) index — shared by the flat-assignment path and the
-    * two-level production path.
+    * This is the per-cell prune kernel over a pre-built (vec_id,
+    * embedding, cell) index ([[ivfIndex]] or [[ivfIndexTwoLevel]]);
+    * [[semanticDedupAuto]] is the production entry point. Returns
+    * (vec_id, cell, kept).
     */
   def semanticDedupOnIndex(index: DataFrame, threshold: Double): DataFrame = {
     val spark = index.sparkSession
@@ -587,7 +582,7 @@ object Similarity {
     index
       .where(col("bucket").isin(probes: _*))
       .withColumn("score_bp",
-        floor(VectorFunctions.cosine(col("embedding"), typedLit(query.toSeq)) * 10000)
+        floor(VectorExpr.cosineSim(col("embedding"), typedLit(query.toSeq)) * 10000)
           .cast("long"))
       .orderBy(desc("score_bp"), asc("vec_id"))
       .limit(k)

@@ -15,11 +15,11 @@ trait Embedder extends Serializable {
   def dim: Int
   /** Embed one batch. Must return one vector per input text. */
   def embedBatch(texts: Seq[String]): Seq[Array[Float]]
-  /** Streaming form with reference-style batching (100/batch,
-    * openai_embedder.py:73-82).
+  /** Embed `rows` in the reference's batches of 100
+    * (openai_embedder.py:73-82), each row paired with its vector.
     */
-  def embedAll(texts: Iterator[String], batchSize: Int = 100): Iterator[Array[Float]] =
-    texts.grouped(batchSize).flatMap(embedBatch)
+  def embedRows[T](rows: Iterator[T])(text: T => String): Iterator[(T, Array[Float])] =
+    rows.grouped(100).flatMap(batch => batch.iterator.zip(embedBatch(batch.map(text)).iterator))
 }
 
 /** Feature-hashing embedder: token unigrams + bigrams hashed into `dim`

@@ -1,6 +1,7 @@
 package graft.rag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import graft.functions.VectorExpr
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One vector-index row (core/rag/stores/base.py:11-23 → typed).
@@ -18,23 +19,12 @@ final case class IndexDoc(
     title: String,
     meta: Map[String, String] = Map.empty)
 
-/** Vector math as Catalyst higher-order functions — codegen-friendly,
-  * no UDFs, stays inside WholeStageCodegen.
-  */
-object VectorFunctions {
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-
-  /** Cosine similarity with zero-vector guard. Backed by the codegen'd
-    * native expression (graft.functions.CosineSimilarity) — the
-    * zip_with/aggregate HOF formulation evaluates an interpreted lambda
-    * per element and is ~50x slower on 64-dim vectors.
+object IndexDoc {
+  /** Stable chunk document id (core/rag/stages/index.py:120-129): url
+    * with '/' and ':' replaced by '_', + "_chunk_" + index.
     */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorExpr.cosineSim(a, b)
+  def chunkId(url: String, chunkIndex: Int): String =
+    url.replace('/', '_').replace(':', '_') + "_chunk_" + chunkIndex
 }
 
 /** Retrieval engine: embed → index → broadcast-scalar cosine top-k.
@@ -49,8 +39,8 @@ object Rag {
 
   /** chunks(url, chunk_index, chunk_text[, title]) → index rows.
     * Embedding runs in mapPartitions with a per-partition embedder
-    * handle and reference-style batching (100/batch) — the pooled-
-    * model pattern (sentence_transformer.py:28-48).
+    * handle and reference-style batching ([[Embedder.embedRows]]) — the
+    * pooled-model pattern (sentence_transformer.py:28-48).
     */
   def buildIndex(chunks: DataFrame, embedder: Embedder = new DeterministicHashEmbedder()): Dataset[IndexDoc] = {
     val spark = chunks.sparkSession
@@ -63,14 +53,8 @@ object Rag {
         col("title"))
       .as[(String, Int, String, String)]
       .mapPartitions { it =>
-        it.grouped(100).flatMap { batch =>
-          val vecs = embedder.embedBatch(batch.map(_._3))
-          batch.iterator.zip(vecs.iterator).map { case ((url, ci, text, title), v) =>
-            IndexDoc(
-              id = url.replace('/', '_').replace(':', '_') + "_chunk_" + ci,
-              content = text, embedding = v, url = url, chunk_index = ci,
-              title = title)
-          }
+        embedder.embedRows(it)(_._3).map { case ((url, ci, text, title), v) =>
+          IndexDoc(IndexDoc.chunkId(url, ci), text, v, url, ci, title)
         }
       }
   }
@@ -91,7 +75,7 @@ object Rag {
       parityPostKFilter: Boolean = true): DataFrame = {
     val q = typedLit(query.toSeq)
     val scored = index
-      .withColumn("score", VectorFunctions.cosine(col("embedding"), q))
+      .withColumn("score", VectorExpr.cosineSim(col("embedding"), q))
       .where(col("score") >= threshold)
     def applyFilters(df: DataFrame): DataFrame =
       filters.foldLeft(df) { case (d, (k, v)) => d.where(col(k) === lit(v)) }

@@ -301,9 +301,10 @@ object StreamingOps {
     *
     * History = doc_id % 5 != 0 (pre-indexed); the new 20% is staged as
     * `nBatches` parquet files consumed one file per trigger. A staged
-    * copy of a lone input file is deleted once the query stops; the
-    * `graft-stream-inc` work dir stays, because the returned frame
-    * reads its `pairs/` subdir.
+    * copy of a lone input file is deleted once the query stops. The
+    * returned pair table is materialized (a local checkpoint) before
+    * the `graft-stream-inc` work dir is deleted, so the frame reads
+    * no file of it.
     */
   def streamIncrementalDedup(spark: SparkSession, docsPath: String,
       nBatches: Int = 4): DataFrame = {
@@ -312,64 +313,68 @@ object StreamingOps {
     // neutral-to-worse — AQE already coalesces the batch-sized mining
     // joins, so the override only capped the seed build's parallelism
     val work = Files.createTempDirectory("graft-stream-inc")
-    val (indexDir, textsDir, newDir, pairsDir, ckpt) =
-      (s"$work/index", s"$work/texts", s"$work/new", s"$work/pairs", s"$work/ckpt")
-    withSourceDir(docsPath) { srcDir =>
-      import spark.implicits._
-      val docs = spark.read.parquet(srcDir)
-        .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
-      val isNew = pmod(col("doc_id"), lit(5)) === 0
+    try {
+      val (indexDir, textsDir, newDir, pairsDir, ckpt) =
+        (s"$work/index", s"$work/texts", s"$work/new", s"$work/pairs", s"$work/ckpt")
+      withSourceDir(docsPath) { srcDir =>
+        import spark.implicits._
+        val docs = spark.read.parquet(srcDir)
+          .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
+        val isNew = pmod(col("doc_id"), lit(5)) === 0
 
-      // seed the persisted index tables with the history; every commit —
-      // seed and per-batch alike — is its OWN subdirectory written with
-      // mode=overwrite, keyed by batchId, so foreachBatch's documented
-      // at-least-once delivery is idempotent: a retried batch rewrites
-      // its subdirs byte-identically instead of double-appending pairs
-      // and double-committing bands (which would make the retry collide
-      // with its own first attempt). Readers glob the subdirs.
-      val oldDocs = docs.where(!isNew)
-      graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
-        shingleSize = 3).write.parquet(s"$indexDir/seed")
-      oldDocs.write.parquet(s"$textsDir/seed")
-      // stage the incoming batches as separate files (one per trigger)
-      docs.where(isNew)
-        .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
-        .write.parquet(newDir)
-      // pairs sink must exist even if every batch emits nothing
-      spark.emptyDataset[(Long, Long, Long)]
-        .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
+        // seed the persisted index tables with the history; every commit —
+        // seed and per-batch alike — is its OWN subdirectory written with
+        // mode=overwrite, keyed by batchId, so foreachBatch's documented
+        // at-least-once delivery is idempotent: a retried batch rewrites
+        // its subdirs byte-identically instead of double-appending pairs
+        // and double-committing bands (which would make the retry collide
+        // with its own first attempt). Readers glob the subdirs.
+        val oldDocs = docs.where(!isNew)
+        graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
+          shingleSize = 3).write.parquet(s"$indexDir/seed")
+        oldDocs.write.parquet(s"$textsDir/seed")
+        // stage the incoming batches as separate files (one per trigger)
+        docs.where(isNew)
+          .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
+          .write.parquet(newDir)
+        // pairs sink must exist even if every batch emits nothing
+        spark.emptyDataset[(Long, Long, Long)]
+          .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
 
-      val schema = docs.schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(newDir)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          // a RETRIED batch may have committed b<id> subdirs before its
-          // first attempt failed; excluding the batch's own ids from the
-          // history views makes the mining input identical on retry
-          // (and gives last-write-wins semantics for re-crawled ids)
-          val bIds = broadcast(b.select(col("doc_id")))
-          val history = spark.read.parquet(s"$indexDir/*")
-            .join(bIds, Seq("doc_id"), "left_anti")
-          val historyTexts = spark.read.parquet(s"$textsDir/*")
-            .join(bIds, Seq("doc_id"), "left_anti")
-          graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
-              threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
-            .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
-          // commit this batch into the index tables — the next batch
-          // mines against history + everything ingested before it
-          graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
-            shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-          b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
-          b.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.read.parquet(s"$pairsDir/*")
+        val schema = docs.schema
+        val q = spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(newDir)
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            val b = batch.persist()
+            // a RETRIED batch may have committed b<id> subdirs before its
+            // first attempt failed; excluding the batch's own ids from the
+            // history views makes the mining input identical on retry
+            // (and gives last-write-wins semantics for re-crawled ids)
+            val bIds = broadcast(b.select(col("doc_id")))
+            val history = spark.read.parquet(s"$indexDir/*")
+              .join(bIds, Seq("doc_id"), "left_anti")
+            val historyTexts = spark.read.parquet(s"$textsDir/*")
+              .join(bIds, Seq("doc_id"), "left_anti")
+            graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
+                threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
+              .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
+            // commit this batch into the index tables — the next batch
+            // mines against history + everything ingested before it
+            graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
+              shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
+            b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
+            b.unpersist()
+            ()
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      // the pair table is bounded by the output (doc_id < 2000): hold it
+      // in the block manager so the work dir can go before returning
+      spark.read.parquet(s"$pairsDir/*").localCheckpoint(eager = true)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 }

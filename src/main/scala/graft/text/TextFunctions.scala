@@ -20,12 +20,6 @@ object TextFunctions {
       regexp_replace(c, s"^$ws+|$ws+$$", ""),
       s"$ws+", " ")
 
-  /** char_count metadata enrichment (processors/base.py:52-55). */
-  def charCount(c: Column): Column = length(c)
-
-  def meetsThreshold(c: Column, minimum: Int): Column =
-    length(c) >= lit(minimum)
-
   /** Filename slug (core/storage/base.py:147-160, minus the wall-clock
     * suffix — partition-file naming replaces it, SURVEY.md §2.1).
     */
@@ -35,12 +29,6 @@ object TextFunctions {
     val stripped = regexp_replace(dashed, "^-+|-+$", "")
     when(stripped === "", lit("scrag-output")).otherwise(stripped)
   }
-
-  /** Stable chunk document id (core/rag/stages/index.py:120-129):
-    * url with '/' and ':' replaced by '_', + "_chunk_" + index.
-    */
-  def docId(urlCol: Column, chunkIndex: Column): Column =
-    concat(translate(urlCol, "/:", "__"), lit("_chunk_"), chunkIndex)
 
   /** URL normalization at ingest (core/cli/app.py:436-450): default the
     * scheme to https when absent.

@@ -1,10 +1,13 @@
 package graft
 
 import graft.extract.{CascadeConfig, CascadeExtractor}
+import graft.fixtures.{MediaFixtures, PdfFixtures}
+import graft.ops.Multimodal
 import graft.table.SyntheticPages
 import java.nio.file.{Files, Paths, Path}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Regenerates the frozen golden fixtures under src/test/resources/golden.
   *
@@ -66,7 +69,6 @@ object GoldenGen {
 
     // ---- golden parquet tables (driver oracles, SparkEntry) ----
     val spark = graft.util.Sessions.local(8, "golden-gen")
-    import spark.implicits._
 
     val sf001 = "/root/testdata/sf0.01"
     writeSingleParquet(
@@ -107,17 +109,32 @@ object GoldenGen {
     Files.write(dir.resolve("pq_codebooks.txt"),
       graft.ops.Pq.toLines(pqCb).getBytes(StandardCharsets.UTF_8))
 
+    fixtureTables(spark).foreach { case (name, df) =>
+      writeSingleParquet(df, dir.resolve(s"$name.parquet"))
+    }
+
+    println("wrote golden parquets: chunks_sf001, cascade_sf001, winnow_sf001, pdfs, media " +
+      "(simhash_sf001 comes from tools/simhash_expected.py)")
+    spark.stop()
+  }
+
+  /** The committed PDF and media fixture tables, keyed by file name
+    * (`<name>.parquet` under the golden dir): payloads from
+    * `graft.fixtures`, truth columns computed from the procedural
+    * sources. `main` writes them; FixtureGoldenSpec rebuilds them and
+    * compares every committed row.
+    */
+  def fixtureTables(spark: SparkSession): Seq[(String, DataFrame)] = {
+    import spark.implicits._
     val pdfs = spark.range(0, 1000).as[Long].map { id =>
-      val (payload, text, np) = graft.extract.PdfExtract.goldenPdf(id)
+      val (payload, text, np) = PdfFixtures.goldenPdf(id)
       (id, payload, text, np)
     }.toDF("id", "payload", "true_text", "true_pages")
-    writeSingleParquet(pdfs, dir.resolve("pdfs.parquet"))
 
     val media = spark.range(0, 2500).as[Long].map { id =>
-      val (payload, w, h, ch) = graft.ops.Multimodal.goldenMedia(id)
+      val (payload, w, h, ch) = MediaFixtures.goldenMedia(id)
       (id, payload, "image", w, h, ch)
     }.toDF("id", "payload", "true_kind", "true_width", "true_height", "true_channels")
-    writeSingleParquet(media, dir.resolve("media.parquet"))
 
     // pixel-path golden: payload = real PNG encode of procedural pixels;
     // truth columns computed straight from those pixels (resize + CRC
@@ -130,18 +147,17 @@ object GoldenGen {
       // through any encoder's bitstream.
       val (payload, img) =
         if (id < 300) {
-          val im = graft.ops.Multimodal.goldenPixels(id)
-          (graft.ops.Multimodal.makePngPixels(
-            im, graft.ops.Multimodal.goldenColorType(id)), im)
-        } else if (id < 500) graft.ops.Multimodal.goldenGif(id)
-        else graft.ops.Multimodal.goldenJpeg(id)
-      val resized = graft.ops.Multimodal.resizePixels(img, 64)
+          val im = MediaFixtures.goldenPixels(id)
+          (MediaFixtures.makePngPixels(
+            im, MediaFixtures.goldenColorType(id)), im)
+        } else if (id < 500) MediaFixtures.goldenGif(id)
+        else MediaFixtures.goldenJpeg(id)
+      val resized = Multimodal.resizePixels(img, 64)
       (id, payload, img.width, img.height, img.channels,
         resized.width, resized.height,
-        graft.ops.Multimodal.pixelCrc(img), graft.ops.Multimodal.pixelCrc(resized))
+        Multimodal.pixelCrc(img), Multimodal.pixelCrc(resized))
     }.toDF("id", "payload", "true_width", "true_height", "true_channels",
       "true_out_width", "true_out_height", "true_raw_crc", "true_out_crc")
-    writeSingleParquet(px, dir.resolve("media_px.parquet"))
 
     // animated-GIF frame-sampling golden: payloads in one file, the
     // per-frame truth (computed from index planes + palette, never
@@ -149,32 +165,29 @@ object GoldenGen {
     // reads directly
     val animIds = (0L until 200L)
     val animPayloads = spark.createDataset(animIds).map { id =>
-      (id, graft.ops.Multimodal.goldenAnimGif(id)._1)
+      (id, MediaFixtures.goldenAnimGif(id)._1)
     }.toDF("id", "payload")
-    writeSingleParquet(animPayloads, dir.resolve("media_anim.parquet"))
     val animTruth = spark.createDataset(animIds).flatMap { id =>
-      val (_, frames) = graft.ops.Multimodal.goldenAnimGif(id)
+      val (_, frames) = MediaFixtures.goldenAnimGif(id)
       frames.zipWithIndex.map { case (f, idx) =>
         (id, idx, frames.length, f.width, f.height,
-          graft.ops.Multimodal.pixelCrc(f))
+          Multimodal.pixelCrc(f))
       }
     }.toDF("id", "frame_idx", "true_n_frames", "true_width", "true_height", "true_crc")
-    writeSingleParquet(animTruth, dir.resolve("media_anim_truth.parquet"))
 
     val av = spark.range(0, 1500).as[Long].map { id =>
-      val (payload, kind, ch, sr, dur, tracks) = graft.ops.Multimodal.goldenAv(id)
+      val (payload, kind, ch, sr, dur, tracks) = MediaFixtures.goldenAv(id)
       (id, payload, kind, ch, sr, dur, tracks)
     }.toDF("id", "payload", "true_kind", "true_channels", "true_sample_rate",
       "true_duration_ms", "true_tracks")
-    writeSingleParquet(av, dir.resolve("media_av.parquet"))
 
-    println("wrote golden parquets: chunks_sf001, cascade_sf001, winnow_sf001, pdfs, media " +
-      "(simhash_sf001 comes from tools/simhash_expected.py)")
-    spark.stop()
+    Seq("pdfs" -> pdfs, "media" -> media, "media_px" -> px,
+      "media_anim" -> animPayloads, "media_anim_truth" -> animTruth,
+      "media_av" -> av)
   }
 
   /** Spark writes a directory; the goldens are committed single files. */
-  private def writeSingleParquet(df: org.apache.spark.sql.DataFrame, target: Path): Unit = {
+  private def writeSingleParquet(df: DataFrame, target: Path): Unit = {
     val tmp = Files.createTempDirectory("golden-pq").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()

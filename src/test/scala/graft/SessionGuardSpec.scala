@@ -8,17 +8,21 @@ import scala.jdk.CollectionConverters._
 /** Source guards. Every session comes from `graft.util.Sessions`:
   * hand-built sessions are how the mains' and suites' configs drifted
   * apart. Main code names no absolute checkout path: it resolves
-  * project files against the working directory.
+  * project files against the working directory. Fixture generators
+  * live in test code (`graft.fixtures`), not beside the decoders.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
-  /** Scala sources under `root` whose text contains `needle`. */
-  private def sourcesContaining(root: String, needle: String): Seq[java.nio.file.Path] = {
+  /** Scala sources under `root` whose text satisfies `hit`. */
+  private def sourcesWhere(root: String)(hit: String => Boolean): Seq[java.nio.file.Path] = {
     val walk = Files.walk(Paths.get(root))
     val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    sources.filter(p => new String(Files.readAllBytes(p), ISO_8859_1).contains(needle))
+    sources.filter(p => hit(new String(Files.readAllBytes(p), ISO_8859_1)))
   }
+
+  private def sourcesContaining(root: String, needle: String): Seq[java.nio.file.Path] =
+    sourcesWhere(root)(_.contains(needle))
 
   test("session builders appear only in graft.util.Sessions") {
     val needle = "SparkSession" + ".builder()" // split: this file is no hit
@@ -29,6 +33,12 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("main code names no absolute checkout path") {
     val hits = sourcesContaining("src/main", Seq("", "root", "repo").mkString("/"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("main code defines no fixture generator (def golden*, make*, fake*)") {
+    val generator = """\bdef\s+(golden|make|fake)[A-Z]""".r
+    val hits = sourcesWhere("src/main")(generator.findFirstIn(_).isDefined)
     assert(hits.isEmpty, hits.mkString(", "))
   }
 }

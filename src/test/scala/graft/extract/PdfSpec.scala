@@ -1,6 +1,7 @@
 package graft.extract
 
 import graft.SparkSuite
+import graft.fixtures.PdfFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PDF text extraction: generator→parser round-trips (both raw and
@@ -12,7 +13,7 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
   test("round-trip: uncompressed and Flate-compressed content streams") {
     val pages = Seq(Seq("hello world", "second line"), Seq("page two text"))
     for (compress <- Seq(false, true)) {
-      val pdf = PdfExtract.makePdf(pages, compress)
+      val pdf = PdfFixtures.makePdf(pages, compress)
       assert(new String(pdf.take(5), "US-ASCII") == "%PDF-")
       val r = PdfExtract.extract(pdf)
       assert(r.valid, s"compress=$compress")
@@ -23,7 +24,7 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
 
   test("literal-string escapes: parens, backslash, octal survive") {
     val tricky = Seq(Seq("""a (nested) \ backslash""", "line)with(parens"))
-    val r = PdfExtract.extract(PdfExtract.makePdf(tricky, compress = true))
+    val r = PdfExtract.extract(PdfFixtures.makePdf(tricky, compress = true))
     assert(r.valid)
     assert(r.text == """a (nested) \ backslash""" + "\nline)with(parens")
   }
@@ -31,7 +32,7 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
   test("layout parse: out-of-order draws recover reading order from positions") {
     val pages = Seq(Seq("first line", "second line", "third line"),
       Seq("page two alpha", "page two beta"))
-    val pdf = PdfExtract.makePdf(pages, compress = true, outOfOrderDraw = true)
+    val pdf = PdfFixtures.makePdf(pages, compress = true, outOfOrderDraw = true)
     val r = PdfExtract.extract(pdf)
     assert(r.valid && r.n_pages == 2)
     // the stream draws third/second/first — reading order must win
@@ -43,7 +44,7 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
     assert(!PdfExtract.extract(null).valid)
     assert(!PdfExtract.extract(Array[Byte](1, 2, 3)).valid)
     assert(!PdfExtract.extract("not a pdf at all".getBytes("US-ASCII")).valid)
-    val ok = PdfExtract.makePdf(Seq(Seq("abc def")), compress = true)
+    val ok = PdfFixtures.makePdf(Seq(Seq("abc def")), compress = true)
     // truncate mid-stream: must not throw
     PdfExtract.extract(ok.take(ok.length / 2))
     // corrupt the deflate payload: must not throw
@@ -55,8 +56,8 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
 
   test("golden corpus is deterministic and self-consistent") {
     (0L until 200L).foreach { id =>
-      val (payload, text, np) = PdfExtract.goldenPdf(id)
-      val again = PdfExtract.goldenPdf(id)
+      val (payload, text, np) = PdfFixtures.goldenPdf(id)
+      val again = PdfFixtures.goldenPdf(id)
       assert(java.util.Arrays.equals(payload, again._1))
       val r = PdfExtract.extract(payload)
       assert(r.valid && r.n_pages == np, s"id=$id")
@@ -66,7 +67,7 @@ class PdfSpec extends AnyFunSuite with SparkSuite {
 
   test("extractPdfs: distributed kernel over binary column") {
     import testImplicits._
-    val pdfs = spark.range(0, 60).map(id => (id, PdfExtract.goldenPdf(id)._1))
+    val pdfs = spark.range(0, 60).map(id => (id, PdfFixtures.goldenPdf(id)._1))
       .toDF("id", "payload")
     val out = PdfExtract.extractPdfs(pdfs).collect()
     assert(out.length == 60 && out.forall(_.getBoolean(3)))

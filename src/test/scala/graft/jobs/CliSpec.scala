@@ -168,6 +168,16 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     assert(s.contains("  environment: default"), s)
     assert(s.contains("  note: content below configured minimum threshold"), s)
     assert(s.toLowerCase.contains("warning:"), s)
+    // the printed counts are the committed table's
+    import org.apache.spark.sql.functions._
+    val t = new graft.table.IcebergLite(tbl).read(spark)
+    val rows = t.count()
+    val ok = t.where(col("succeeded")).count()
+    val chars = t.agg(sum(length(col("extracted_text")))).head().getLong(0)
+    assert(rows > 0 && chars > 0)
+    val printed = """rows=(\d+) succeeded=(\d+)""".r.findFirstMatchIn(s).get
+    assert((printed.group(1).toLong, printed.group(2).toLong) == ((rows, ok)), s)
+    assert("""content-characters: (\d+)""".r.findFirstMatchIn(s).get.group(1).toLong == chars, s)
   }
 
   test("extract url: target gets the default https scheme (test_cli.py:55-84)") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import graft.fixtures.MediaFixtures
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,7 +134,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (3L, Array(0.2f, 0.8f, 0f, 0f)),  // cell 1, cos(v2)=0.99 -> dropped
       (4L, Array(0.6f, -0.8f, 0f, 0f))  // cell 0, cos(v0)=0.6, cos(v1)=0.51 -> kept
     ).toDF("vec_id", "embedding")
-    val out = Similarity.semanticDedup(vecs, centroids, threshold = 0.8)
+    val out = Similarity.semanticDedupOnIndex(
+        Similarity.ivfIndex(vecs, centroids), threshold = 0.8)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
     assert(out.toSeq == Seq((0L, 0, true), (1L, 0, false),
@@ -612,17 +614,14 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("multimodal plumbing: decode/resize/frame-sample stubs over binary columns") {
-    val media = spark.range(0, 50).map(id => (id, Multimodal.fakeMedia(id)))
+    val media = spark.range(0, 50).map(id => (id, MediaFixtures.goldenMedia(id)._1))
       .toDF("id", "payload")
     val decoded = Multimodal.decode(media).cache()
     assert(decoded.count() == 50)
     assert(decoded.where(!col("valid")).count() == 0)
-    assert(decoded.select("kind").distinct().count() == 3)
     val resized = Multimodal.aspectFit(decoded, maxSide = 128)
     val bad = resized.where(greatest(col("out_width"), col("out_height")) > 128)
     assert(bad.count() == 0)
-    val frames = Multimodal.frameSampleStub(decoded, stride = 10)
-    assert(frames.count() > 0)
     // corrupt payload → valid=false row, not an exception
     val corrupt = Seq((99L, Array[Byte](1, 2, 3))).toDF("id", "payload")
     val d = Multimodal.decode(corrupt).collect()(0)
@@ -705,7 +704,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("multimodal feature extraction: entropy/zero-ratio/aspect from payload bytes") {
     val media = spark.range(0, 120).map { id =>
-      (id, Multimodal.goldenMedia(id)._1)
+      (id, MediaFixtures.goldenMedia(id)._1)
     }.toDF("id", "payload")
     val f = Multimodal.extractFeatures(media).collect()
     assert(f.length == 120)
@@ -719,7 +718,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // hand-check one known payload: uniform content has higher entropy
     // than the near-empty GIF header
     val gif = Multimodal.extractFeatures(
-      Seq((0L, Multimodal.makeGif(100, 50))).toDF("id", "payload")).collect()(0)
+      Seq((0L, MediaFixtures.makeGif(100, 50))).toDF("id", "payload")).collect()(0)
     assert(math.abs(gif.getDouble(6) - 2.0) < 1e-9) // aspect 100/50
     assert(gif.getInt(3) == 14 || gif.getLong(3) == 14L)
   }
@@ -727,37 +726,37 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   test("real image header kernels: PNG/GIF/JPEG encode→decode round-trip") {
     // PNG color types → channel map
     for ((ct, ch) <- Seq((0, 1), (2, 3), (6, 4))) {
-      val m = Multimodal.decodeMeta(Multimodal.makePng(1234, 567, ct))
+      val m = Multimodal.decodeMeta(MediaFixtures.makePng(1234, 567, ct))
       assert(m.kind == "image" && m.valid, s"png ct=$ct")
       assert((m.width, m.height, m.channels) == ((1234, 567, ch)))
     }
-    val g = Multimodal.decodeMeta(Multimodal.makeGif(320, 200))
+    val g = Multimodal.decodeMeta(MediaFixtures.makeGif(320, 200))
     assert(g.valid && (g.width, g.height, g.channels) == ((320, 200, 3)))
     for (comps <- Seq(1, 3)) {
-      val j = Multimodal.decodeMeta(Multimodal.makeJpeg(640, 480, comps))
+      val j = Multimodal.decodeMeta(MediaFixtures.makeJpeg(640, 480, comps))
       assert(j.valid && (j.width, j.height, j.channels) == ((640, 480, comps)),
         s"jpeg comps=$comps")
     }
     // truncated real headers → invalid rows, never exceptions
     for (payload <- Seq(
-        Multimodal.makePng(10, 10, 2).take(20),
-        Multimodal.makeGif(10, 10).take(9),
-        Multimodal.makeJpeg(10, 10, 3).take(6),
+        MediaFixtures.makePng(10, 10, 2).take(20),
+        MediaFixtures.makeGif(10, 10).take(9),
+        MediaFixtures.makeJpeg(10, 10, 3).take(6),
         Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xd9.toByte))) // JPEG with no frame
       assert(!Multimodal.decodeMeta(payload).valid)
   }
 
   test("real audio/video container headers: WAV and MP4 round-trips") {
-    val w = Multimodal.decodeAvMeta(Multimodal.makeWav(2, 44100, 44100))
+    val w = Multimodal.decodeAvMeta(MediaFixtures.makeWav(2, 44100, 44100))
     assert(w.valid && w.kind == "audio")
     assert(w.channels == 2 && w.sample_rate == 44100 && w.duration_ms == 1000)
-    val m = Multimodal.decodeAvMeta(Multimodal.makeMp4(600, 1800, 2))
+    val m = Multimodal.decodeAvMeta(MediaFixtures.makeMp4(600, 1800, 2))
     assert(m.valid && m.kind == "video")
     assert(m.duration_ms == 3000 && m.n_tracks == 2)
     // garbage/truncation → invalid rows, never exceptions
     assert(!Multimodal.decodeAvMeta(Array[Byte](1, 2, 3)).valid)
-    assert(!Multimodal.decodeAvMeta(Multimodal.makeWav(1, 8000, 100).take(20)).valid)
-    assert(!Multimodal.decodeAvMeta(Multimodal.makeMp4(600, 600, 1).take(25)).valid)
+    assert(!Multimodal.decodeAvMeta(MediaFixtures.makeWav(1, 8000, 100).take(20)).valid)
+    assert(!Multimodal.decodeAvMeta(MediaFixtures.makeMp4(600, 600, 1).take(25)).valid)
     // adversarial chunk/box sizes must terminate (not wedge the task):
     // a RIFF chunk size of 0xFFFFFFF8 once truncated to a zero step in
     // Int arithmetic and hung the walk forever
@@ -790,7 +789,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(!Multimodal.decodeAvMeta(moovBad).valid)
     // corpus: deterministic, kernel re-derives the truth columns
     (0L until 200L).foreach { id =>
-      val (payload, kind, ch, sr, dur, tracks) = Multimodal.goldenAv(id)
+      val (payload, kind, ch, sr, dur, tracks) = MediaFixtures.goldenAv(id)
       val r = Multimodal.decodeAvMeta(payload)
       assert(r.valid, s"id=$id")
       assert((r.kind, r.channels, r.sample_rate, r.duration_ms, r.n_tracks) ==
@@ -800,8 +799,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("PNG pixel path: encode -> decode recovers exact pixels; resize is deterministic") {
     (0L until 60L).foreach { id =>
-      val img = Multimodal.goldenPixels(id)
-      val png = Multimodal.makePngPixels(img, Multimodal.goldenColorType(id))
+      val img = MediaFixtures.goldenPixels(id)
+      val png = MediaFixtures.makePngPixels(img, MediaFixtures.goldenColorType(id))
       val back = Multimodal.decodePngPixels(png)
       assert(back.isDefined, s"id=$id failed to decode")
       val d = back.get
@@ -824,15 +823,15 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // corrupt/truncated payloads: None, never an exception
     assert(Multimodal.decodePngPixels(null).isEmpty)
     assert(Multimodal.decodePngPixels(Array[Byte](1, 2, 3)).isEmpty)
-    val full = Multimodal.makePngPixels(Multimodal.goldenPixels(1), Multimodal.goldenColorType(1))
+    val full = MediaFixtures.makePngPixels(MediaFixtures.goldenPixels(1), MediaFixtures.goldenColorType(1))
     assert(Multimodal.decodePngPixels(full.take(full.length / 2)).isEmpty)
     // palette PNGs are out of scope -> None (valid=false rows downstream)
-    assert(Multimodal.decodePngPixels(Multimodal.makePng(10, 10, 3)).isEmpty)
+    assert(Multimodal.decodePngPixels(MediaFixtures.makePng(10, 10, 3)).isEmpty)
   }
 
   test("GIF pixel path: LZW encode -> decode recovers exact palette-mapped RGB") {
     (300L until 360L).foreach { id =>
-      val (payload, truth) = Multimodal.goldenGif(id)
+      val (payload, truth) = MediaFixtures.goldenGif(id)
       val back = Multimodal.decodeGifPixels(payload)
       assert(back.isDefined, s"id=$id failed to decode")
       val d = back.get
@@ -843,7 +842,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // a big uniform image forces dictionary overflow + CLEAR mid-stream
     val flat = Array.fill[Byte](200 * 200)(7)
     val pal = Array.tabulate[Byte](768)(i => (i * 11).toByte)
-    val gif = Multimodal.makeGifPixels(200, 200, flat, pal)
+    val gif = MediaFixtures.makeGifPixels(200, 200, flat, pal)
     val dec = Multimodal.decodeGifPixels(gif)
     assert(dec.isDefined && dec.get.width == 200)
     assert(dec.get.pixels(0) == pal(21) && dec.get.pixels(1) == pal(22) && dec.get.pixels(2) == pal(23))
@@ -851,16 +850,16 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // sniffer routes both formats; garbage stays None
     assert(Multimodal.decodePixels(gif).isDefined)
     assert(Multimodal.decodePixels(
-      Multimodal.makePngPixels(Multimodal.goldenPixels(2), Multimodal.goldenColorType(2))).isDefined)
+      MediaFixtures.makePngPixels(MediaFixtures.goldenPixels(2), MediaFixtures.goldenColorType(2))).isDefined)
     assert(Multimodal.decodePixels(Array[Byte](9, 9, 9, 9, 9, 9)).isEmpty)
     assert(Multimodal.decodeGifPixels(gif.take(gif.length / 2)).isEmpty)
     // header-only GIFs (no image data) are metadata-valid but pixel-None
-    assert(Multimodal.decodeGifPixels(Multimodal.makeGif(10, 10)).isEmpty)
+    assert(Multimodal.decodeGifPixels(MediaFixtures.makeGif(10, 10)).isEmpty)
   }
 
   test("animated GIF: every frame round-trips; frameSample keeps the stride") {
     (0L until 30L).foreach { id =>
-      val (payload, truth) = Multimodal.goldenAnimGif(id)
+      val (payload, truth) = MediaFixtures.goldenAnimGif(id)
       val frames = Multimodal.decodeGifFrames(payload)
       assert(frames.isDefined, s"id=$id failed to decode")
       assert(frames.get.length == truth.length, s"id=$id frame count")
@@ -869,11 +868,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       }
     }
     // sampling semantics over the DataFrame kernel
-    val media = Seq((7L, Multimodal.goldenAnimGif(7L)._1),
+    val media = Seq((7L, MediaFixtures.goldenAnimGif(7L)._1),
       (9L, Array[Byte](1, 2, 3))).toDF("id", "payload")
     val out = Multimodal.frameSample(media, stride = 2)
       .orderBy("id", "frame_idx").collect()
-    val nTruth = Multimodal.goldenAnimGif(7L)._2.length
+    val nTruth = MediaFixtures.goldenAnimGif(7L)._2.length
     val sampled = out.filter(_.getLong(0) == 7L)
     assert(sampled.forall(_.getBoolean(6)))
     assert(sampled.map(_.getInt(1)).toSeq == (0 until nTruth by 2).toSeq)
@@ -881,12 +880,12 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val bad = out.filter(_.getLong(0) == 9L)
     assert(bad.length == 1 && !bad(0).getBoolean(6))
     // single-frame view still works through decodeGifPixels
-    assert(Multimodal.decodeGifPixels(Multimodal.goldenAnimGif(3L)._1).isDefined)
+    assert(Multimodal.decodeGifPixels(MediaFixtures.goldenAnimGif(3L)._1).isDefined)
   }
 
   test("JPEG pixel path: huffman/DCT round-trip equals coefficient-derived truth") {
     (500L until 540L).foreach { id =>
-      val (payload, truth) = Multimodal.goldenJpeg(id)
+      val (payload, truth) = MediaFixtures.goldenJpeg(id)
       val back = Jpeg.decode(payload)
       assert(back.isDefined, s"id=$id failed to decode")
       val d = back.get
@@ -896,7 +895,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     }
     // and the decoded image is CLOSE to the source (lossy, but smooth
     // gradients should survive quantization within a small error)
-    val (payload, _) = Multimodal.goldenJpeg(500L)
+    val (payload, _) = MediaFixtures.goldenJpeg(500L)
     val dec = Jpeg.decode(payload).get
     // regenerate the source pixels exactly as goldenJpeg does
     var h = 500L * 0x9e3779b97f4a7c15L
@@ -920,14 +919,14 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(Jpeg.decode(payload.take(payload.length / 2)).isEmpty)
     assert(Jpeg.decode(Array[Byte](0xff.toByte, 0xd8.toByte, 1, 2, 3)).isEmpty)
     // header-only JPEGs (no scan) are metadata-valid but pixel-None
-    assert(Jpeg.decode(Multimodal.makeJpeg(32, 32, 3)).isEmpty)
+    assert(Jpeg.decode(MediaFixtures.makeJpeg(32, 32, 3)).isEmpty)
     assert(Multimodal.decodePixels(payload).isDefined) // sniffer routes
   }
 
   test("goldenMedia corpus: deterministic, kernel re-derives the truth columns") {
     val rows = (0L until 300L).map { id =>
-      val (payload, w, h, ch) = Multimodal.goldenMedia(id)
-      val again = Multimodal.goldenMedia(id)
+      val (payload, w, h, ch) = MediaFixtures.goldenMedia(id)
+      val again = MediaFixtures.goldenMedia(id)
       assert(java.util.Arrays.equals(payload, again._1)) // bit-stable
       val m = Multimodal.decodeMeta(payload)
       assert(m.valid && m.kind == "image", s"id=$id")

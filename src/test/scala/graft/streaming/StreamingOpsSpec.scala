@@ -97,6 +97,35 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("streaming incremental dedup deletes its work dir; the returned pairs outlive it") {
+    import testImplicits._
+    def pairsOf(df: org.apache.spark.sql.DataFrame) = df
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(p => (p._1, p._2)).toSeq
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def workDirs(): Int =
+      Option(tmp.list()).fold(0)(_.count(_.startsWith("graft-stream-inc")))
+    // each new doc (doc_id % 5 == 0) repeats the next doc's text; other
+    // docs share no word
+    val docs = (0L until 100L).map { id =>
+      val k = if (id % 5 == 0) id + 1 else id
+      (id, (0 until 12).map(w => s"w${k * 31 + w * 7}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("stream-inc-docs")
+    try {
+      docs.write.mode("overwrite").parquet(dir.toString)
+      val before = workDirs()
+      val pairs = pairsOf(StreamingOps.streamIncrementalDedup(spark, dir.toString, nBatches = 2))
+      assert(workDirs() == before, "graft-stream-inc dir left behind")
+      val isNew = pmod(col("doc_id"), lit(5)) === 0
+      val oneShot = pairsOf(graft.ops.Dedup.incrementalNearDupPairs(
+        graft.ops.Dedup.lshBandIndex(docs.where(!isNew), 64, 32, 3),
+        docs.where(!isNew), docs.where(isNew),
+        threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3))
+      assert(pairs.length == 20 && pairs == oneShot)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("stateful sessionization (flatMapGroupsWithState) matches batch sessions past the watermark") {
     val sfDir = "/root/testdata/sf0.001"
     val gapMs = 30L * 60 * 1000
