@@ -10,9 +10,6 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    // lets self-sizing oracles (neardup_lsh planes, dedup_semantic
-    // centroids) derive their inlined literals from the live tier
-    sys.props("graft.sf.dir") = sfDir
     val spark = graft.util.Sessions.local(graft.util.Sessions.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq
@@ -39,7 +36,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -216,7 +216,11 @@ object Cli {
             .map { case ((ci, text), v) => (ci, text, v) })
           .toDF("chunk_index", "chunk_text", "embedding")
         embedded.write.mode("overwrite").parquet(outPath)
-        val n = spark.read.parquet(outPath).count()
+        val conf = spark.sparkContext.hadoopConfiguration
+        val out = new org.apache.hadoop.fs.Path(outPath)
+        val n = out.getFileSystem(conf).listStatus(out)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .map(graft.table.IcebergLite.footerRows(_, conf)).sum
         println(s"embed: chunks=$n dimension=${embedder.dim} saved_to=$outPath")
         spark.stop()
 

@@ -1,7 +1,7 @@
 package graft.rag
 
 import graft.functions.VectorExpr
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One vector-index row (core/rag/stores/base.py:11-23 → typed).
@@ -36,28 +36,6 @@ object IndexDoc {
   * shuffle of the full index.
   */
 object Rag {
-
-  /** chunks(url, chunk_index, chunk_text[, title]) → index rows.
-    * Embedding runs in mapPartitions with a per-partition embedder
-    * handle and reference-style batching ([[Embedder.embedRows]]) — the
-    * pooled-model pattern (sentence_transformer.py:28-48).
-    */
-  def buildIndex(chunks: DataFrame, embedder: Embedder = new DeterministicHashEmbedder()): Dataset[IndexDoc] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val withTitle =
-      if (chunks.columns.contains("title")) chunks
-      else chunks.withColumn("title", lit(null).cast("string"))
-    withTitle
-      .select(col("url"), col("chunk_index").cast("int"), col("chunk_text"),
-        col("title"))
-      .as[(String, Int, String, String)]
-      .mapPartitions { it =>
-        embedder.embedRows(it)(_._3).map { case ((url, ci, text, title), v) =>
-          IndexDoc(IndexDoc.chunkId(url, ci), text, v, url, ci, title)
-        }
-      }
-  }
 
   /** Cosine top-k search (core/rag/stores/file_store.py:82-127).
     *

@@ -242,8 +242,8 @@ object Warc {
     else java.util.Arrays.copyOfRange(payload, end + 4, payload.length)
   }
 
-  /** WARC ingestion source: a directory of `.warc.gz` files → a pages
-    * DataFrame `(url, warc_ts, html, warc_file, succeeded,
+  /** WARC ingestion source: `.warc.gz` files or directories of them → a
+    * pages DataFrame `(url, warc_ts, html, warc_file, succeeded,
     * failure_reason)` feeding the extraction cascade — the real
     * Common-Crawl entry point. Built on Spark's binaryFile source (one
     * task per file; at Common-Crawl's ~1 GB-per-file layout that is the
@@ -251,11 +251,11 @@ object Warc {
     * boundaries would be the next step if files were larger). Parse
     * failures are rows; non-page record types are dropped.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
+  def read(spark: SparkSession, paths: String*): DataFrame = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.warc.gz")
-      .load(dir)
+      .load(paths: _*)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (path, bytes) =>
@@ -378,17 +378,23 @@ object Warc {
       .toDF("url", "warc_ts", "html", "warc_file", "succeeded", "failure_reason")
   }
 
-  /** The production entry point: member-split read when sidecar indexes
-    * exist (building any missing ones first — a one-time cost per
-    * archive, like cdx generation), falling back to the whole-file
-    * reader for an unindexable corpus.
+  /** The production entry point: member-split read of the archives that
+    * have a sidecar index (building any missing ones first — a one-time
+    * cost per archive, like cdx generation), unioned with the whole-file
+    * read of the archives that cannot be indexed (a framing error), so
+    * their valid members and their error rows are kept.
     */
   def readAuto(spark: SparkSession, dir: String): DataFrame = {
     writeMemberIndexes(spark, dir)
-    val hasIdx =
-      try !spark.read.textFile(s"$dir/*.warc.gz$IndexSuffix").isEmpty
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (hasIdx) readIndexed(spark, dir) else read(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val names = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).map(_.getPath.getName).toSet
+    val unindexed = names.toSeq.sorted
+      .filter(n => n.endsWith(".warc.gz") && !names(n + IndexSuffix))
+      .map(n => new org.apache.hadoop.fs.Path(p, n).toString)
+    if (!names.exists(_.endsWith(".warc.gz" + IndexSuffix))) read(spark, dir)
+    else if (unindexed.isEmpty) readIndexed(spark, dir)
+    else readIndexed(spark, dir).union(read(spark, unindexed: _*))
   }
 
   /** CDX-style record index construction with POINT-READ verification —

@@ -252,7 +252,7 @@ object IcebergLite {
     * take the caller's conf: the default options build a fresh Hadoop
     * configuration per file, which measured about 10x the footer read.
     */
-  private def footerRows(file: FileStatus, conf: Configuration): Long = {
+  private[graft] def footerRows(file: FileStatus, conf: Configuration): Long = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
       HadoopReadOptions.builder(conf).build())
     try reader.getRecordCount finally reader.close()

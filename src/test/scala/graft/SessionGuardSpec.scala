@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * hand-built sessions are how the mains' and suites' configs drifted
   * apart. Main code names no absolute checkout path: it resolves
   * project files against the working directory. Fixture generators
-  * live in test code (`graft.fixtures`), not beside the decoders.
+  * live in test code (`graft.fixtures`), not beside the decoders. No
+  * process-wide state passes arguments: an oracle gets its tier as a
+  * parameter, not through a system property or the active session.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -33,6 +35,12 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("main code names no absolute checkout path") {
     val hits = sourcesContaining("src/main", Seq("", "root", "repo").mkString("/"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("main code sets no JVM system property and looks up no active session") {
+    val global = """sys\.props\([^)]*\)\s*=|System\.setProperty|getActiveSession""".r
+    val hits = sourcesWhere("src/main")(global.findFirstIn(_).isDefined)
     assert(hits.isEmpty, hits.mkString(", "))
   }
 

@@ -19,12 +19,18 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     val body = (1 to 60).map(i => s"Sentence number $i about spark tables and rows.").mkString(" ")
     Files.writeString(txt, body)
     val out = work.resolve("embeddings_out").toString
-    Cli.main(Array("embed", txt.toString, out, "--chunk-size", "200"))
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      Cli.main(Array("embed", txt.toString, out, "--chunk-size", "200"))
+    }
 
     val df = spark.read.parquet(out)
     assert(df.columns.toSet == Set("chunk_index", "chunk_text", "embedding"))
     val rows = df.count()
     assert(rows > 1) // 60 sentences at chunk 200 → several chunks
+    // the printed count comes from the written files' footers
+    assert("""chunks=(\d+)""".r.findFirstMatchIn(printed.toString).map(_.group(1).toLong)
+      .contains(rows), printed.toString)
     import org.apache.spark.sql.functions._
     assert(df.where(size(col("embedding")) =!= 384).count() == 0)
   }

@@ -1,6 +1,8 @@
 package graft.jobs
 
 import graft.SparkSuite
+import graft.extract.Extract
+import graft.text.{ChunkConfig, Chunker}
 import graft.table.{IcebergLite, SyntheticPages}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +17,10 @@ class RagJobsSpec extends AnyFunSuite with SparkSuite {
     assert(!idx.queryExecution.executedPlan.toString.contains("Exchange"))
     val rows = idx.collect()
     assert(rows.nonEmpty)
+    // one row per chunk of each successfully extracted page
+    val chunks = Extract.extractPages(pages).filter(_.succeeded).collect()
+      .map(e => Chunker.chunkWithMeta(e.extracted_text, ChunkConfig()).length).sum
+    assert(rows.length == chunks && rows.map(_.id).distinct.length == chunks)
     assert(rows.forall(_.embedding.length == 384))
     assert(rows.forall(r => r.id == r.url.replace('/', '_').replace(':', '_') +
       "_chunk_" + r.chunk_index))

@@ -86,18 +86,10 @@ class RagSpec extends AnyFunSuite with SparkSuite {
     assert(cos(a, near) > cos(a, far))
   }
 
-  test("buildIndex: ids follow the reference scheme, one row per chunk") {
-    val chunks = Seq(
-      ("https://h.example/a", 0, "first chunk text"),
-      ("https://h.example/a", 1, "second chunk text"),
-      ("https://h.example/b", 0, "other doc")
-    ).toDF("url", "chunk_index", "chunk_text")
-    val idx = Rag.buildIndex(chunks).collect()
-    assert(idx.length == 3)
-    val ids = idx.map(_.id).toSet
-    assert(ids.contains("https___h.example_a_chunk_0"))
-    assert(ids.contains("https___h.example_a_chunk_1"))
-    assert(idx.forall(_.embedding.length == 384))
+  test("IndexDoc.chunkId: ids follow the reference scheme") {
+    assert(IndexDoc.chunkId("https://h.example/a", 0) == "https___h.example_a_chunk_0")
+    assert(IndexDoc.chunkId("https://h.example/a", 1) == "https___h.example_a_chunk_1")
+    assert(IndexDoc.chunkId("https://h.example/b", 0) == "https___h.example_b_chunk_0")
   }
 
   test("upsert: dim-mismatched rows skipped, incoming id replaces existing") {

@@ -27,17 +27,19 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
     def staged(): Int =
       Option(tmp.list()).fold(0)(_.count(_.startsWith("graft-stream-src")))
     val dir = Files.createTempDirectory("stream-lone-src")
-    spark.range(20).select(
-        expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, cast(id as int))").as("ts"),
-        when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
-        col("id").cast("double").as("value"))
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val lone = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get
-    val before = staged()
-    val rows = StreamingOps.windowedEventCounts(spark, lone.toString, "spec_events_staged")
-      .collect()
-    assert(rows.map(_.getAs[Long]("n")).sum == 20)
-    assert(staged() == before, "graft-stream-src dir left behind")
+    try {
+      spark.range(20).select(
+          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, cast(id as int))").as("ts"),
+          when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
+          col("id").cast("double").as("value"))
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      val lone = Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get
+      val before = staged()
+      val rows = StreamingOps.windowedEventCounts(spark, lone.toString, "spec_events_staged")
+        .collect()
+      assert(rows.map(_.getAs[Long]("n")).sum == 20)
+      assert(staged() == before, "graft-stream-src dir left behind")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("stream-stream interval join equals the batch join") {
@@ -166,26 +168,28 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming extraction: incremental files, checkpointed resume, no reprocessing") {
-    val pagesDir = Files.createTempDirectory("stream-pages").toString
-    val outDir = Files.createTempDirectory("stream-out").toString + "/data"
-    val ckDir = Files.createTempDirectory("stream-ck").toString
+    val work = Seq("stream-pages", "stream-out", "stream-ck").map(Files.createTempDirectory(_))
+    val pagesDir = work(0).toString
+    val outDir = work(1).toString + "/data"
+    val ckDir = work(2).toString
+    try {
+      // batch 1 arrives
+      SyntheticPages.generate(spark, 100, partitions = 2).toDF()
+        .write.mode("append").parquet(pagesDir)
+      StreamingOps.streamingExtract(spark, pagesDir, outDir, ckDir)
+      val n1 = spark.read.parquet(outDir).count()
+      assert(n1 == 100)
 
-    // batch 1 arrives
-    SyntheticPages.generate(spark, 100, partitions = 2).toDF()
-      .write.mode("append").parquet(pagesDir)
-    StreamingOps.streamingExtract(spark, pagesDir, outDir, ckDir)
-    val n1 = spark.read.parquet(outDir).count()
-    assert(n1 == 100)
-
-    // batch 2 arrives; restart processes ONLY the new files
-    SyntheticPages.generate(spark, 50, partitions = 2).toDF()
-      .withColumn("url", concat(lit("b2-"), col("url")))
-      .write.mode("append").parquet(pagesDir)
-    StreamingOps.streamingExtract(spark, pagesDir, outDir, ckDir)
-    val out = spark.read.parquet(outDir)
-    assert(out.count() == 150)
-    assert(out.where(col("url").startsWith("b2-")).count() == 50)
-    // no duplicates — exactly-once sink semantics
-    assert(out.select("url").distinct().count() == 150)
+      // batch 2 arrives; restart processes ONLY the new files
+      SyntheticPages.generate(spark, 50, partitions = 2).toDF()
+        .withColumn("url", concat(lit("b2-"), col("url")))
+        .write.mode("append").parquet(pagesDir)
+      StreamingOps.streamingExtract(spark, pagesDir, outDir, ckDir)
+      val out = spark.read.parquet(outDir)
+      assert(out.count() == 150)
+      assert(out.where(col("url").startsWith("b2-")).count() == 50)
+      // no duplicates — exactly-once sink semantics
+      assert(out.select("url").distinct().count() == 150)
+    } finally work.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
   }
 }
