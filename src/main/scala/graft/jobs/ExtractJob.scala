@@ -238,7 +238,8 @@ object ExtractJob {
     val t0 = System.nanoTime()
     val ran = runUnits(spark, unitPages, out, cfg)
     val sec = (System.nanoTime() - t0) / 1e9
-    val total = out.read(spark).count()
+    // the committed manifests' rows, units of earlier (resumed) runs included
+    val total = out.manifest(spark).select("rows").collect().map(_.getString(0).toLong).sum
     println(f"extract-job: units_run=${ran.size} total_rows=$total " +
       f"wall=$sec%.2fs docs_per_sec=${total / sec}%.1f")
     spark.stop()

@@ -11,11 +11,14 @@ object ExtractionQueries {
   val all: Seq[Query] = Seq(
     Query("cascade_extract", (s, dir) => {
       val pages = graft.table.SyntheticPages.generate(s, pagesFor(dir))
+      // the narrow result is held before the sort: the sort's range
+      // sampling would otherwise run the cascade once more
       graft.extract.Extract.extractPages(pages.toDF())
         .toDF()
         .select(col("url"), col("strategy_used"), col("succeeded"),
           col("partial"), length(col("extracted_text")).as("text_len"),
           col("title"), col("failure_reason"))
+        .localCheckpoint(eager = true)
         .orderBy(col("url"))
     },
       ("SELECT url, strategy_used, succeeded, partial, text_len, title, failure_reason " +
@@ -26,18 +29,22 @@ object ExtractionQueries {
       // the streaming-extraction leg of the north rule: the SAME pages
       // flow through readStream → cascade → exactly-once checkpointed
       // parquet sink; the result must equal the batch cascade, so it
-      // shares cascade_extract's golden oracle
+      // shares cascade_extract's golden oracle. The narrow result is held
+      // in the block manager so the work dir can go before returning.
       val pages = graft.table.SyntheticPages.generate(s, pagesFor(dir))
       val work = java.nio.file.Files.createTempDirectory("se-stream-extract")
-      val pagesDir = s"$work/pages"
-      pages.toDF().write.mode("overwrite").parquet(pagesDir)
-      graft.streaming.StreamingOps.streamingExtract(
-        s, pagesDir, s"$work/out", s"$work/ck")
-      s.read.parquet(s"$work/out")
-        .select(col("url"), col("strategy_used"), col("succeeded"),
-          col("partial"), length(col("extracted_text")).as("text_len"),
-          col("title"), col("failure_reason"))
-        .orderBy(col("url"))
+      val held = try {
+        val pagesDir = s"$work/pages"
+        pages.toDF().write.mode("overwrite").parquet(pagesDir)
+        graft.streaming.StreamingOps.streamingExtract(
+          s, pagesDir, s"$work/out", s"$work/ck")
+        s.read.parquet(s"$work/out")
+          .select(col("url"), col("strategy_used"), col("succeeded"),
+            col("partial"), length(col("extracted_text")).as("text_len"),
+            col("title"), col("failure_reason"))
+          .localCheckpoint(eager = true)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
+      held.orderBy(col("url"))
     },
       // streaming extraction must equal the batch cascade — same golden
       ("SELECT url, strategy_used, succeeded, partial, text_len, title, failure_reason " +

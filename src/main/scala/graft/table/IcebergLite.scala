@@ -1,12 +1,15 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table layout over Parquet, implemented thin (no
   * Iceberg jar ships in this sandbox — SURVEY.md §4 note): data files
@@ -32,6 +35,10 @@ import java.nio.charset.StandardCharsets
   * reads them from the written files (row counts from the parquet
   * footers), so they are exact under task retries and no caller runs a
   * count job.
+  *
+  * Readers run no Spark job: [[read]] and [[readAt]] take the schema
+  * from one parquet footer on the driver, and [[manifest]] parses the
+  * manifest files on the driver.
   *
   * Uses the Hadoop FileSystem API throughout, so the same code runs on
   * HDFS/S3A on a real cluster.
@@ -110,7 +117,7 @@ final class IcebergLite(val root: String) extends Serializable {
     val latest = latestOf(entries)
     val next = nextVersion(latest, unit)
     val written = f.listStatus(new Path(dataPath(unit, next)))
-      .filter(_.getPath.getName.endsWith(".parquet"))
+      .filter(s => isDataFile(s.getPath.getName))
     val conf = spark.sparkContext.hadoopConfiguration
     val rows = written.map(footerRows(_, conf)).sum
     val fields = metrics ++ Map(
@@ -173,18 +180,40 @@ final class IcebergLite(val root: String) extends Serializable {
   private def snapshotState(f: FileSystem, id: Int): Seq[(Int, Int)] = {
     val p = snapshotPath(id)
     require(f.exists(p), s"no snapshot $id under $root")
-    val in = f.open(p)
-    val json = new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    in.close()
-    "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(json)
+    "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(readText(f, p))
       .map(m => (m.group(1).toInt, m.group(2).toInt)).toSeq.sorted
   }
 
-  /** Read the given (unit, version) data dirs as one table. */
-  private def readVersions(spark: SparkSession, state: Seq[(Int, Int)]): DataFrame =
-    spark.read
+  /** Read the given (unit, version) data dirs as one table. The schema
+    * is the one Spark's inference would find, built on the driver: the
+    * data columns from the footer of the state's first data file (the
+    * first of the lowest (unit, version), the one file inference opens)
+    * and the `unit` partition column. With the schema given, the read
+    * starts no job; listing the dirs stays on the driver up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths.
+    */
+  private def readVersions(spark: SparkSession, state: Seq[(Int, Int)]): DataFrame = {
+    val f = fs(spark)
+    val dirs = state.sorted.map { case (u, v) => new Path(dataPath(u, v)) }
+    val first = dirs.iterator.filter(f.exists).map { d =>
+      f.listStatus(d).filter(s => s.isFile && isDataFile(s.getPath.getName))
+        .sortBy(_.getPath.getName).headOption
+    }.collectFirst { case Some(file) => file }
+    val data = first match {
+      case Some(file) => footerSchema(file, spark.sparkContext.hadoopConfiguration)
+      case None =>
+        // the errors a parquet read without a schema raises when it has no file
+        dirs.find(!f.exists(_)).foreach { d =>
+          throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> f.makeQualified(d).toString))
+        }
+        throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
+    }
+    // Spark reads the partition column from the paths, never the files
+    val schema = StructType(data.filterNot(_.name == "unit")).add("unit", IntegerType)
+    spark.read.schema(schema)
       .option("basePath", s"$root/data")
-      .parquet(state.map { case (u, v) => dataPath(u, v) }: _*)
+      .parquet(dirs.map(_.toString): _*)
+  }
 
   /** TIME TRAVEL: read the table exactly as of snapshot `id` — the
     * (unit, version) data files that snapshot committed, regardless of
@@ -223,13 +252,22 @@ final class IcebergLite(val root: String) extends Serializable {
   }
 
   /** The manifest itself as a DataFrame (per-unit lineage + metrics),
-    * latest version per unit.
+    * latest version per unit, one row per unit in unit order. The files
+    * are parsed on the driver into a local frame of the shape JSON
+    * inference gives them: one string column per key, sorted by name,
+    * null where a unit lacks the key.
     */
   def manifest(spark: SparkSession): DataFrame = {
-    val latest = latestVersions(fs(spark)).toSeq.sorted
-      .map { case (u, v) => manifestPath(u, v).toString }
+    val f = fs(spark)
+    val latest = latestVersions(f).toSeq.sorted
     require(latest.nonEmpty, s"no committed units under $root")
-    spark.read.json(latest: _*)
+    val entries = latest.map { case (u, v) =>
+      Json.readValue(readText(f, manifestPath(u, v)), classOf[java.util.Map[String, String]]).asScala
+    }
+    val cols = entries.flatMap(_.keys).distinct.sorted
+    spark.createDataFrame(
+      entries.map(e => Row.fromSeq(cols.map(e.getOrElse(_, null)))).asJava,
+      StructType(cols.map(StructField(_, StringType))))
   }
 
   def drop(spark: SparkSession): Unit = {
@@ -240,6 +278,19 @@ final class IcebergLite(val root: String) extends Serializable {
 
 object IcebergLite {
   private val ManifestName = "unit-(\\d+)-v(\\d+)\\.json".r
+  private val Json = new ObjectMapper()
+
+  /** The Spark schema a Spark-written parquet file records in its footer. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** A file Spark reads as data: not hidden (`_SUCCESS`, `.crc`). */
+  private def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 
   private def latestOf(entries: Seq[(Int, Int)]): Map[Int, Int] =
     entries.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).max }
@@ -248,13 +299,24 @@ object IcebergLite {
   private def nextVersion(latest: Map[Int, Int], unit: Int): Int =
     latest.get(unit).fold(1)(_ + 1)
 
-  /** Row count of one parquet file, from its footer. The read options
-    * take the caller's conf: the default options build a fresh Hadoop
-    * configuration per file, which measured about 10x the footer read.
+  /** Open one parquet file's footer. The read options take the caller's
+    * conf: the default options build a fresh Hadoop configuration per
+    * file, which measured about 10x the footer read.
     */
-  private[graft] def footerRows(file: FileStatus, conf: Configuration): Long = {
+  private def withFooter[T](file: FileStatus, conf: Configuration)(f: ParquetFileReader => T): T = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
       HadoopReadOptions.builder(conf).build())
-    try reader.getRecordCount finally reader.close()
+    try f(reader) finally reader.close()
   }
+
+  /** Row count of one parquet file, from its footer. */
+  private[graft] def footerRows(file: FileStatus, conf: Configuration): Long =
+    withFooter(file, conf)(_.getRecordCount)
+
+  /** The Spark schema of one Spark-written parquet file, from its footer. */
+  private def footerSchema(file: FileStatus, conf: Configuration): StructType =
+    withFooter(file, conf)(_.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)) match {
+      case null => sys.error(s"${file.getPath} has no Spark schema in its parquet footer")
+      case json => DataType.fromJson(json).asInstanceOf[StructType]
+    }
 }

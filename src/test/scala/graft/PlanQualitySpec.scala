@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Catalyst plan-quality gates (the SURVEY.md §4 design rule: cheap
   * predicates stay BEFORE opaque kernels so pushdown/pruning reach the
   * parquet scan). These assertions fail if a refactor accidentally
   * hides a filter behind a mapPartitions or widens a scan.
   */
-class PlanQualitySpec extends AnyFunSuite with SparkSuite {
+class PlanQualitySpec extends AnyFunSuite with SparkSuite with TempDirs {
 
-  private lazy val pagesPath: String = {
-    val dir = Files.createTempDirectory("plan-pages").toString
+  /** 300 synthetic pages as parquet, in a dir that lives as long as the test. */
+  private def pagesPath: String = {
+    val dir = tempDir("plan-pages").toString
     graft.table.SyntheticPages.generate(spark, 300, partitions = 4)
       .toDF().write.mode("overwrite").parquet(dir)
     dir

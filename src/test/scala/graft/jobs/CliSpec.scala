@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -11,10 +11,10 @@ import java.nio.file.Files
   * Cli.main builds and stops its own session; `spark` starts a fresh
   * one after it.
   */
-class CliSpec extends AnyFunSuite with SparkSuite {
+class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("embed verb: text file → chunked + embedded parquet") {
-    val work = Files.createTempDirectory("cli-embed")
+    val work = tempDir("cli-embed")
     val txt = work.resolve("input.txt")
     val body = (1 to 60).map(i => s"Sentence number $i about spark tables and rows.").mkString(" ")
     Files.writeString(txt, body)
@@ -36,7 +36,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("embed verb: pre-chunked parquet without chunk_index gets a distributed id (no global sort)") {
-    val work = Files.createTempDirectory("cli-embed-prechunked")
+    val work = tempDir("cli-embed-prechunked")
     import testImplicits._
     val in = work.resolve("chunks_in").toString
     (1 to 200).map(i => s"pre-chunked text body number $i")
@@ -59,7 +59,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extract verb: cache-free staged input, unit-partitioned resume table") {
-    val work = Files.createTempDirectory("cli-extract")
+    val work = tempDir("cli-extract")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:200", out, "--units", "2"))
     val t = new graft.table.IcebergLite(out)
@@ -72,7 +72,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extract verb: a one-file parquet source is staged as several files per unit") {
-    val work = Files.createTempDirectory("cli-extract-one-file")
+    val work = tempDir("cli-extract-one-file")
     val src = work.resolve("pages.parquet").toString
     graft.table.SyntheticPages.generate(spark, 200).toDF().coalesce(1).write.parquet(src)
     val out = work.resolve("table").toString
@@ -86,7 +86,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extract verb: warc: source ingests .warc.gz files end to end") {
-    val work = Files.createTempDirectory("cli-extract-warc")
+    val work = tempDir("cli-extract-warc")
     val warcDir = work.resolve("crawl")
     Files.createDirectories(warcDir)
     val pages = (0L until 50L).map(id => graft.table.SyntheticPages.pageFor(42L, id))
@@ -106,7 +106,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   test("extract verb: empty units (xxhash mod leaves gaps) commit zero rows, not a crash") {
     // 3 pages over 8 units → at least 5 units have no hive directory;
     // each must read as empty and still commit for idempotent resume
-    val work = Files.createTempDirectory("cli-extract-empty")
+    val work = tempDir("cli-extract-empty")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:3", out, "--units", "8"))
     val t = new graft.table.IcebergLite(out)
@@ -115,7 +115,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extract verb: --extractors reorders the cascade through the layered config") {
-    val work = Files.createTempDirectory("cli-extract-cfg")
+    val work = tempDir("cli-extract-cfg")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:100", out,
       "--extractors", "http", "--min-length", "10"))
@@ -132,7 +132,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     Console.withOut(new java.io.PrintStream(out)) { Cli.main(Array("--version")) }
     assert(out.toString.trim == Cli.Version)
 
-    val work = Files.createTempDirectory("cli-async")
+    val work = tempDir("cli-async")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "synth:60", tbl, "--async", "--min-length", "10"))
     import org.apache.spark.sql.functions._
@@ -159,7 +159,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("extract epilogue: completion line, threshold note + warning echo (test_cli.py:46,87-118)") {
-    val work = Files.createTempDirectory("cli-epilogue")
+    val work = tempDir("cli-epilogue")
     val tbl = work.resolve("table").toString
     val out = new java.io.ByteArrayOutputStream()
     // min-length far above any synthetic page's text: every success is
@@ -195,7 +195,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     // end-to-end: single-target mode stages the NORMALIZED url; with no
     // fetcher in the sandbox the row surfaces as the reference's
     // fetch-failure reason row (errors as data)
-    val work = Files.createTempDirectory("cli-url")
+    val work = tempDir("cli-url")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "url:example.com/article", tbl, "--units", "1"))
     val rows = new graft.table.IcebergLite(tbl).read(spark)
@@ -206,7 +206,7 @@ class CliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("index verb: embeddings parquet → committed searchable index; query retrieves") {
-    val work = Files.createTempDirectory("cli-index")
+    val work = tempDir("cli-index")
     val txt = work.resolve("input.txt")
     Files.writeString(txt,
       "Spark processes tables of rows. The cascade extracts article text. " +

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import graft.table.{IcebergLite, SyntheticPages}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -12,7 +12,7 @@ import java.nio.file.Files
   * map-side url-hash plans, overlapped units that fail cleanly, and
   * host-grouped size-bucketed processing.
   */
-class ExtractJobSpec extends AnyFunSuite with SparkSuite {
+class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private val nPages = 240L
   private val cfg = ExtractJobConfig(nUnits = 6, partitionsPerUnit = 4)
@@ -38,7 +38,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   private def parquetPages(ids: Seq[Long], files: Int): DataFrame = {
     import testImplicits._
-    val dir = Files.createTempDirectory("graft-pages").toString
+    val dir = tempDir("graft-pages").toString
     spark.createDataset(ids).repartition(files)
       .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id)))
       .toDF().write.mode("overwrite").parquet(dir)
@@ -52,8 +52,8 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
 
   test("kill-and-rerun resume produces an identical committed table") {
-    val cleanDir = Files.createTempDirectory("graft-clean").toString
-    val resumeDir = Files.createTempDirectory("graft-resume").toString
+    val cleanDir = tempDir("graft-clean").toString
+    val resumeDir = tempDir("graft-resume").toString
     val clean = new IcebergLite(cleanDir)
     val resumed = new IcebergLite(resumeDir)
 
@@ -71,11 +71,10 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(ranResume == (2 until cfg.nUnits)) // committed units skipped
 
     assert(tableDigest(clean) == tableDigest(resumed))
-    clean.drop(spark); resumed.drop(spark)
   }
 
   test("a unit whose pages throw fails the run after the units before it commit") {
-    val dir = Files.createTempDirectory("graft-unit-fail").toString
+    val dir = tempDir("graft-unit-fail").toString
     val t = new IcebergLite(dir)
     def failing(u: Int): DataFrame = {
       import testImplicits._
@@ -92,7 +91,6 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
       c.getMessage.contains("page 100 of unit 2 is broken")), e)
     assert(t.committedUnits(spark) == Seq(0, 1))
     assertNothingRunning()
-    t.drop(spark)
   }
 
   test("url-hash mode is map-side: one file scan, no exchange; host-grouped keeps its repartition") {
@@ -115,13 +113,12 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   test("output does not depend on the input's partitioning or an extras column") {
     // one partition takes the round-robin spread, four run map-side
-    val one = new IcebergLite(Files.createTempDirectory("graft-one-part").toString)
-    val four = new IcebergLite(Files.createTempDirectory("graft-four-parts").toString)
+    val one = new IcebergLite(tempDir("graft-one-part").toString)
+    val four = new IcebergLite(tempDir("graft-four-parts").toString)
     val layoutCfg = cfg.copy(nUnits = 2)
     ExtractJob.runUnits(spark, unitPagesIn(1), one, layoutCfg)
     ExtractJob.runUnits(spark, unitPagesIn(4), four, layoutCfg)
     assert(tableDigest(one) == tableDigest(four))
-    one.drop(spark); four.drop(spark)
 
     def rows(df: DataFrame): Seq[String] =
       ExtractJob.processUnit(df, cfg).drop("task_partition").collect().map(_.toString).sorted.toSeq
@@ -131,7 +128,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("manifest carries per-unit lineage and strategy histogram") {
-    val dir = Files.createTempDirectory("graft-manifest").toString
+    val dir = tempDir("graft-manifest").toString
     val t = new IcebergLite(dir)
     ExtractJob.runUnits(spark, unitPages, t, cfg)
     val m = t.manifest(spark)
@@ -144,7 +141,6 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(totalRows == t.read(spark).count())
     // output rows carry task-partition lineage
     assert(t.read(spark).columns.contains("task_partition"))
-    t.drop(spark)
   }
 
   test("oversized pages flow through the big bucket and extract correctly") {
@@ -166,7 +162,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   test("re-publish is atomic: versioned manifest, unit never uncommitted") {
     import testImplicits._
-    val dir = Files.createTempDirectory("graft-republish").toString
+    val dir = tempDir("graft-republish").toString
     val t = new IcebergLite(dir)
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     assert(t.commitUnit(df, 0) == 2)
@@ -181,12 +177,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(t.manifest(spark).count() == 1)    // latest version only
     assert(t.manifest(spark).select("rows").collect()(0).getString(0) == "3")
     assert(t.read(spark).count() == 3)
-    t.drop(spark)
   }
 
   test("manifest rows, files, bytes and version belong to the table, not the caller") {
     import testImplicits._
-    val t = new IcebergLite(Files.createTempDirectory("graft-owned").toString)
+    val t = new IcebergLite(tempDir("graft-owned").toString)
     val n = t.commitUnit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0,
       Map("rows" -> "99", "version" -> "7", "bytes" -> "-1", "files" -> "0", "source" -> "spec"))
     assert(n == 2)
@@ -195,12 +190,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(m.getAs[String]("version") == "1")
     assert(m.getAs[String]("files").toInt > 0 && m.getAs[String]("bytes").toLong > 0)
     assert(m.getAs[String]("source") == "spec") // other caller metrics are kept
-    t.drop(spark)
   }
 
   test("snapshots: time travel reads past table states; expiry bounds storage") {
     import testImplicits._
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = tempDir("graft-snap").toString
     val t = new IcebergLite(dir)
     t.commitUnit(Seq((1L, "a")).toDF("id", "v"), 0)                  // snap 1
     t.commitUnit(Seq((2L, "b")).toDF("id", "v"), 1)                  // snap 2
@@ -225,7 +219,6 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
     assert(t.read(spark).count() == 3)
     assert(t.readAt(spark, 3).count() == 3)
     intercept[IllegalArgumentException](t.readAt(spark, 1))
-    t.drop(spark)
   }
 
   test("host-grouped mode with salting spreads the hot host") {

@@ -1,11 +1,11 @@
 package graft.ops
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import graft.fixtures.MediaFixtures
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite with SparkSuite {
+class OpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   import testImplicits._
 
@@ -105,7 +105,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("lmPerplexity: hand-built model, OOV fallback, floored integer mean") {
-    val dir = java.nio.file.Files.createTempDirectory("lm-artifact").toString
+    val dir = tempDir("lm-artifact").toString
     Seq(("ab", 1000L), ("bc", 2001L), ("<OOV>", 9000L))
       .toDF("bigram", "surprise_mb").write.mode("overwrite").parquet(dir)
     val docs = Seq((1L, "abc"), (2L, "xy"), (3L, "a")).toDF("doc_id", "text")
@@ -637,7 +637,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       a.zip(b).forall { case (x, y) => x.sameElements(y) } })
     // artifact round-trip is exact
     val back = {
-      val f = java.nio.file.Files.createTempFile("pq", ".txt")
+      val f = tempDir("pq").resolve("codebooks.txt")
       java.nio.file.Files.writeString(f, Pq.toLines(cb))
       Pq.fromFile(f.toString)
     }

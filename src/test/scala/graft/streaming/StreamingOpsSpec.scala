@@ -42,6 +42,19 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
+  test("the stream_extract query leaves no work dir behind and equals the batch cascade") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def workDirs(): Int =
+      Option(tmp.list()).fold(0)(_.count(_.startsWith("se-stream-extract")))
+    val before = workDirs()
+    // a tier dir outside the sf names: 1000 synthetic pages, no tier read
+    val streamed = graft.SparkEntry.queries("stream_extract")(spark, "tier").collect()
+    assert(workDirs() == before, "se-stream-extract dir left behind")
+    assert(streamed.length == 1000)
+    assert(streamed.toSeq ==
+      graft.SparkEntry.queries("cascade_extract")(spark, "tier").collect().toSeq)
+  }
+
   test("stream-stream interval join equals the batch join") {
     val path = "/root/testdata/sf0.001/events.parquet"
     val streamed = StreamingOps.streamStreamJoin(spark, path,

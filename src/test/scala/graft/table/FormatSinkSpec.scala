@@ -1,6 +1,6 @@
 package graft.table
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports the reference storage-format tests (tests/unit/test_storage.py:
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence: JSON bodies are Spark to_json compact form, not Python
   * json.dumps(indent=2); field names and order are pinned here.
   */
-class FormatSinkSpec extends AnyFunSuite with SparkSuite {
+class FormatSinkSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   import testImplicits._
 
@@ -66,7 +66,7 @@ class FormatSinkSpec extends AnyFunSuite with SparkSuite {
 
   test("unicode content round-trips through file materialization") {
     val df = row(content = "Ünïcödé — 中文テキスト ✓", title = "Ünïcödé Tïtle")
-    val dir = java.nio.file.Files.createTempDirectory("fmt").toString
+    val dir = tempDir("fmt").toString
     val files = FormatSink.writeFiles(df, dir, "md")
     assert(files.length == 1)
     assert(files.head.endsWith("unicode-title.md") || files.head.endsWith(".md"))
@@ -81,7 +81,7 @@ class FormatSinkSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("distributed write produces a readable (slug, body) table") {
-    val dir = java.nio.file.Files.createTempDirectory("fmtp").toString
+    val dir = tempDir("fmtp").toString
     FormatSink.write(row(), dir, "json")
     val back = spark.read.parquet(dir)
     assert(back.columns.toSeq == Seq("slug", "body"))

@@ -1,9 +1,9 @@
 package graft.text
 
-import graft.SparkSuite
+import graft.{SparkSuite, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
-class BpeSpec extends AnyFunSuite with SparkSuite {
+class BpeSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("pretokenize matches the piece pattern (leading-space words, digits, punct, ws runs)") {
     val pieces = Bpe.pretokenize("Hello world, 42 times!\n").toSeq
@@ -46,7 +46,7 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
     val merges = Seq((" ", "t"), ("\t", "\n"), ("a\\b", " c"))
     val lines = Bpe.toLines(merges)
     assert(!lines.contains("\t")) // whitespace symbols are escaped
-    val path = java.nio.file.Files.createTempFile("bpe", ".txt")
+    val path = tempDir("bpe").resolve("merges.txt")
     java.nio.file.Files.write(path, lines.getBytes("UTF-8"))
     assert(Bpe.fromFile(path.toString) == merges)
   }
