@@ -1,7 +1,8 @@
 package graft
 
-import graft.extract.{CascadeConfig, CascadeExtractor}
+import graft.extract.{CascadeConfig, CascadeExtractor, DomStats, PageCodec}
 import graft.fixtures.{MediaFixtures, PdfFixtures}
+import graft.html.HtmlParser
 import graft.ops.Multimodal
 import graft.table.SyntheticPages
 import java.nio.file.{Files, Paths, Path}
@@ -25,10 +26,6 @@ object GoldenGen {
   def digestLine(id: Long): String = {
     val page = SyntheticPages.pageFor(Seed, id)
     val ex = CascadeExtractor.pooled().extract(page.url, page.html, CascadeConfig())
-    val md = MessageDigest.getInstance("SHA-256")
-    val textHash =
-      if (ex.extracted_text == null) "-"
-      else hex(md.digest(ex.extracted_text.getBytes(StandardCharsets.UTF_8))).take(16)
     val meta = Seq(
       Option(ex.title).getOrElse("-"),
       Option(ex.author).getOrElse("-"),
@@ -37,18 +34,53 @@ object GoldenGen {
       ex.warnings.mkString(";") match { case "" => "-"; case w => w },
       ex.spans.size.toString)
     s"$id|${page.url}|${Option(ex.strategy_used).getOrElse("-")}|${ex.succeeded}|${ex.partial}|" +
-      s"${if (ex.extracted_text == null) -1 else ex.extracted_text.length}|$textHash|${meta.mkString("|")}"
+      s"${if (ex.extracted_text == null) -1 else ex.extracted_text.length}|${hash16(ex.extracted_text)}|" +
+      meta.mkString("|")
   }
 
+  /** One line per strategy, in cascade order, for page `id`: what each
+    * strategy returns over the page's DOM, whether or not the cascade
+    * would run it or let it win. Hashes only: id, strategy, text length,
+    * then 16-hex hashes of text, spans, title and author, the publish
+    * date, `succeeded` and `reason`.
+    */
+  def strategyDigestLines(id: Long): Seq[String] = {
+    val page = SyntheticPages.pageFor(Seed, id)
+    val parser = new HtmlParser
+    val stats = new DomStats
+    val dom = parser.parse(if (page.html == null) "" else PageCodec.decode(page.html))
+    stats.compute(dom)
+    CascadeConfig().strategies.map { name =>
+      val r = CascadeExtractor.registry(name).run(dom, stats)
+      val spans = r.spans.map { case (s, e, k) => s"$s,$e,$k" }.mkString(";")
+      Seq(id, name, if (r.content == null) -1 else r.content.length,
+        hash16(r.content), hash16(spans), hash16(r.title), hash16(r.author),
+        Option(r.publishDate).map(_.toInstant.toString).getOrElse("-"),
+        r.succeeded, Option(r.reason).getOrElse("-")).mkString("|")
+    }
+  }
+
+  /** First 16 hex digits of the UTF-8 SHA-256 of `s`; "-" for null. */
+  private def hash16(s: String): String =
+    if (s == null) "-"
+    else hex(MessageDigest.getInstance("SHA-256").digest(s.getBytes(StandardCharsets.UTF_8))).take(16)
+
   private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+
+  /** `strategy_digests.txt`: [[strategyDigestLines]] over the corpus. */
+  def writeStrategyDigests(dir: Path): Unit = {
+    val lines = (0L until CorpusSize).flatMap(strategyDigestLines)
+    Files.write(dir.resolve("strategy_digests.txt"),
+      (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = Paths.get("src/test/resources/golden")
     Files.createDirectories(dir)
-
     val lines = (0L until CorpusSize).map(digestLine)
     Files.write(dir.resolve("corpus_digests.txt"),
       (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+    writeStrategyDigests(dir)
 
     // full-text goldens: first id of each family within the corpus
     val byFamily = (0L until CorpusSize)

@@ -31,6 +31,17 @@ class GoldenSpec extends AnyFunSuite {
     assert(mismatches == 0)
   }
 
+  test("strategy digests: every strategy's output per corpus page matches frozen digests line-by-line") {
+    val expected = new String(
+      Files.readAllBytes(dir.resolve("strategy_digests.txt")),
+      StandardCharsets.UTF_8).split("\n", -1).filter(_.nonEmpty).toSeq
+    val actual = (0L until GoldenGen.CorpusSize).flatMap(GoldenGen.strategyDigestLines)
+    assert(expected.length == actual.length)
+    val diffs = expected.zip(actual).filter { case (e, a) => e != a }
+    assert(diffs.isEmpty, diffs.take(3).map { case (e, a) =>
+      s"\n  expected: $e\n  actual:   $a" }.mkString(s"${diffs.size} strategy digests differ:", "", ""))
+  }
+
   test("fulltext goldens: byte-identical extracted text per representative page") {
     val fullDir = dir.resolve("fulltext")
     val files = Files.list(fullDir).toArray.map(_.asInstanceOf[java.nio.file.Path])

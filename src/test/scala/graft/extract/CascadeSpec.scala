@@ -103,6 +103,45 @@ class CascadeSpec extends AnyFunSuite {
     assert(r.publishDate.toInstant.toString == "2023-11-05T00:00:00Z")
   }
 
+  test("newspaper: metadata precedence per key, across authors and across dates") {
+    def news(markup: String): StratResult = strat(
+      s"<html><body>$markup<p>Body paragraph with more than five words here.</p></body></html>",
+      "newspaper")
+    // per key the first non-empty content wins, keys ignore case, and
+    // authors follow author, byl, dc.creator, article:author, deduplicated
+    val r = news(
+      """<meta property="og:title" content="  ">
+        |<meta property="OG:Title" content="Later OG">
+        |<meta property="og:title" content="Ignored OG">
+        |<meta name="AUTHOR" content=" ">
+        |<meta property="article:author" content="Dave">
+        |<meta name="DC.Creator" content="Bob">
+        |<meta name="byl" content="Bob">
+        |<meta name="author" content="Alice">
+        |<meta name="dc.creator" content="Carol">""".stripMargin)
+    assert(r.title == "Later OG")
+    assert(r.author == "Alice, Bob, Dave")
+
+    // dates: each source in document order after every higher-priority one
+    val dates = Seq(
+      """<meta property="article:published_time" content="2020-01-01">""",
+      """<time datetime="2020-01-02">x</time>""",
+      """<meta name="date" content="2020-01-03">""",
+      """<meta name="pubdate" content="2020-01-04">""",
+      """<meta name="publishdate" content="2020-01-05">""",
+      """<meta name="timestamp" content="2020-01-06">""",
+      """<meta name="dc.date.issued" content="2020-01-07">""")
+    for (i <- dates.indices)
+      assert(news(dates.drop(i).reverse.mkString).publishDate.toInstant.toString ==
+        s"2020-01-0${i + 1}T00:00:00Z", dates(i))
+    // an unparseable higher-priority date is not skipped: the date is null
+    assert(news("""<meta property="article:published_time" content="yesterday">""" +
+      dates(2)).publishDate == null)
+
+    // with no og:title and no <title>, the h1 title collapses inner whitespace
+    assert(news("<h1>  Big \n\t <em>Head</em>   line </h1>").title == "Big Head line")
+  }
+
   test("readability: link-density demotes link farms") {
     val nav = (1 to 30).map(i => s"""<a href="/$i">Category link number $i</a>""").mkString(" ")
     val para = "Sentence with several words, and a comma. " * 10
