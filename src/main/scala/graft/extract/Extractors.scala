@@ -45,11 +45,6 @@ final class DomStats {
     }
   }
 
-  /** True when this element's subtree text must not count as content. */
-  private def isIgnoredSubtree(tag: Int): Boolean =
-    tag == T.Script || tag == T.Style || tag == T.Noscript ||
-    tag == T.Template || tag == T.Svg
-
   def compute(dom: Dom): Unit = {
     val n = dom.size
     ensure(n)
@@ -78,7 +73,7 @@ final class DomStats {
     i = n - 1
     while (i >= 1) {
       val p = dom.parent(i)
-      val propagate = !(dom.isElem(i) && isIgnoredSubtree(dom.tag(i)))
+      val propagate = !(dom.isElem(i) && DomStats.isIgnoredSubtree(dom.tag(i)))
       if (propagate && p >= 0) {
         if (dom.isElem(i) && dom.tag(i) == T.A) linkLen(i) = textLen(i)
         textLen(p) += textLen(i)
@@ -92,6 +87,15 @@ final class DomStats {
 
   def linkDensity(node: Int): Double =
     if (textLen(node) == 0) 0.0 else linkLen(node).toDouble / textLen(node)
+}
+
+object DomStats {
+  /** True when this element's subtree text is never content: it is not
+    * counted here and readability does not emit it.
+    */
+  private[extract] def isIgnoredSubtree(tag: Int): Boolean =
+    tag == T.Script || tag == T.Style || tag == T.Noscript ||
+    tag == T.Template || tag == T.Svg
 }
 
 /** The three extraction strategies, reimplemented Spark-first from the
@@ -153,62 +157,60 @@ object Extractors {
              tag == T.H5 || tag == T.H6 || tag == T.Th) -5
     else 0
 
-  /** Emit stripped text nodes under `root` (filtered by `keep` on the
-    * owning element chain) joined by `sep`; fills `spans`.
+  /** Every text node of the document that `keepText` accepts, outside
+    * the subtrees `keepElem` rejects, stripped, empties dropped, joined
+    * by "\n" with one "line" span each; fails as "empty_content" when
+    * nothing is left.
     */
-  private def emitText(
-      dom: Dom,
-      root: Int,
-      sep: String,
-      kindLabel: String,
-      keep: Int => Boolean,
-      out: java.lang.StringBuilder,
-      spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
-    dom.walk(root) { n =>
-      if (dom.isElem(n)) keep(n)
+  private def emitLines(dom: Dom, title: String,
+      keepElem: Int => Boolean, keepText: Int => Boolean): StratResult = {
+    val out = new java.lang.StringBuilder(256)
+    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+    dom.walk(0) { n =>
+      if (dom.isElem(n)) keepElem(n)
       else {
-        if (dom.isText(n)) {
+        if (dom.isText(n) && keepText(n)) {
           val seg = PyText.strip(dom.text(n))
           if (seg.nonEmpty) {
-            if (out.length() > 0) out.append(sep)
+            if (out.length() > 0) out.append('\n')
             val start = out.length()
             out.append(seg)
-            spans += ((start, out.length(), kindLabel))
+            spans += ((start, out.length(), "line"))
           }
         }
         true
       }
     }
+    val content = out.toString
+    val ok = PyText.strip(content).nonEmpty
+    StratResult(content, spans.toArray, title, null, null,
+      succeeded = ok, reason = if (ok) null else "empty_content")
   }
 
   // ------------------------------------------------------------------
   // Strategy 1: bs4-style stripped strings ("http" strategy)
   // ------------------------------------------------------------------
-  def bs4Strip(dom: Dom, stats: DomStats): StratResult = {
-    val out = new java.lang.StringBuilder(256)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    emitText(dom, 0, "\n", "line",
+  def bs4Strip(dom: Dom, stats: DomStats): StratResult =
+    emitLines(dom, titleText(dom),
       n => { val t = dom.tag(n); t != T.Script && t != T.Style && t != T.Template },
-      out, spans)
-    val content = out.toString
-    val title = titleText(dom)
-    StratResult(content, spans.toArray, title, null, null,
-      succeeded = PyText.strip(content).nonEmpty,
-      reason = if (PyText.strip(content).nonEmpty) null else "empty_content")
+      _ => true)
+
+  /** The `<title>` element's first child when it is a text node, else -1. */
+  private def titleNode(dom: Dom): Int = {
+    val t = dom.findFirst(0, T.Title)
+    val c = if (t < 0) -1 else dom.firstChild(t)
+    if (c >= 0 && dom.isText(c)) c else -1
   }
 
   /** `<title>` text, stripped — soup.title semantics. */
   private def titleText(dom: Dom): String = {
-    val t = dom.findFirst(0, T.Title)
-    if (t < 0) null
-    else {
-      val c = dom.firstChild(t)
-      if (c >= 0 && dom.isText(c)) {
-        val s = PyText.strip(dom.text(c))
-        if (s.isEmpty) null else s
-      } else null
-    }
+    val c = titleNode(dom)
+    if (c < 0) null else stripOrNull(dom.text(c))
   }
+
+  /** `s` Python-stripped, or null when nothing is left. */
+  private def stripOrNull(s: String): String =
+    if (s == null) null else { val t = PyText.strip(s); if (t.isEmpty) null else t }
 
   // ------------------------------------------------------------------
   // Strategy 2: readability-style DOM scoring
@@ -331,36 +333,11 @@ object Extractors {
     }
 
     // 5. emit text in document order over included-minus-removed
-    val out = new java.lang.StringBuilder(256)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
     val head = dom.findFirst(0, T.Head)
-    dom.walk(0) { node =>
-      if (dom.isElem(node)) {
-        if (node == head || removed(node) || !alive(node)) false
-        else {
-          val t = dom.tag(node)
-          if (t == T.Script || t == T.Style || t == T.Noscript ||
-              t == T.Template || t == T.Svg) false
-          else true
-        }
-      } else {
-        if (dom.isText(node) && inIncluded(dom, node, include)) {
-          val seg = PyText.strip(dom.text(node))
-          if (seg.nonEmpty) {
-            if (out.length() > 0) out.append('\n')
-            val start = out.length()
-            out.append(seg)
-            spans += ((start, out.length(), "line"))
-          }
-        }
-        true
-      }
-    }
-    val content = out.toString
-    val title = shortTitle(dom)
-    StratResult(content, spans.toArray, title, null, null,
-      succeeded = PyText.strip(content).nonEmpty,
-      reason = if (PyText.strip(content).nonEmpty) null else "empty_content")
+    emitLines(dom, shortTitle(dom),
+      node => node != head && !removed(node) && alive(node) &&
+        !DomStats.isIgnoredSubtree(dom.tag(node)),
+      node => inIncluded(dom, node, include))
   }
 
   private def inIncluded(dom: Dom, node: Int, include: Array[Boolean]): Boolean = {
@@ -413,9 +390,9 @@ object Extractors {
     * no h1 cross-check).
     */
   private[extract] def shortTitle(dom: Dom): String = {
-    val raw0 = titleText(dom)
-    if (raw0 == null) return null
-    val orig = PyText.normalizeWhitespace(raw0)
+    val c = titleNode(dom)
+    val orig = if (c < 0) "" else paragraphText(dom, c)
+    if (orig.isEmpty) return null
     var title = orig
     var done = false
     for (delim <- Seq(" | ", " - ", " :: ", " / ") if !done) {
@@ -481,109 +458,34 @@ object Extractors {
     top
   }
 
-  private def emitParagraphs(dom: Dom, top: Int, out: java.lang.StringBuilder,
-      spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
-    if (top >= 0) {
-      // paragraphs: each descendant <p> (word-bearing) plus direct text
-      // children of the top node, in document order, joined "\n\n".
-      // Paragraph text is normalized (strip + Python-\s collapse) in a
-      // single fused pass straight into `out` — the old
-      // paragraphText→normalizeWhitespace→append chain copied every
-      // article char 3-4x and was the cascade's largest cost.
-      dom.walk(top) { node =>
-        if (dom.isElem(node) && dom.tag(node) == T.P) {
-          appendParaFused(dom, node, out, spans)
-          false // paragraph consumed whole
-        } else if (dom.isElem(node)) {
-          val t = dom.tag(node)
-          !(t == T.Script || t == T.Style || t == T.Noscript || t == T.Template)
-        } else {
-          if (dom.isText(node) && dom.parent(node) == top)
-            appendTextFused(dom.text(node), out, spans)
-          true
-        }
-      }
-    }
-  }
-
-  /** One fused pass over a paragraph subtree: concatenate its non-
-    * script/style text nodes with leading/trailing Python-space
-    * stripped and inner runs collapsed to one ' ', appended directly to
-    * `out` behind a lazily-committed "\n\n" separator. Byte-equivalent
-    * to paragraphText(..) + appendPara (goldens enforce this).
-    */
-  private def appendParaFused(dom: Dom, node: Int,
-      out: java.lang.StringBuilder,
-      spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
-    val mark = out.length()
-    if (mark > 0) out.append("\n\n")
-    val start = out.length()
-    var pendingSpace = false
-    var wrote = false
-    dom.walk(node) { n =>
-      if (dom.isElem(n)) {
-        val t = dom.tag(n)
-        !(t == T.Script || t == T.Style)
-      } else {
-        if (dom.isText(n)) {
-          val s = dom.text(n)
-          var i = 0
-          val len = s.length
-          while (i < len) {
-            if (PyText.isPySpace(s.charAt(i))) {
-              if (wrote) pendingSpace = true
-              i += 1
-            } else {
-              val runStart = i
-              while (i < len && !PyText.isPySpace(s.charAt(i))) i += 1
-              if (pendingSpace) { out.append(' '); pendingSpace = false }
-              out.append(s, runStart, i) // bulk copy of the word run
-              wrote = true
-            }
-          }
-        }
-        true
-      }
-    }
-    if (!wrote) out.setLength(mark) // empty paragraph: roll back the sep
-    else spans += ((start, out.length(), "para"))
-  }
-
-  /** Fused single-text-node variant of [[appendParaFused]]. */
-  private def appendTextFused(s: String, out: java.lang.StringBuilder,
-      spans: scala.collection.mutable.ArrayBuffer[(Int, Int, String)]): Unit = {
-    if (s == null) return
-    val mark = out.length()
-    if (mark > 0) out.append("\n\n")
-    val start = out.length()
-    var pendingSpace = false
-    var wrote = false
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      if (PyText.isPySpace(s.charAt(i))) {
-        if (wrote) pendingSpace = true
-        i += 1
-      } else {
-        val runStart = i
-        while (i < len && !PyText.isPySpace(s.charAt(i))) i += 1
-        if (pendingSpace) { out.append(' '); pendingSpace = false }
-        out.append(s, runStart, i)
-        wrote = true
-      }
-    }
-    if (!wrote) out.setLength(mark)
-    else spans += ((start, out.length(), "para"))
-  }
-
   def newspaperLike(dom: Dom, stats: DomStats): StratResult = {
     val top = scoreTopNode(dom, stats)
     val out = new java.lang.StringBuilder(256)
     val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    emitParagraphs(dom, top, out, spans)
-    val content = out.toString
+    // paragraphs: each descendant <p> plus each direct text child of the
+    // top node, in document order, collapsed straight into `out` and
+    // joined "\n\n"; an empty paragraph rolls its separator back
+    def para(node: Int): Unit = {
+      val mark = out.length()
+      if (mark > 0) out.append("\n\n")
+      val start = out.length()
+      if (appendCollapsed(dom, node, out)) spans += ((start, out.length(), "para"))
+      else out.setLength(mark)
+    }
+    if (top >= 0) dom.walk(top) { node =>
+      if (dom.isElem(node) && dom.tag(node) == T.P) {
+        para(node)
+        false // paragraph consumed whole
+      } else if (dom.isElem(node)) {
+        val t = dom.tag(node)
+        !(t == T.Script || t == T.Style || t == T.Noscript || t == T.Template)
+      } else {
+        if (dom.isText(node) && dom.parent(node) == top) para(node)
+        true
+      }
+    }
     val meta = scanNewsMeta(dom)
-    StratResult(content, spans.toArray,
+    StratResult(out.toString, spans.toArray,
       title = newsTitle(dom, meta),
       author = authors(dom, meta),
       publishDate = publishDate(meta),
@@ -592,96 +494,95 @@ object Extractors {
       reason = null)
   }
 
-  /** Inner text of a paragraph with whitespace collapsed (newspaper's
-    * OutputFormatter innerTrim behavior; the hot-path equivalent is the
-    * fused [[appendParaFused]] — this remains for the h1/byline lookups).
+  /** Appends the text of `node` — a text node, or an element's subtree
+    * minus script and style — to `out`, Python-stripped and with every
+    * inner run of Python space collapsed to one ' ' (newspaper's
+    * OutputFormatter innerTrim), in one pass with no intermediate string.
+    * Returns whether anything was appended.
     */
-  private def paragraphText(dom: Dom, p: Int): String = {
-    val sb = new java.lang.StringBuilder(64)
-    dom.walk(p) { n =>
-      if (dom.isElem(n)) {
-        val t = dom.tag(n)
-        !(t == T.Script || t == T.Style)
-      } else {
-        if (dom.isText(n)) sb.append(dom.text(n))
-        true
+  private def appendCollapsed(dom: Dom, node: Int, out: java.lang.StringBuilder): Boolean = {
+    var pendingSpace = false
+    var wrote = false
+    def append(s: String): Unit = {
+      var i = 0
+      val len = s.length
+      while (i < len) {
+        if (PyText.isPySpace(s.charAt(i))) {
+          if (wrote) pendingSpace = true
+          i += 1
+        } else {
+          val runStart = i
+          while (i < len && !PyText.isPySpace(s.charAt(i))) i += 1
+          if (pendingSpace) { out.append(' '); pendingSpace = false }
+          out.append(s, runStart, i) // bulk copy of the word run
+          wrote = true
+        }
       }
     }
-    PyText.normalizeWhitespace(sb.toString)
+    if (dom.isText(node)) append(dom.text(node))
+    else dom.walk(node) { n =>
+      if (dom.isElem(n)) { val t = dom.tag(n); t != T.Script && t != T.Style }
+      else { if (dom.isText(n)) append(dom.text(n)); true }
+    }
+    wrote
   }
 
-  /** Every metadata field the newspaper strategy reads, collected in
-    * ONE DOM walk (was ~6 eager full walks per page: og:title, four
-    * author metas, published_time/time — measured as the cascade's
-    * single largest cost). Per key: first occurrence with non-empty
-    * stripped content wins, exactly like the per-key metaContent walks.
+  /** [[appendCollapsed]] as a string: the h1, byline and title lookups. */
+  private def paragraphText(dom: Dom, node: Int): String = {
+    val sb = new java.lang.StringBuilder(64)
+    appendCollapsed(dom, node, sb)
+    sb.toString
+  }
+
+  /** The metadata keys newspaper reads, as `(attribute, value)` of a
+    * `<meta>` element whose `content` the key takes. Per key the first
+    * occurrence with non-empty stripped content wins; attribute values
+    * match with `equalsIgnoreCase` (lowercasing differs on non-ASCII).
+    * One more slot, [[TimeSlot]], takes the first non-empty
+    * `<time datetime>`.
     */
-  private final class NewsMeta {
-    var ogTitle: String = _
-    var metaAuthor: String = _
-    var metaByl: String = _
-    var metaDcCreator: String = _
-    var metaArticleAuthor: String = _
-    var publishedTime: String = _
-    var timeDatetime: String = _
-    var metaDate: String = _
-    var metaPubdate: String = _
-    var metaPublishdate: String = _
-    var metaTimestamp: String = _
-    var metaDcIssued: String = _
-  }
+  private val MetaKeys: Array[(String, String)] = Array(
+    "property" -> "og:title",
+    "name" -> "author", "name" -> "byl", "name" -> "dc.creator",
+    "property" -> "article:author",
+    "property" -> "article:published_time", "name" -> "date",
+    "name" -> "pubdate", "name" -> "publishdate", "name" -> "timestamp",
+    "name" -> "dc.date.issued")
+  private val TitleSlot = 0
+  private val TimeSlot = MetaKeys.length
+  /** Author slots in join order; date slots in precedence order. */
+  private val AuthorSlots = 1 to 4
+  private val DateSlots = 5 +: TimeSlot +: (6 to 10)
 
-  private def scanNewsMeta(dom: Dom): NewsMeta = {
-    val m = new NewsMeta
+  /** Every metadata slot the newspaper strategy reads, collected in ONE
+    * DOM walk (was ~6 eager full walks per page — measured as the
+    * cascade's single largest cost).
+    */
+  private def scanNewsMeta(dom: Dom): Array[String] = {
+    val found = new Array[String](MetaKeys.length + 1)
     dom.walk(0) { n =>
       if (dom.isElem(n)) {
         val t = dom.tag(n)
         if (t == T.Meta) {
-          val prop = dom.attr(n, "property")
-          val name = dom.attr(n, "name")
-          def content: String = {
-            val c = dom.attr(n, "content")
-            if (c == null) null
-            else { val s = PyText.strip(c); if (s.isEmpty) null else s }
+          var k = 0
+          while (k < MetaKeys.length) {
+            if (found(k) == null) {
+              val v = dom.attr(n, MetaKeys(k)._1)
+              if (v != null && v.equalsIgnoreCase(MetaKeys(k)._2))
+                found(k) = stripOrNull(dom.attr(n, "content"))
+            }
+            k += 1
           }
-          if (prop != null) {
-            if (m.ogTitle == null && prop.equalsIgnoreCase("og:title"))
-              m.ogTitle = content
-            if (m.metaArticleAuthor == null && prop.equalsIgnoreCase("article:author"))
-              m.metaArticleAuthor = content
-            if (m.publishedTime == null && prop.equalsIgnoreCase("article:published_time"))
-              m.publishedTime = content
-          }
-          if (name != null) {
-            if (m.metaAuthor == null && name.equalsIgnoreCase("author"))
-              m.metaAuthor = content
-            if (m.metaByl == null && name.equalsIgnoreCase("byl"))
-              m.metaByl = content
-            if (m.metaDcCreator == null && name.equalsIgnoreCase("dc.creator"))
-              m.metaDcCreator = content
-            if (m.metaDate == null && name.equalsIgnoreCase("date"))
-              m.metaDate = content
-            if (m.metaPubdate == null && name.equalsIgnoreCase("pubdate"))
-              m.metaPubdate = content
-            if (m.metaPublishdate == null && name.equalsIgnoreCase("publishdate"))
-              m.metaPublishdate = content
-            if (m.metaTimestamp == null && name.equalsIgnoreCase("timestamp"))
-              m.metaTimestamp = content
-            if (m.metaDcIssued == null && name.equalsIgnoreCase("dc.date.issued"))
-              m.metaDcIssued = content
-          }
-        } else if (t == T.Time && m.timeDatetime == null) {
-          val d = dom.attr(n, "datetime")
-          if (d != null && PyText.strip(d).nonEmpty) m.timeDatetime = PyText.strip(d)
-        }
+        } else if (t == T.Time && found(TimeSlot) == null)
+          found(TimeSlot) = stripOrNull(dom.attr(n, "datetime"))
       }
       true
     }
-    m
+    found
   }
 
-  private def newsTitle(dom: Dom, meta: NewsMeta): String = {
-    if (meta.ogTitle != null) return meta.ogTitle
+  private def newsTitle(dom: Dom, meta: Array[String]): String = {
+    if (meta(TitleSlot) != null) return meta(TitleSlot)
     val t = titleText(dom)
     if (t != null) return t
     val h1 = dom.findFirst(0, T.H1)
@@ -708,11 +609,9 @@ object Extractors {
     (lc.contains("byl") || lc.contains("author")) && bylineRe.matcher(lc).find()
   }
 
-  private def authors(dom: Dom, meta: NewsMeta): String = {
+  private def authors(dom: Dom, meta: Array[String]): String = {
     val found = scala.collection.mutable.LinkedHashSet.empty[String]
-    for (v <- Seq(meta.metaAuthor, meta.metaByl, meta.metaDcCreator,
-                  meta.metaArticleAuthor))
-      if (v != null) found += v
+    for (k <- AuthorSlots if meta(k) != null) found += meta(k)
     if (found.isEmpty) {
       // visible byline: class/id/rel containing author|byline|byl
       var hit = -1
@@ -732,16 +631,9 @@ object Extractors {
     if (found.isEmpty) null else found.mkString(", ")
   }
 
-  private def publishDate(meta: NewsMeta): java.sql.Timestamp = {
-    var raw = meta.publishedTime
-    if (raw == null) raw = meta.timeDatetime
-    if (raw == null) raw = meta.metaDate
-    if (raw == null) raw = meta.metaPubdate
-    if (raw == null) raw = meta.metaPublishdate
-    if (raw == null) raw = meta.metaTimestamp
-    if (raw == null) raw = meta.metaDcIssued
-    if (raw == null) null else parseIsoTimestamp(raw)
-  }
+  /** The first non-empty date slot, parsed; an unparseable one is null. */
+  private def publishDate(meta: Array[String]): java.sql.Timestamp =
+    DateSlots.iterator.map(meta(_)).find(_ != null).map(parseIsoTimestamp).orNull
 
   private[extract] def parseIsoTimestamp(s: String): java.sql.Timestamp = {
     import java.time._

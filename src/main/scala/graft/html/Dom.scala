@@ -44,12 +44,10 @@ final class Dom {
     newNode(0, -1, -1) // document root
   }
 
-  def reset(): Unit = reset(null)
-
   /** Drop the reference to the source string at end-of-row. The lazy
     * attr-value offsets dangle after this, but nothing reads them past
     * the row; without it, each pooled parser would pin the previous
-    * page's entire HTML until the next parse — defeating reset()'s
+    * page's entire HTML until the next parse — defeating reset's
     * free-row-strings goal for the largest allocation of all.
     */
   def release(): Unit = { src = null }
@@ -129,19 +127,6 @@ final class Dom {
 
   def isElem(node: Int): Boolean = kind(node) == 1
   def isText(node: Int): Boolean = kind(node) == 2
-
-  /** Next node in document (pre)order, or -1. If skipChildren, don't
-    * descend into `node`'s subtree.
-    */
-  def next(node: Int, skipChildren: Boolean = false): Int = {
-    if (!skipChildren && firstChild(node) >= 0) return firstChild(node)
-    var n = node
-    while (n >= 0) {
-      if (nextSib(n) >= 0) return nextSib(n)
-      n = parent(n)
-    }
-    -1
-  }
 
   /** Document-order iteration over the subtree rooted at `root`
     * (excluding `root` itself); `f` returns false to skip a node's
