@@ -3,7 +3,7 @@ package graft.jobs
 import graft.extract.{CascadeConfig, Extract}
 import graft.table.{IcebergLite, SyntheticPages}
 import graft.util.MapAccumulator
-import org.apache.spark.SparkContext
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -151,14 +151,30 @@ object ExtractJob {
       if (error != null) throw error
     }
 
-    /** Cancel the write's jobs and wait for its thread to end. The loop
-      * also catches a job the thread submits after the first cancel.
+    /** Cancel the write's jobs and wait for its thread to end, then for
+      * every task of its jobs: Spark kills tasks asynchronously, and a
+      * task still running after its job ended can re-create the unit's
+      * `_temporary` dir. The first loop also catches a job the thread
+      * submits after the first cancel.
       */
-    def cancel(): Unit =
+    def cancel(): Unit = {
       while (thread.isAlive) {
         sc.cancelJobsWithTag(tag)
         thread.join(100)
       }
+      while (!settled) Thread.sleep(10)
+    }
+
+    /** The status tracker has seen every job of the write end (so it has
+      * seen their tasks start) and no task of theirs is still running.
+      */
+    private def settled: Boolean = {
+      val st = sc.statusTracker
+      st.getJobIdsForTag(tag).forall(j => st.getJobInfo(j).forall { job =>
+        job.status != JobExecutionStatus.RUNNING &&
+          job.stageIds.forall(s => st.getStageInfo(s).forall(_.numActiveTasks == 0))
+      })
+    }
   }
 
   /** Run all uncommitted units; returns the units processed this run.

@@ -26,11 +26,15 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
       .mapPartitions(_.map(id => SyntheticPages.pageFor(42L, id))).toDF()
   }
 
-  /** No Spark job is running and no unit write thread is alive. */
+  /** No Spark job is running, no task of any stage, failed ones
+    * included, and no unit write thread is alive.
+    */
   private def assertNothingRunning(): Unit = {
     org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
       "a unit write outlived runUnits")
+    val tasks = org.apache.spark.ListenerBusDrain.activeTasks(spark.sparkContext)
+    assert(tasks == 0, s"$tasks tasks of a unit write outlived runUnits")
     val writers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(t => t.isAlive && t.getName.startsWith("graft-extract-unit-"))
     assert(writers.isEmpty, s"write threads left: ${writers.map(_.getName).mkString(", ")}")
@@ -78,10 +82,22 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val t = new IcebergLite(dir)
     def failing(u: Int): DataFrame = {
       import testImplicits._
-      // unit 2's ids; unit 3's write is in flight when unit 2 fails
-      if (u != 2) unitPages(u)
-      else spark.range(80, 120, 1, 2).mapPartitions(_.map { id =>
-        if (id == 100) throw new IllegalStateException("page 100 of unit 2 is broken")
+      // unit 2's page 100 is broken. It fails only once unit 3's write,
+      // in flight by then, has started its first page, which takes 1 s
+      // and, like a CPU-bound parse, does not stop on an interrupt: the
+      // cancelled write's task runs on until the page ends
+      val perUnit = nPages / cfg.nUnits
+      spark.range(u * perUnit, (u + 1) * perUnit, 1, 2).mapPartitions(_.map { id =>
+        if (id == 3 * perUnit) {
+          UnitFailGate.slowPage.countDown()
+          val end = System.nanoTime() + 1000000000L
+          while (System.nanoTime() < end)
+            try Thread.sleep(10) catch { case _: InterruptedException => }
+        }
+        if (id == 100) {
+          UnitFailGate.slowPage.await(10, java.util.concurrent.TimeUnit.SECONDS)
+          throw new IllegalStateException("page 100 of unit 2 is broken")
+        }
         SyntheticPages.pageFor(42L, id)
       }).toDF()
     }
@@ -233,4 +249,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val parts = out.select("task_partition").distinct().count()
     assert(parts > 1, s"hot host not spread: $parts partition(s)")
   }
+}
+
+/** Opened when the next unit's slow page starts; the broken page waits
+  * for it (tasks in local mode share the JVM).
+  */
+private object UnitFailGate {
+  val slowPage = new java.util.concurrent.CountDownLatch(1)
 }

@@ -5,4 +5,10 @@ package org.apache.spark
   */
 object ListenerBusDrain {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Tasks still running in any stage the status store holds, finished
+    * stages included: a killed task can outlive its failed stage.
+    */
+  def activeTasks(sc: SparkContext): Int =
+    sc.statusStore.stageList(null).map(_.numActiveTasks).sum
 }
