@@ -554,9 +554,9 @@ object Extractors {
   private val AuthorSlots = 1 to 4
   private val DateSlots = 5 +: TimeSlot +: (6 to 10)
 
-  /** Every metadata slot the newspaper strategy reads, collected in ONE
-    * DOM walk (was ~6 eager full walks per page — measured as the
-    * cascade's single largest cost).
+  /** Every metadata slot the newspaper strategy reads, collected in one
+    * DOM walk: a walk per key was measured as the cascade's single
+    * largest cost.
     */
   private def scanNewsMeta(dom: Dom): Array[String] = {
     val found = new Array[String](MetaKeys.length + 1)

@@ -155,14 +155,17 @@ object ExtractJob {
       * every task of its jobs: Spark kills tasks asynchronously, and a
       * task still running after its job ended can re-create the unit's
       * `_temporary` dir. The first loop also catches a job the thread
-      * submits after the first cancel.
+      * submits after the first cancel. The second is bounded because
+      * the status tracker is fed by a listener queue that drops events
+      * when it is full, so it might never report the end.
       */
     def cancel(): Unit = {
       while (thread.isAlive) {
         sc.cancelJobsWithTag(tag)
         thread.join(100)
       }
-      while (!settled) Thread.sleep(10)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(10)
     }
 
     /** The status tracker has seen every job of the write end (so it has

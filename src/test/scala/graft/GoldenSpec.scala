@@ -38,7 +38,7 @@ class GoldenSpec extends AnyFunSuite {
     val actual = (0L until GoldenGen.CorpusSize).flatMap(GoldenGen.strategyDigestLines)
     assert(expected.length == actual.length)
     val diffs = expected.zip(actual).filter { case (e, a) => e != a }
-    assert(diffs.isEmpty, diffs.take(3).map { case (e, a) =>
+    if (diffs.nonEmpty) fail(diffs.take(3).map { case (e, a) =>
       s"\n  expected: $e\n  actual:   $a" }.mkString(s"${diffs.size} strategy digests differ:", "", ""))
   }
 
