@@ -2,7 +2,7 @@ package graft.extract
 
 import graft.html.HtmlParser
 import graft.text.PyText
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
 
 /** Character-offset span of an emitted segment inside extracted_text. */
@@ -185,8 +185,6 @@ object Extract {
   def extractPages(pages: DataFrame,
       cfg: CascadeConfig = CascadeConfig(),
       strategyHist: Option[graft.util.MapAccumulator] = None): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
     def count(r: Extracted): Extracted = {
       strategyHist.foreach(a =>
         a.add(if (r.strategy_used == null) "FAILED" else r.strategy_used))
@@ -194,19 +192,26 @@ object Extract {
     }
     if (pages.columns.contains("extras"))
       pages.select(col("url"), col("html"), col("extras"))
-        .as[(String, Array[Byte], Map[String, String])]
+        .as(pageWithExtrasEncoder)
         .mapPartitions { it =>
           val ex = CascadeExtractor.pooled()
           it.map { case (u, h, xs) =>
             count(ex.extract(u, h, cfg, if (xs == null) Map.empty else xs))
           }
-        }
+        }(extractedEncoder)
     else
       pages.select(col("url"), col("html"))
-        .as[(String, Array[Byte])]
+        .as(pageEncoder)
         .mapPartitions { it =>
           val ex = CascadeExtractor.pooled()
           it.map { case (u, h) => count(ex.extract(u, h, cfg)) }
-        }
+        }(extractedEncoder)
   }
+
+  // Derived once: deriving a product encoder reflects over its type,
+  // which profiled as the largest part of planning an extraction unit
+  private lazy val pageEncoder = Encoders.product[(String, Array[Byte])]
+  private lazy val pageWithExtrasEncoder =
+    Encoders.product[(String, Array[Byte], Map[String, String])]
+  private lazy val extractedEncoder = Encoders.product[Extracted]
 }

@@ -16,12 +16,15 @@ final case class StratResult(
     succeeded: Boolean,
     reason: String)
 
-/** Per-DOM derived statistics, computed in one reverse pass and shared
-  * by all three strategies (arrays are grow-only, pooled with the
-  * thread's extractor — zero steady-state allocation).
+/** Per-DOM derived statistics shared by all three strategies (arrays
+  * are grow-only, pooled with the thread's extractor — zero steady-state
+  * allocation). The parser owns the per-text-node counts (see
+  * [[graft.html.Dom]]); [[compute]] reads no text character, it only
+  * seeds each text node from those counts and folds them into parents.
   *
-  * Exploits the arena invariant parent-id < child-id: iterating ids in
-  * reverse order completes every subtree sum before its parent reads it.
+  * The fold exploits the arena invariant parent-id < child-id: iterating
+  * ids in reverse order completes every subtree sum before its parent
+  * reads it.
   */
 final class DomStats {
   var textLen: Array[Int] = new Array[Int](256)
@@ -51,22 +54,11 @@ final class DomStats {
     var i = 0
     while (i < n) {
       if (dom.isText(i)) {
-        val s = dom.text(i)
-        val len = s.length
-        var cm = 0; var wc = 0; var inWord = false
-        var k = 0
-        while (k < len) {
-          val c = s.charAt(k)
-          if (c == ',') cm += 1
-          if (PyText.isPySpace(c)) inWord = false
-          else if (!inWord) { inWord = true; wc += 1 }
-          k += 1
-        }
-        textLen(i) = len; commas(i) = cm; words(i) = wc; linkLen(i) = 0
+        textLen(i) = dom.text(i).length; commas(i) = dom.textCommas(i); words(i) = dom.textWords(i)
       } else {
-        textLen(i) = 0; commas(i) = 0; words(i) = 0; linkLen(i) = 0
+        textLen(i) = 0; commas(i) = 0; words(i) = 0
       }
-      score(i) = 0.0; touched(i) = false; include(i) = false
+      linkLen(i) = 0; score(i) = 0.0; touched(i) = false; include(i) = false
       i += 1
     }
     // reverse accumulation into parents
@@ -497,32 +489,45 @@ object Extractors {
   /** Appends the text of `node` — a text node, or an element's subtree
     * minus script and style — to `out`, Python-stripped and with every
     * inner run of Python space collapsed to one ' ' (newspaper's
-    * OutputFormatter innerTrim), in one pass with no intermediate string.
-    * Returns whether anything was appended.
+    * OutputFormatter innerTrim), with no intermediate string. A text node
+    * whose interior the parser found already collapsed is copied in one
+    * append; only the others are walked character by character. Returns
+    * whether anything was appended.
     */
   private def appendCollapsed(dom: Dom, node: Int, out: java.lang.StringBuilder): Boolean = {
     var pendingSpace = false
     var wrote = false
-    def append(s: String): Unit = {
-      var i = 0
-      val len = s.length
-      while (i < len) {
-        if (PyText.isPySpace(s.charAt(i))) {
-          if (wrote) pendingSpace = true
-          i += 1
-        } else {
-          val runStart = i
-          while (i < len && !PyText.isPySpace(s.charAt(i))) i += 1
-          if (pendingSpace) { out.append(' '); pendingSpace = false }
-          out.append(s, runStart, i) // bulk copy of the word run
-          wrote = true
+    def append(n: Int): Unit = {
+      val s = dom.text(n)
+      if (dom.textCollapsed(n)) {
+        // parser-made text nodes are never whitespace-only: start < end
+        val start = dom.textStart(n)
+        val end = dom.textEnd(n)
+        if (pendingSpace || (wrote && start > 0)) out.append(' ')
+        out.append(s, start, end)
+        pendingSpace = end < s.length
+        wrote = true
+      } else {
+        var i = 0
+        val len = s.length
+        while (i < len) {
+          if (PyText.isPySpace(s.charAt(i))) {
+            if (wrote) pendingSpace = true
+            i += 1
+          } else {
+            val runStart = i
+            while (i < len && !PyText.isPySpace(s.charAt(i))) i += 1
+            if (pendingSpace) { out.append(' '); pendingSpace = false }
+            out.append(s, runStart, i) // bulk copy of the word run
+            wrote = true
+          }
         }
       }
     }
-    if (dom.isText(node)) append(dom.text(node))
+    if (dom.isText(node)) append(node)
     else dom.walk(node) { n =>
       if (dom.isElem(n)) { val t = dom.tag(n); t != T.Script && t != T.Style }
-      else { if (dom.isText(n)) append(dom.text(n)); true }
+      else { if (dom.isText(n)) append(n); true }
     }
     wrote
   }

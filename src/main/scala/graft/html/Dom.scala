@@ -7,6 +7,14 @@ package graft.html
   *
   * Node 0 is the synthetic document root. `kind`: 0 = document,
   * 1 = element, 2 = text.
+  *
+  * The parser owns each text node's character facts, recorded as it
+  * emits the text (Python-space semantics, see [[graft.text.PyText]]):
+  * `textCommas` and `textWords` count commas and maximal non-space runs;
+  * `textStart`/`textEnd` bound the stripped interior; `textCollapsed`
+  * says that interior holds no Python space other than single `' '`
+  * between non-space characters. The text length is the string's. The
+  * fact arrays are only meaningful at text nodes.
   */
 final class Dom {
   var size: Int = 0
@@ -19,6 +27,11 @@ final class Dom {
   var text: Array[String] = new Array[String](256)
   var attrStart: Array[Int] = new Array[Int](256)
   var attrEnd: Array[Int] = new Array[Int](256)
+  var textCommas: Array[Int] = new Array[Int](256)
+  var textWords: Array[Int] = new Array[Int](256)
+  var textStart: Array[Int] = new Array[Int](256)
+  var textEnd: Array[Int] = new Array[Int](256)
+  var textCollapsed: Array[Boolean] = new Array[Boolean](256)
 
   var nAttrs: Int = 0
   var attrNames: Array[String] = new Array[String](64)
@@ -63,6 +76,11 @@ final class Dom {
     text = java.util.Arrays.copyOf(text, n)
     attrStart = java.util.Arrays.copyOf(attrStart, n)
     attrEnd = java.util.Arrays.copyOf(attrEnd, n)
+    textCommas = java.util.Arrays.copyOf(textCommas, n)
+    textWords = java.util.Arrays.copyOf(textWords, n)
+    textStart = java.util.Arrays.copyOf(textStart, n)
+    textEnd = java.util.Arrays.copyOf(textEnd, n)
+    textCollapsed = java.util.Arrays.copyOf(textCollapsed, n)
   }
 
   /** Allocate a node and link it under `par` (unless par < 0). */

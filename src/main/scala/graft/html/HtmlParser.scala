@@ -1,5 +1,7 @@
 package graft.html
 
+import graft.text.PyText
+
 /** From-scratch, allocation-pooled HTML tokenizer + tree builder.
   *
   * Design goals (north-star requirements):
@@ -18,12 +20,25 @@ package graft.html
   * DOM; whitespace-only text nodes are not materialized (every
   * downstream consumer strips-and-drops them anyway, cf. the reference
   * stripped-strings semantics at core/extractors/base.py:84-86).
+  *
+  * The parser owns each text node's character facts (comma and word
+  * counts, stripped interior, collapsed flag; see [[Dom]]): it classifies
+  * every text character once, as it appends it to the node, on every
+  * emission path — plain runs, entity output, the merge into a preceding
+  * text sibling, and raw-text/RCDATA content. Downstream consumers read
+  * the facts instead of rescanning the text.
   */
 final class HtmlParser {
   import TagDict._
 
   private val dom = new Dom
   private val sb = new java.lang.StringBuilder(4096)
+  // The text gathered since the last flush is the source range
+  // [runStart, runEnd) while it is one plain run, the common case: it is
+  // then copied out once, by `substring`. An entity or a stray '<' moves
+  // it into `sb`, which gathers the rest.
+  private var runStart = -1
+  private var runEnd = -1
   private val nameBuf = new java.lang.StringBuilder(32)
   private var stack = new Array[Int](128)
   private var stackTags = new Array[Int](128)
@@ -69,24 +84,110 @@ final class HtmlParser {
 
   private def curParent: Int = if (depth == 0) 0 else stack(depth - 1)
 
-  private def flushText(): Unit = {
-    if (sb.length() > 0) {
-      var ws = true
-      var i = 0
-      val n = sb.length()
-      while (ws && i < n) { ws = graft.text.PyText.isPySpace(sb.charAt(i)); i += 1 }
-      if (!ws) {
-        val p = curParent
-        // merge with a preceding text sibling
-        val last = dom.lastChild(p)
-        if (last >= 0 && dom.isText(last)) dom.text(last) = dom.text(last) + sb.toString
-        else {
-          val t = dom.newNode(2, -1, p)
-          dom.text(t) = sb.toString
+  // Facts of the text gathered since the last flush (or of a raw-text
+  // node), kept by [[scanText]] as characters are appended; positions
+  // are offsets into the node's text
+  private var tCommas = 0
+  private var tWords = 0
+  private var tStart = 0
+  private var tEnd = 0
+  private var tInWord = false
+  private var tGapOk = false // the space run since the last word is one ' '
+  private var tCollapsed = true
+
+  /** Start gathering a new text: no pending run, empty `sb`, no facts. */
+  private def resetText(): Unit = {
+    runStart = -1
+    sb.setLength(0)
+    tCommas = 0; tWords = 0; tStart = 0; tEnd = 0
+    tInWord = false; tGapOk = false; tCollapsed = true
+  }
+
+  /** Classify `s[from, to)` — stopping early at the first `'<'` or `'&'`
+    * when `markup` — as the text continuing at offset `pos` of the node
+    * being gathered; returns where it stopped. The facts live in locals
+    * for the loop: this is the parser's per-character hot path.
+    */
+  private def scanText(s: String, from: Int, to: Int, pos: Int, markup: Boolean): Int = {
+    var commas = tCommas; var words = tWords; var start = tStart; var end = tEnd
+    var inWord = tInWord; var gapOk = tGapOk; var collapsed = tCollapsed
+    val shift = pos - from
+    var j = from
+    var stop = false
+    while (j < to && !stop) {
+      val c = s.charAt(j)
+      if (markup && (c == '<' || c == '&')) stop = true
+      else {
+        if (c == ',') commas += 1
+        if (PyText.isPySpace(c)) {
+          if (inWord) { inWord = false; end = j + shift; gapOk = c == ' ' }
+          else gapOk = false
+        } else if (!inWord) {
+          inWord = true
+          if (words == 0) start = j + shift
+          else if (!gapOk) collapsed = false
+          words += 1
         }
+        j += 1
       }
-      sb.setLength(0)
     }
+    if (inWord) end = j + shift
+    tCommas = commas; tWords = words; tStart = start; tEnd = end
+    tInWord = inWord; tGapOk = gapOk; tCollapsed = collapsed
+    j
+  }
+
+  private def textLength: Int = if (runStart >= 0) runEnd - runStart else sb.length()
+
+  /** Move a pending plain run into `sb`. */
+  private def spillRun(): Unit =
+    if (runStart >= 0) { sb.append(dom.src, runStart, runEnd); runStart = -1 }
+
+  private def appendText(s: String): Unit = {
+    spillRun()
+    scanText(s, 0, s.length, sb.length(), markup = false)
+    sb.append(s)
+  }
+
+  private def record(node: Int): Unit = {
+    dom.textCommas(node) = tCommas
+    dom.textWords(node) = tWords
+    dom.textStart(node) = tStart
+    dom.textEnd(node) = tEnd
+    dom.textCollapsed(node) = tCollapsed
+  }
+
+  private def gathered: String =
+    if (runStart >= 0) dom.src.substring(runStart, runEnd) else sb.toString
+
+  /** Materialize the gathered text as a text node, or append it to a
+    * preceding text sibling, joining the two nodes' facts;
+    * whitespace-only text is dropped.
+    */
+  private def flushText(): Unit = {
+    if (tWords > 0) {
+      val p = curParent
+      val last = dom.lastChild(p)
+      if (last >= 0 && dom.isText(last)) {
+        val old = dom.text(last)
+        val text = gathered
+        val oldEnd = dom.textEnd(last)
+        // the Python space between the old node's last word and text's first
+        val gap = old.length - oldEnd + tStart
+        val gapIsOneSpace = gap == 1 &&
+          (if (oldEnd < old.length) old.charAt(oldEnd) else text.charAt(0)) == ' '
+        dom.text(last) = old + text
+        dom.textCommas(last) += tCommas
+        dom.textWords(last) += (if (gap == 0) tWords - 1 else tWords) // a word spans the join
+        dom.textEnd(last) = old.length + tEnd
+        dom.textCollapsed(last) &&= tCollapsed && (gap == 0 || gapIsOneSpace)
+      } else {
+        val t = dom.newNode(2, -1, p)
+        dom.text(t) = gathered
+        record(t)
+      }
+    }
+    resetText()
   }
 
   /** End-of-row hook: drop the parsed source string so the pooled
@@ -98,7 +199,7 @@ final class HtmlParser {
   def parse(html: String): Dom = {
     dom.reset(html) // lazy attr values substring from the source
     depth = 0
-    sb.setLength(0)
+    resetText()
     val len = html.length
     var i = 0
     while (i < len) {
@@ -120,19 +221,20 @@ final class HtmlParser {
           flushText()
           val end = html.indexOf('>', i + 2)
           i = if (end < 0) len else end + 1
-        } else { sb.append('<'); i += 1 }
+        } else { appendText("<"); i += 1 }
       } else if (c == '&') {
+        spillRun()
+        val at = sb.length()
         i = Entities.decodeRef(html, i, len, sb)
-      } else {
-        // bulk-copy the whole plain-text run (the dominant case) in one
-        // append instead of per-character
-        var j = i + 1
-        var stop = false
-        while (j < len && !stop) {
-          val cj = html.charAt(j)
-          if (cj == '<' || cj == '&') stop = true else j += 1
-        }
-        sb.append(html, i, j)
+        val decoded = sb.substring(at)
+        scanText(decoded, 0, decoded.length, at, markup = false)
+      } else if (c == '<') { appendText("<"); i += 1 } // ends the input
+      else {
+        // the whole plain-text run (the dominant case), classified as its
+        // end is sought and copied only when the text node is made
+        val j = scanText(html, i, len, textLength, markup = true)
+        if (textLength == 0) { runStart = i; runEnd = j }
+        else sb.append(html, i, j) // after an entity or a stray '<'
         i = j
       }
     }
@@ -244,13 +346,13 @@ final class HtmlParser {
       if (contentEnd > i) {
         val raw = s.substring(i, contentEnd)
         val txt = if (isRcdata(t)) Entities.decodeAll(raw) else raw
-        var ws = true
-        var k = 0
-        while (ws && k < txt.length) { ws = graft.text.PyText.isPySpace(txt.charAt(k)); k += 1 }
-        if (!ws) {
+        scanText(txt, 0, txt.length, 0, markup = false)
+        if (tWords > 0) {
           val tn = dom.newNode(2, -1, node)
           dom.text(tn) = txt
+          record(tn)
         }
+        resetText()
       }
       resume
     } else {

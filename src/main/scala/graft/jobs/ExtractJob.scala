@@ -45,8 +45,10 @@ final case class ExtractJobConfig(
   *    map-side compute skew — SURVEY.md §4.1). Pages of at least
   *    `bigHtmlBytes` are split off and round-robin rebalanced so a 100MB
   *    page cannot straggle a partition of 4KB pages; outputs are unioned.
-  *  - **Overlapped units.** The next unit's write starts before the
-  *    current unit is published; publishes stay serial, in unit order.
+  *  - **Overlapped units.** Two writes are queued ahead of the publish:
+  *    units u+1 and u+2 have started before unit u is published, so
+  *    each unit's planning and publishing hide behind running jobs.
+  *    Publishes stay serial, in unit order.
   *  - **Lineage.** Every output row carries its task partition id; the
   *    manifest row carries per-unit row/byte counts, which IcebergLite
   *    reads from the written files, and the strategy/failure histogram.
@@ -71,7 +73,9 @@ object ExtractJob {
 
   /** Url-hash mode's input: its own partitions when it has at least one
     * per core, else a round-robin spread to the core count. For a scan,
-    * counting partitions plans its file splits and runs no job. A
+    * counting partitions plans its file splits and runs no job; it reads
+    * the physical plan's RDD, since `pages.rdd` would plan a Row
+    * conversion and post an SQL execution of its own. A
     * byte-range split of a parquet file reads only the row groups
     * assigned to its range, so a unit staged as one large
     * single-row-group file counts as many partitions but runs as one
@@ -81,7 +85,7 @@ object ExtractJob {
     */
   private[graft] def atClusterWidth(pages: DataFrame): DataFrame = {
     val cores = pages.sparkSession.sparkContext.defaultParallelism
-    if (pages.rdd.getNumPartitions >= cores) pages else pages.repartition(cores)
+    if (pages.queryExecution.toRdd.getNumPartitions >= cores) pages else pages.repartition(cores)
   }
 
   /** Host-grouped (politeness) mode: salted host repartition for the
@@ -180,13 +184,17 @@ object ExtractJob {
     }
   }
 
+  /** How many unit writes run ahead of the unit being published. */
+  private val WritesAhead = 2
+
   /** Run all uncommitted units; returns the units processed this run.
-    * Units overlap one ahead: unit u's plan is built and its write
-    * started before unit u-1 is published. Publishes run on the
-    * caller's thread, in unit order. On a failure no write outlives
-    * this call, and the exception is the one of the earliest unit that
-    * failed. `failAfterUnits` is a test hook for kill-and-rerun resume
-    * proofs: it throws once that many units are published.
+    * Units overlap two ahead: units u+1 and u+2 are planned and their
+    * writes started before unit u is published. Publishes run on the
+    * caller's thread, in unit order. On a failure every unpublished
+    * write is cancelled and joined, so none outlives this call, and the
+    * exception is the one of the earliest unit that failed.
+    * `failAfterUnits` is a test hook for kill-and-rerun resume proofs:
+    * it throws once that many units are published.
     */
   def runUnits(
       spark: SparkSession,
@@ -208,27 +216,29 @@ object ExtractJob {
       new UnitWrite(u, hist, spark.sparkContext, () => out.writeData(extracted, u))
     }
 
-    def publish(w: UnitWrite): Unit = {
+    // started and not yet published, in unit order; a write leaves the
+    // queue only once published, so a failed one is still cancelled
+    val inFlight = mutable.Queue.empty[UnitWrite]
+    def publishOldest(): Unit = {
+      val w = inFlight.head
       w.await()
       out.publish(spark, w.unit,
         w.hist.value.map { case (k, v) => s"strategy_$k" -> v.toString })
       processed += w.unit
+      inFlight.dequeue()
     }
 
-    // `pending` is started and not yet published; `started` is the
-    // write just started, one unit ahead of it
-    var pending: Option[UnitWrite] = None
-    var started: Option[UnitWrite] = None
     try {
       for (u <- todo.take(failAfterUnits)) {
         val next = Try(start(u))
-        started = next.toOption
-        pending.foreach(publish)
-        pending = started
+        next.foreach(inFlight.enqueue(_))
+        // a unit that cannot start fails the run after the units before it
+        while (inFlight.size > WritesAhead || (next.isFailure && inFlight.nonEmpty))
+          publishOldest()
         next.get
       }
-      pending.foreach(publish)
-    } finally (pending ++ started).foreach(_.cancel())
+      while (inFlight.nonEmpty) publishOldest()
+    } finally inFlight.foreach(_.cancel())
     if (todo.size > failAfterUnits)
       throw new RuntimeException(s"injected failure before unit ${todo(failAfterUnits)}")
     processed.toSeq

@@ -1,6 +1,8 @@
 package graft.extract
 
 import graft.html.HtmlParser
+import graft.table.SyntheticPages
+import graft.text.PyText
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
 
@@ -278,5 +280,55 @@ class CascadeSpec extends AnyFunSuite {
     assert(title("The Actual Story Headline Here | SiteName") ==
       "The Actual Story Headline Here")
     assert(title("Site - Short") == "Site - Short") // no 4-word part → orig
+  }
+
+  test("replaying parse, stats and each strategy in cascade order equals the cascade on every corpus page") {
+    // the layer-by-layer replay the benchmark times: one parser and one
+    // DomStats reused across pages, the strategies called directly, the
+    // win rule spelled out; a strategy reading state that only the
+    // cascade path sets makes the two disagree
+    val cfg = CascadeConfig()
+    val strategies = Seq[(String, (graft.html.Dom, DomStats) => StratResult)](
+      "newspaper" -> Extractors.newspaperLike,
+      "readability" -> Extractors.readability,
+      "http" -> Extractors.bs4Strip)
+    assert(cfg.strategies == strategies.map(_._1))
+    val parser = new HtmlParser
+    val stats = new DomStats
+    val cascade = new CascadeExtractor
+
+    def replay(url: String, html: Array[Byte]): (String, String) =
+      if (html == null || html.isEmpty || html.length > cfg.maxHtmlBytes) (null, null)
+      else {
+        val decoded = PageCodec.decode(html)
+        if (PyText.strip(decoded).isEmpty) (null, null)
+        else try {
+          val dom = parser.parse(decoded)
+          stats.compute(dom)
+          var won: (String, String) = null
+          var best: (String, String) = (null, null)
+          var bestLen = 0
+          val it = strategies.iterator
+          while (won == null && it.hasNext) {
+            val (name, run) = it.next()
+            if (name != "newspaper" || (url != null && url.nonEmpty)) {
+              val r = run(dom, stats)
+              if (r.succeeded) {
+                val len = PyText.strip(if (r.content == null) "" else r.content).length
+                if (len >= cfg.minContentLength) won = (name, r.content)
+                else if (len > bestLen) { best = (name, r.content); bestLen = len }
+              }
+            }
+          }
+          if (won != null) won else best
+        } finally parser.release()
+      }
+
+    val differ = (0L until 2000L).filter { id =>
+      val page = SyntheticPages.pageFor(42L, id)
+      val ex = cascade.extract(page.url, page.html, cfg)
+      replay(page.url, page.html) != ((ex.strategy_used, ex.extracted_text))
+    }
+    assert(differ.isEmpty, s"${differ.size} pages differ, first ${differ.take(5)}")
   }
 }

@@ -1,6 +1,10 @@
 package graft.html
 
+import graft.extract.PageCodec
+import graft.table.SyntheticPages
+import graft.text.PyText
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.regex.Pattern
 
 class HtmlParserSpec extends AnyFunSuite {
 
@@ -151,5 +155,92 @@ class HtmlParserSpec extends AnyFunSuite {
     val big = "x" * 1000000
     val dom = parse(s"<p>$big</p>")
     assert(textNodes(dom).head.length == 1000000)
+  }
+
+  // A from-scratch recount of one text's facts through regexes over
+  // Python's whitespace class: (commas, words, strip start, strip end,
+  // interior collapsed)
+  private val wsRun = Pattern.compile(PyText.PyWsClass + "+")
+  private val wordRun = Pattern.compile("[^" + PyText.PyWsClass.drop(1) + "+")
+  private val leadWs = Pattern.compile("^" + PyText.PyWsClass + "*")
+  private val trailWs = Pattern.compile(PyText.PyWsClass + "*$")
+
+  private def recount(s: String): (Int, Int, Int, Int, Boolean) = {
+    val commas = s.count(_ == ',')
+    val wm = wordRun.matcher(s)
+    var words = 0
+    while (wm.find()) words += 1
+    val lm = leadWs.matcher(s); lm.find()
+    val tm = trailWs.matcher(s); tm.find()
+    val start = lm.end()
+    val end = math.max(start, tm.start())
+    val interior = s.substring(start, end)
+    (commas, words, start, end, wsRun.matcher(interior).replaceAll(" ") == interior)
+  }
+
+  private def facts(dom: Dom, n: Int): (Int, Int, Int, Int, Boolean) =
+    (dom.textCommas(n), dom.textWords(n), dom.textStart(n), dom.textEnd(n), dom.textCollapsed(n))
+
+  /** Every text node's recorded facts equal a recount of its text;
+    * returns the text nodes checked.
+    */
+  private def checkFacts(dom: Dom, what: String): Int = {
+    var checked = 0
+    var n = 0
+    while (n < dom.size) {
+      if (dom.isText(n)) {
+        val s = dom.text(n)
+        assert(facts(dom, n) == recount(s), s"$what, node $n: ${s.take(80)}")
+        assert(dom.textWords(n) > 0, s"$what, node $n is whitespace-only")
+        checked += 1
+      }
+      n += 1
+    }
+    checked
+  }
+
+  test("text facts recorded during the parse equal a recount of every text node") {
+    val parser = new HtmlParser
+    var nodes = 0
+    for (id <- 0L until 2000L) {
+      val page = SyntheticPages.pageFor(42L, id)
+      if (page.html != null) {
+        nodes += checkFacts(parser.parse(PageCodec.decode(page.html)), s"page $id")
+        parser.release()
+      }
+    }
+    assert(nodes > 90000, nodes) // about 48 text nodes a page
+
+    // every emission path: entities that decode to Python spaces
+    // (&#133; remaps to U+2026, not a space), runs merged across a comment
+    // or an entity, CR/LF, \x1c-\x1f, U+0085, astral characters, raw
+    // text, RCDATA, and a dropped whitespace-only run
+    val adversarial = Seq(
+      "<p>a&nbsp;b&#x3000;c&#133;d &nbsp; e</p>",
+      "<p>&nbsp;lead, trail&#32;</p><p>&#32;</p>",
+      "<p>one<!-- c -->two, three <!-- c --> four<!-- c --> five</p>",
+      "<p>word,<!-- c -->,next <!-- --> \n <!-- -->x</p>",
+      "<p>a<!---->&nbsp;<!---->b</p><p>a&#32;<!---->b</p><p>a <!---->&#x20;b</p>",
+      "<p>crlf\r\nline \u001c\u001d\u001e\u001f seps \u0085 nel</p>",
+      "<p>astral \ud83d\ude00,\ud83d\ude00 pair</p><p>1 < 2 <</p>",
+      "<script> if (a < b) { x = 1,  y } </script><style>\n p { }\n</style>",
+      "<title> Tom &amp;&nbsp;Jerry, &#x3000;</title><textarea>a  b&#32;</textarea>",
+      "<div> \n\t &nbsp; </div><p>kept</p><xmp>  </xmp><title>\u3000</title>x<")
+    for (html <- adversarial) checkFacts(parser.parse(html), html)
+
+    // the merge joins facts: a word spanning the join counts once, and a
+    // join of two spaces is not collapsed
+    val merged = parser.parse("<p>a,<!---->b c</p><div>x <!----> y</div>")
+    val p = onlyText(merged, TagDict.P)
+    assert(merged.text(p) == "a,b c" && facts(merged, p) == ((1, 2, 0, 5, true)))
+    val d = onlyText(merged, TagDict.Div)
+    assert(merged.text(d) == "x  y" && !merged.textCollapsed(d))
+  }
+
+  /** The single text child of the first `tag` element. */
+  private def onlyText(d: Dom, tag: Int): Int = {
+    val c = d.firstChild(d.findFirst(0, tag))
+    assert(d.isText(c) && d.nextSib(c) < 0)
+    c
   }
 }

@@ -9,8 +9,8 @@ import java.nio.file.Files
 
 /** North-rule job mechanics: unit-granular checkpointed resume
   * (kill-and-rerun yields an identical table), manifest lineage,
-  * map-side url-hash plans, overlapped units that fail cleanly, and
-  * host-grouped size-bucketed processing.
+  * map-side url-hash plans, units overlapped two writes deep that fail
+  * cleanly, and host-grouped size-bucketed processing.
   */
 class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
@@ -107,6 +107,47 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
       c.getMessage.contains("page 100 of unit 2 is broken")), e)
     assert(t.committedUnits(spark) == Seq(0, 1))
     assertNothingRunning()
+  }
+
+  test("two writes run ahead of the publish; a failed unit cancels them and a rerun completes the table") {
+    val t = new IcebergLite(tempDir("graft-two-ahead").toString)
+    val planned = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def failing(u: Int): DataFrame = {
+      import testImplicits._
+      planned += u
+      if (u == 4) UnitFailGate.lastUnitPlanned.countDown()
+      // unit 2's second task throws once its first task is on a 1 s page
+      // that ignores interrupts, started when unit 2 is about to be
+      // published: the failed write still has a task to join
+      val perUnit = nPages / cfg.nUnits
+      spark.range(u * perUnit, (u + 1) * perUnit, 1, 2).mapPartitions(_.map { id =>
+        if (id == 2 * perUnit) {
+          UnitFailGate.lastUnitPlanned.await(10, java.util.concurrent.TimeUnit.SECONDS)
+          UnitFailGate.slowFailedUnitPage.countDown()
+          val end = System.nanoTime() + 1000000000L
+          while (System.nanoTime() < end)
+            try Thread.sleep(10) catch { case _: InterruptedException => }
+        }
+        if (id == 2 * perUnit + perUnit / 2) {
+          UnitFailGate.slowFailedUnitPage.await(10, java.util.concurrent.TimeUnit.SECONDS)
+          throw new IllegalStateException("unit 2's write is broken")
+        }
+        SyntheticPages.pageFor(42L, id)
+      }).toDF()
+    }
+    val e = intercept[Exception](ExtractJob.runUnits(spark, failing, t, cfg))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.getMessage != null &&
+      c.getMessage.contains("unit 2's write is broken")), e)
+    // units 3 and 4 were in flight when unit 2 failed, unit 5 never started
+    assert(planned == Seq(0, 1, 2, 3, 4))
+    assert(t.committedUnits(spark) == Seq(0, 1))
+    assertNothingRunning()
+
+    assert(ExtractJob.runUnits(spark, unitPages, t, cfg) == (2 until cfg.nUnits))
+    val clean = new IcebergLite(tempDir("graft-two-ahead-clean").toString)
+    ExtractJob.runUnits(spark, unitPages, clean, cfg)
+    assert(tableDigest(t) == tableDigest(clean))
   }
 
   test("url-hash mode is map-side: one file scan, no exchange; host-grouped keeps its repartition") {
@@ -251,9 +292,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
   }
 }
 
-/** Opened when the next unit's slow page starts; the broken page waits
-  * for it (tasks in local mode share the JVM).
+/** Opened when a slow page starts; the broken page waits for it (tasks
+  * in local mode share the JVM). One latch per test.
   */
 private object UnitFailGate {
   val slowPage = new java.util.concurrent.CountDownLatch(1)
+  val slowFailedUnitPage = new java.util.concurrent.CountDownLatch(1)
+  val lastUnitPlanned = new java.util.concurrent.CountDownLatch(1)
 }
