@@ -137,6 +137,8 @@ object Cli {
         // a share of each unit, so a unit is staged as `cpus` even files:
         // url-hash mode runs a unit on its input splits, and one file
         // would run it as one task.
+        // A rerun restages with overwrite, so the copy serves no resume:
+        // it is deleted once the units have run or failed.
         val staged = s"${args(2)}/_staged_pages"
         pages.withColumn("unit",
             pmod(xxhash64(col("url")), lit(units)).cast("int"))
@@ -146,13 +148,17 @@ object Cli {
         // inputs / large --units) — treat a missing path as zero rows
         // rather than letting the read throw
         val pagesSchema = pages.schema
-        val ran = ExtractJob.runUnits(spark,
-          u => {
-            val unitPath = s"$staged/unit=$u"
-            if (new java.io.File(unitPath).isDirectory) spark.read.parquet(unitPath)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], pagesSchema)
-          }, out, cfg)
+        val stagedPath = new org.apache.hadoop.fs.Path(staged)
+        val ran =
+          try ExtractJob.runUnits(spark,
+            u => {
+              val unitPath = s"$staged/unit=$u"
+              if (new java.io.File(unitPath).isDirectory) spark.read.parquet(unitPath)
+              else spark.createDataFrame(
+                spark.sparkContext.emptyRDD[Row], pagesSchema)
+            }, out, cfg)
+          finally stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(stagedPath, true)
         // the reference's success epilogue (app.py:112-128): completion
         // line, extractor/processors, content size, environment, the
         // below-threshold note, and echoed warnings — batch analogues

@@ -28,11 +28,12 @@ final case class ExtractJobConfig(
   * IcebergLite table, with the 10^12-document mechanics made explicit:
   *
   *  - **Units = resume granularity.** The input is processed as nUnits
-  *    independent slices; each completed unit is committed to the
-  *    manifest atomically. A killed job re-runs only uncommitted units
-  *    and never re-reads committed input (each unit reads only its own
-  *    input slice — no full rescan per unit). At 10^12 docs a unit is a
-  *    group of Iceberg data files sized to minutes of cluster work.
+  *    independent slices; each completed unit gets its manifest and is
+  *    committed by one atomic snapshot rename. A killed job re-runs only
+  *    units the newest snapshot does not name and never re-reads
+  *    committed input (each unit reads only its own input slice — no
+  *    full rescan per unit). At 10^12 docs a unit is a group of Iceberg
+  *    data files sized to minutes of cluster work.
   *  - **Url-hash mode is map-side.** The default mode runs the cascade
   *    on the input's own partitions: one scan, no exchange. An input
   *    with fewer partitions than the cluster has cores is spread

@@ -324,8 +324,7 @@ object SimilarityQueries {
           col("embedding").cast("array<double>").as("embedding"),
           col("label").cast("string").as("label"))
       graft.rag.Rag.search(index, anchorVec(s, dir), topK = 10,
-          threshold = 0.0, filters = Map("label" -> "2"),
-          parityPostKFilter = true)
+          threshold = 0.0, filters = Map("label" -> "2"))
         .select(col("id"),
           floor(col("score") * 10000).cast("long").as("score_bp"), col("label"))
         .orderBy(col("id"))

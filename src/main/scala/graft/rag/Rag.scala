@@ -39,29 +39,23 @@ object Rag {
 
   /** Cosine top-k search (core/rag/stores/file_store.py:82-127).
     *
-    * `parityPostKFilter = true` reproduces the reference quirk of
-    * applying metadata filters AFTER the k-cut (can return < k rows
-    * even when k matches exist, file_store.py:104-121); false applies
-    * them before — the sane default for new callers.
+    * Metadata filters apply AFTER the k-cut, the reference's rule: it
+    * can return < k rows even when k matches exist (file_store.py:104-121).
     */
   def search(
       index: DataFrame,
       query: Array[Float],
       topK: Int = 10,
       threshold: Double = 0.0,
-      filters: Map[String, String] = Map.empty,
-      parityPostKFilter: Boolean = true): DataFrame = {
+      filters: Map[String, String] = Map.empty): DataFrame = {
     val q = typedLit(query.toSeq)
-    val scored = index
-      .withColumn("score", VectorExpr.cosineSim(col("embedding"), q))
-      .where(col("score") >= threshold)
-    def applyFilters(df: DataFrame): DataFrame =
-      filters.foldLeft(df) { case (d, (k, v)) => d.where(col(k) === lit(v)) }
-    val base = if (parityPostKFilter) scored else applyFilters(scored)
     // deterministic tiebreak by id (numpy argsort ties are order-
     // dependent; a distributed engine needs a total order)
-    val cut = base.orderBy(desc("score"), asc("id")).limit(topK)
-    if (parityPostKFilter) applyFilters(cut) else cut
+    val cut = index
+      .withColumn("score", VectorExpr.cosineSim(col("embedding"), q))
+      .where(col("score") >= threshold)
+      .orderBy(desc("score"), asc("id")).limit(topK)
+    filters.foldLeft(cut) { case (d, (k, v)) => d.where(col(k) === lit(v)) }
   }
 
   /** add_documents upsert semantics (file_store.py:46-80): rows whose

@@ -13,23 +13,24 @@ import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table layout over Parquet, implemented thin (no
   * Iceberg jar ships in this sandbox — SURVEY.md §4 note): data files
-  * live under `data/unit=<u>/v-<k>/` (immutable per version), a unit
-  * becomes visible only when its manifest entry
-  * `manifest/unit-<u>-v<k>.json` exists, and every publish also commits
-  * a table-level snapshot `snapshot/snap-<n>.json` (the committed
-  * unit→version map). All metadata files are written via tmp + atomic
-  * rename (the same commit idea as the reference's index save,
+  * live under `data/unit=<u>/v-<k>/` (immutable per version). A publish
+  * writes the unit's manifest `manifest/unit-<u>-v<k>.json` (lineage and
+  * metrics, never changed afterwards), then commits the table-level
+  * snapshot `snapshot/snap-<n>.json`, the unit→version map. That rename
+  * is the only commit point: readers, resume and expiry all take the
+  * table state from the newest snapshot. Metadata files are written via
+  * tmp + atomic rename (the commit idea of the reference's index save,
   * file_store.py:246-251, and of Iceberg snapshot commits).
   *
   * This gives the north rule's checkpointed resume — a killed job
-  * re-runs only units without manifest entries (uncommitted staged
-  * data is overwritten), and readers never see half-written units —
-  * plus Iceberg's signature reader features: [[readAt]] time-travels to
-  * any unexpired snapshot (versioned data is immutable), and
-  * [[expireSnapshots]] is the retention story that bounds storage
-  * growth under re-publishes. Units are the resume granularity — at
-  * 10^12 docs you size them so one unit is a few minutes of cluster
-  * work (e.g. 10k units).
+  * re-runs only units the newest snapshot does not name (uncommitted
+  * staged data and manifests are overwritten), and readers never see
+  * half-written units — plus Iceberg's signature reader features:
+  * [[readAt]] time-travels to any unexpired snapshot (versioned data is
+  * immutable), and [[expireSnapshots]] is the retention story that
+  * bounds storage growth under re-publishes. Units are the resume
+  * granularity — at 10^12 docs you size them so one unit is a few
+  * minutes of cluster work (e.g. 10k units).
   *
   * The table owns each unit's `rows`, `files` and `bytes`: [[publish]]
   * reads them from the written files (row counts from the parquet
@@ -58,32 +59,16 @@ final class IcebergLite(val root: String) extends Serializable {
     */
   def dataPath(unit: Int, version: Int): String = s"$root/data/unit=$unit/v-$version"
 
-  /** Manifests are versioned: `unit-<u>-v<k>.json`. A re-publish writes
-    * v(k+1) via tmp + atomic rename BEFORE deleting vk, so a committed
-    * unit always has at least one manifest entry — first-time publish
-    * and re-publish are both atomic for readers (the delete-then-rename
-    * window of a fixed filename is gone). Readers use the highest
-    * version per unit.
-    */
+  /** A unit version's manifest; [[expireSnapshots]] deletes it with the data. */
   private def manifestDir = new Path(s"$root/manifest")
   private def manifestPath(unit: Int, version: Int) =
     new Path(s"$root/manifest/unit-$unit-v$version.json")
 
-  /** (unit, version) pairs parsed from one listing of the manifest dir. */
-  private def manifestEntries(f: FileSystem): Seq[(Int, Int)] =
-    if (!f.exists(manifestDir)) Seq.empty
-    else f.listStatus(manifestDir).toSeq.map(_.getPath.getName).collect {
-      case ManifestName(u, v) => (u.toInt, v.toInt)
-    }
-
-  /** Latest manifest version per committed unit. */
-  private def latestVersions(f: FileSystem): Map[Int, Int] = latestOf(manifestEntries(f))
-
   def committedUnits(spark: SparkSession): Seq[Int] =
-    latestVersions(fs(spark)).keys.toSeq.sorted
+    liveState(fs(spark)).keys.toSeq.sorted
 
   /** Write one unit's rows and commit it: parquet overwrite into the
-    * unit dir, then atomic manifest publish. Idempotent — re-running a
+    * unit dir, then atomic publish. Idempotent — re-running a
     * committed unit is a no-op for readers; re-running an uncommitted
     * one overwrites its partial data. Returns the unit's row count.
     */
@@ -98,24 +83,24 @@ final class IcebergLite(val root: String) extends Serializable {
     * version). Committed versions' files are never touched.
     */
   def writeData(df: DataFrame, unit: Int): Unit = {
-    val next = nextVersion(latestVersions(fs(df.sparkSession)), unit)
+    val next = nextVersion(liveState(fs(df.sparkSession)), unit)
     df.write.mode("overwrite").parquet(dataPath(unit, next))
   }
 
-  /** Atomically publish a staged unit with lineage + metrics, then
-    * record a table-level snapshot. Returns the unit's row count.
+  /** Publish a staged unit with lineage + metrics: write its manifest,
+    * then commit snapshot N+1 = the live state with the unit at its new
+    * version. Only the snapshot rename commits; a publish that dies
+    * before it leaves the table as it was. Returns the unit's row count.
     *
     * `unit`, `version`, `files`, `bytes` and `rows` come from the table
     * and the staged files and win over same-named caller `metrics`.
-    * One listing of the manifest dir yields the new version, the
-    * superseded entries to retire and the snapshot state.
     */
   def publish(spark: SparkSession, unit: Int,
       metrics: Map[String, String] = Map.empty): Long = {
     val f = fs(spark)
-    val entries = manifestEntries(f)
-    val latest = latestOf(entries)
-    val next = nextVersion(latest, unit)
+    val ids = snapshotIdsOf(f)
+    val live = ids.lastOption.fold(Map.empty[Int, Int])(snapshotState(f, _))
+    val next = nextVersion(live, unit)
     val written = f.listStatus(new Path(dataPath(unit, next)))
       .filter(s => isDataFile(s.getPath.getName))
     val conf = spark.sparkContext.hadoopConfiguration
@@ -126,32 +111,26 @@ final class IcebergLite(val root: String) extends Serializable {
       "files" -> written.length.toString,
       "bytes" -> written.map(_.getLen).sum.toString,
       "rows" -> rows.toString)
-    val json = fields.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": "${v.replace("\\", "\\\\").replace("\"", "\\\"")}"""" }
-      .mkString("{", ", ", "}")
-    // on rename failure (S3A/HDFS edge) this fails BEFORE retiring
-    // superseded versions, or a committed unit would silently lose its
-    // only manifest entry
-    commitFile(f, manifestDir, manifestPath(unit, next), json)
-    // retire superseded manifest versions only after the new one is
-    // visible — their DATA stays until a snapshot referencing it expires
-    entries.filter { case (u, v) => u == unit && v < next }
-      .foreach { case (u, v) => f.delete(manifestPath(u, v), false) }
-    commitSnapshot(f, latest + (unit -> next))
+    // no snapshot names this version, so a manifest already here is a
+    // dead publish's, and a rename onto it fails on HDFS
+    f.delete(manifestPath(unit, next), false)
+    commitFile(f, manifestDir, manifestPath(unit, next), new java.util.TreeMap(fields.asJava))
+    val state = (live + (unit -> next)).map { case (u, v) => u.toString -> Int.box(v) }
+    commitFile(f, snapshotDir, snapshotPath(ids.lastOption.getOrElse(0) + 1),
+      new java.util.TreeMap(state.asJava))
     rows
   }
 
-  /** Write `text` to `dest` via a tmp file in `dir` + atomic rename. */
-  private def commitFile(f: FileSystem, dir: Path, dest: Path, text: String): Unit = {
+  /** Write `value` as JSON to `dest` via a tmp file in `dir` + atomic rename. */
+  private def commitFile(f: FileSystem, dir: Path, dest: Path, value: AnyRef): Unit = {
     f.mkdirs(dir)
     val tmp = new Path(dir, s".${dest.getName}.tmp")
     val out = f.create(tmp, true)
-    out.write(text.getBytes(StandardCharsets.UTF_8))
-    out.close()
+    try out.write(Json.writeValueAsBytes(value)) finally out.close()
     if (!f.rename(tmp, dest)) sys.error(s"commit failed: rename $tmp -> $dest")
   }
 
-  // ---------------- snapshots (time travel) ----------------
+  // ---------------- snapshots (the commit record, time travel) ----------------
 
   private def snapshotDir = new Path(s"$root/snapshot")
   private def snapshotPath(n: Int) = new Path(s"$root/snapshot/snap-$n.json")
@@ -163,26 +142,20 @@ final class IcebergLite(val root: String) extends Serializable {
         n.stripPrefix("snap-").stripSuffix(".json").toInt }
       .sorted
 
-  /** Write snapshot N+1 = the committed (unit → version) map, via tmp +
-    * atomic rename — the Iceberg snapshot-commit idea. Called on every
-    * publish, so each table state is addressable for time travel until
-    * expired.
-    */
-  private def commitSnapshot(f: FileSystem, state: Map[Int, Int]): Unit = {
-    val n = snapshotIdsOf(f).lastOption.getOrElse(0) + 1
-    val json = state.toSeq.sorted.map { case (u, v) => s""""$u": $v""" }.mkString("{", ", ", "}")
-    commitFile(f, snapshotDir, snapshotPath(n), json)
-  }
-
   /** Committed snapshot ids, oldest first. */
   def snapshots(spark: SparkSession): Seq[Int] = snapshotIdsOf(fs(spark))
 
-  private def snapshotState(f: FileSystem, id: Int): Seq[(Int, Int)] = {
+  /** The (unit → version) map snapshot `id` committed. */
+  private def snapshotState(f: FileSystem, id: Int): Map[Int, Int] = {
     val p = snapshotPath(id)
     require(f.exists(p), s"no snapshot $id under $root")
-    "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(readText(f, p))
-      .map(m => (m.group(1).toInt, m.group(2).toInt)).toSeq.sorted
+    Json.readValue(readText(f, p), classOf[java.util.Map[String, Integer]]).asScala
+      .map { case (u, v) => u.toInt -> v.intValue }.toMap
   }
+
+  /** The live table state: the newest snapshot's, empty before the first publish. */
+  private def liveState(f: FileSystem): Map[Int, Int] =
+    snapshotIdsOf(f).lastOption.fold(Map.empty[Int, Int])(snapshotState(f, _))
 
   /** Read the given (unit, version) data dirs as one table. The schema
     * is the one Spark's inference would find, built on the driver: the
@@ -192,9 +165,9 @@ final class IcebergLite(val root: String) extends Serializable {
     * starts no job; listing the dirs stays on the driver up to
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths.
     */
-  private def readVersions(spark: SparkSession, state: Seq[(Int, Int)]): DataFrame = {
+  private def readVersions(spark: SparkSession, state: Map[Int, Int]): DataFrame = {
     val f = fs(spark)
-    val dirs = state.sorted.map { case (u, v) => new Path(dataPath(u, v)) }
+    val dirs = state.toSeq.sorted.map { case (u, v) => new Path(dataPath(u, v)) }
     val first = dirs.iterator.filter(f.exists).map { d =>
       f.listStatus(d).filter(s => s.isFile && isDataFile(s.getPath.getName))
         .sortBy(_.getPath.getName).headOption
@@ -226,42 +199,43 @@ final class IcebergLite(val root: String) extends Serializable {
     readVersions(spark, state)
   }
 
-  /** Expire all but the newest `keepLast` snapshots and DELETE data
-    * versions no kept snapshot (nor the live state) references — the
-    * Iceberg retention story that bounds storage growth under
-    * re-publishes.
+  /** Expire all but the newest `keepLast` snapshots and DELETE the
+    * data and manifest of every version no kept snapshot references —
+    * the Iceberg retention story that bounds storage growth under
+    * re-publishes. The newest snapshot, the live state, is always kept.
     */
   def expireSnapshots(spark: SparkSession, keepLast: Int = 1): Unit = {
     val f = fs(spark)
     val ids = snapshotIdsOf(f)
     val (expire, keep) = ids.splitAt(math.max(0, ids.length - math.max(1, keepLast)))
-    val referenced: Set[(Int, Int)] =
-      keep.flatMap(snapshotState(f, _)).toSet ++ latestVersions(f).toSeq
+    val referenced = keep.flatMap(snapshotState(f, _)).toSet
     expire.foreach { id =>
-      snapshotState(f, id).filterNot(referenced)
-        .foreach { case (u, v) => f.delete(new Path(dataPath(u, v)), true) }
+      snapshotState(f, id).filterNot(referenced).foreach { case (u, v) =>
+        f.delete(new Path(dataPath(u, v)), true)
+        f.delete(manifestPath(u, v), false)
+      }
       f.delete(snapshotPath(id), false)
     }
   }
 
-  /** Read the committed table (only units with manifest entries). */
+  /** Read the committed table: the units the newest snapshot names. */
   def read(spark: SparkSession): DataFrame = {
-    val latest = latestVersions(fs(spark)).toSeq.sorted
-    require(latest.nonEmpty, s"no committed units under $root")
-    readVersions(spark, latest)
+    val live = liveState(fs(spark))
+    require(live.nonEmpty, s"no committed units under $root")
+    readVersions(spark, live)
   }
 
   /** The manifest itself as a DataFrame (per-unit lineage + metrics),
-    * latest version per unit, one row per unit in unit order. The files
+    * of each unit's live version, one row per unit in unit order. The files
     * are parsed on the driver into a local frame of the shape JSON
     * inference gives them: one string column per key, sorted by name,
     * null where a unit lacks the key.
     */
   def manifest(spark: SparkSession): DataFrame = {
     val f = fs(spark)
-    val latest = latestVersions(f).toSeq.sorted
-    require(latest.nonEmpty, s"no committed units under $root")
-    val entries = latest.map { case (u, v) =>
+    val live = liveState(f).toSeq.sorted
+    require(live.nonEmpty, s"no committed units under $root")
+    val entries = live.map { case (u, v) =>
       Json.readValue(readText(f, manifestPath(u, v)), classOf[java.util.Map[String, String]]).asScala
     }
     val cols = entries.flatMap(_.keys).distinct.sorted
@@ -277,7 +251,6 @@ final class IcebergLite(val root: String) extends Serializable {
 }
 
 object IcebergLite {
-  private val ManifestName = "unit-(\\d+)-v(\\d+)\\.json".r
   private val Json = new ObjectMapper()
 
   /** The Spark schema a Spark-written parquet file records in its footer. */
@@ -292,12 +265,9 @@ object IcebergLite {
   private def isDataFile(name: String): Boolean =
     name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 
-  private def latestOf(entries: Seq[(Int, Int)]): Map[Int, Int] =
-    entries.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).max }
-
   /** The version a writeData/publish pair creates next. */
-  private def nextVersion(latest: Map[Int, Int], unit: Int): Int =
-    latest.get(unit).fold(1)(_ + 1)
+  private def nextVersion(live: Map[Int, Int], unit: Int): Int =
+    live.get(unit).fold(1)(_ + 1)
 
   /** Open one parquet file's footer. The read options take the caller's
     * conf: the default options build a fresh Hadoop configuration per

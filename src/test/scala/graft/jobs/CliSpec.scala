@@ -65,10 +65,8 @@ class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val t = new graft.table.IcebergLite(out)
     assert(t.committedUnits(spark) == Seq(0, 1))
     assert(t.read(spark).count() == 200)
-    // the staged input is hive-partitioned by unit (each unit's run
-    // reads only its own files — no full-table cache)
-    val staged = new java.io.File(s"$out/_staged_pages")
-    assert(staged.listFiles().map(_.getName).count(_.startsWith("unit=")) == 2)
+    // the staged copy of the input is gone once the units have run
+    assert(!new java.io.File(s"$out/_staged_pages").exists())
   }
 
   test("extract verb: a one-file parquet source is staged as several files per unit") {
@@ -77,12 +75,12 @@ class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
     graft.table.SyntheticPages.generate(spark, 200).toDF().coalesce(1).write.parquet(src)
     val out = work.resolve("table").toString
     Cli.main(Array("extract", src, out, "--units", "2"))
-    // url-hash mode runs a unit on its input splits: one staged file
-    // per unit would run its whole cascade as one task
-    for (u <- 0 until 2) {
-      val files = new java.io.File(s"$out/_staged_pages/unit=$u").list()
-      assert(files.count(_.endsWith(".parquet")) > 1, files.mkString(", "))
-    }
+    // a one-file source must not run a unit's whole cascade as one task
+    val tasks = new graft.table.IcebergLite(out).read(spark)
+      .groupBy("unit").agg(org.apache.spark.sql.functions.countDistinct("task_partition").as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(tasks.keySet == Set(0, 1) && tasks.values.forall(_ > 1), tasks)
+    assert(!new java.io.File(s"$out/_staged_pages").exists())
   }
 
   test("extract verb: warc: source ingests .warc.gz files end to end") {

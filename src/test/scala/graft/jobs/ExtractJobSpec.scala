@@ -55,6 +55,9 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
         col("succeeded"), col("partial"), sha2(coalesce(col("extracted_text"), lit("")), 256)).as("d"))
       .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
 
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("kill-and-rerun resume produces an identical committed table") {
     val cleanDir = tempDir("graft-clean").toString
     val resumeDir = tempDir("graft-resume").toString
@@ -226,10 +229,12 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(t.committedUnits(spark) == Seq(0))
     val firstRows = t.manifest(spark).select("rows").collect()(0).getString(0)
     assert(firstRows == "2")
-    // re-publish with new metrics: new version appears before old is
-    // retired, so the unit is committed throughout; reader sees latest
+    assert(sortedRows(t.readAt(spark, t.snapshots(spark).last)) == sortedRows(t.read(spark)))
+    // re-publish with new metrics: one snapshot rename swaps v1 for v2,
+    // so the unit is committed throughout; reader sees latest
     t.writeData(df.union(Seq((3L, "c")).toDF("id", "v")), 0)
     assert(t.publish(spark, 0) == 3)
+    assert(sortedRows(t.readAt(spark, t.snapshots(spark).last)) == sortedRows(t.read(spark)))
     assert(t.committedUnits(spark) == Seq(0)) // one unit, not one per version
     assert(t.manifest(spark).count() == 1)    // latest version only
     assert(t.manifest(spark).select("rows").collect()(0).getString(0) == "3")
@@ -273,6 +278,8 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(t.snapshots(spark) == Seq(3))
     assert(!Files.exists(java.nio.file.Paths.get(t.dataPath(0, 1))),
       "expired data version must be deleted")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/manifest/unit-0-v1.json")),
+      "expired version's manifest must be deleted")
     assert(t.read(spark).count() == 3)
     assert(t.readAt(spark, 3).count() == 3)
     intercept[IllegalArgumentException](t.readAt(spark, 1))

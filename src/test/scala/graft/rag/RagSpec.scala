@@ -37,13 +37,10 @@ class RagSpec extends AnyFunSuite with SparkSuite {
 
   test("post-top-k filter quirk: filters after the k-cut can return < k") {
     // query matches d1 and d4 best; filter url=u2 applied AFTER top-2 cut
-    // → empty (the reference quirk); applied before → d2 found
+    // → empty (the reference quirk), though d2 matches url=u2
     val quirk = Rag.search(orthoIndex, Array(1f, 0.2f, 0f), topK = 2,
-      filters = Map("url" -> "u2"), parityPostKFilter = true)
+      filters = Map("url" -> "u2"))
     assert(quirk.count() == 0)
-    val sane = Rag.search(orthoIndex, Array(1f, 0.2f, 0f), topK = 2,
-      filters = Map("url" -> "u2"), parityPostKFilter = false)
-    assert(sane.select("id").as[String].collect().toSeq == Seq("d2"))
   }
 
   test("get/delete/stats") {

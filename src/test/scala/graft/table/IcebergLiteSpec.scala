@@ -69,24 +69,49 @@ class IcebergLiteSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(read.count() == 18)
   }
 
-  test("readAt(1) reads v1 after a re-publish retired v1's manifest") {
+  test("readAt(1) reads v1 after a re-publish; expiry deletes v1's manifest") {
     val t = new IcebergLite(tempDir("ice-travel").toString)
     t.commitUnit(docs(0 until 4), 0)   // snapshot 1: unit 0 v1
+    assert(sortedRows(t.readAt(spark, t.snapshots(spark).last)) == sortedRows(t.read(spark)))
     t.commitUnit(docs(4 until 10), 0)  // snapshot 2: unit 0 v2
-    assert(manifestFiles(t) == Seq("unit-0-v2.json"))
+    assert(sortedRows(t.readAt(spark, t.snapshots(spark).last)) == sortedRows(t.read(spark)))
+    assert(manifestFiles(t) == Seq("unit-0-v1.json", "unit-0-v2.json"))
     val v1 = t.readAt(spark, 1)
     assert(v1.schema == inferred(t, (0, 1)).schema)
     assert(v1.select("id").as[Long].collect().sorted.toSeq == (0L until 4L))
     assert(t.read(spark).count() == 6)
+    t.expireSnapshots(spark, keepLast = 1)
+    assert(manifestFiles(t) == Seq("unit-0-v2.json"))
+    assert(t.read(spark).count() == 6)
+  }
+
+  test("a manifest without a snapshot commits nothing; a rerun publish commits it") {
+    val t = new IcebergLite(tempDir("ice-orphan").toString)
+    t.commitUnit(docs(0 until 4), 0)
+    // a publish of unit 1 that died between its manifest and its snapshot
+    t.writeData(docs(4 until 10), 1)
+    val orphan = new File(s"${t.root}/manifest/unit-1-v1.json")
+    java.nio.file.Files.writeString(orphan.toPath,
+      """{"unit": "1", "version": "1", "rows": "6"}""")
+    assert(t.committedUnits(spark) == Seq(0))
+    assert(t.read(spark).select("unit").distinct().as[Int].collect().toSeq == Seq(0))
+    assert(t.manifest(spark).select("unit").as[String].collect().toSeq == Seq("0"))
+    assert(t.publish(spark, 1) == 6)
+    assert(t.committedUnits(spark) == Seq(0, 1))
+    assert(t.manifest(spark).where($"unit" === "1").select("version").as[String]
+      .collect().toSeq == Seq("1"))
+    assert(sortedRows(t.read(spark)) == sortedRows(inferred(t, (0, 1), (1, 1))))
+    assert(sortedRows(t.readAt(spark, t.snapshots(spark).last)) == sortedRows(t.read(spark)))
   }
 
   test("manifest equals Spark's JSON read of the latest manifest files") {
     val t = new IcebergLite(tempDir("ice-manifest").toString)
     t.commitUnit(docs(0 until 5), 0, Map("dim" -> "3", "note" -> "a \"quoted\" \\ path"))
     t.commitUnit(docs(5 until 7), 1, Map("strategy_dom" -> "2"))
-    t.commitUnit(docs(7 until 9), 0, Map("dim" -> "4")) // retires unit 0's v1
+    t.commitUnit(docs(7 until 9), 0, Map("dim" -> "4")) // unit 0 -> v2
     val ours = t.manifest(spark)
-    val json = spark.read.json(manifestFiles(t).map(n => s"${t.root}/manifest/$n"): _*)
+    val live = Seq("unit-0-v2.json", "unit-1-v1.json")
+    val json = spark.read.json(live.map(n => s"${t.root}/manifest/$n"): _*)
     assert(ours.schema == json.schema)
     assert(sortedRows(ours) == sortedRows(json))
     assert(ours.select("unit").as[String].collect().toSeq == Seq("0", "1"))
