@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.table.{IcebergLite, SyntheticPages}
 import graft.util.Sessions
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,7 +128,7 @@ object Cli {
           runtimeOverrides =
             if (pipelineOverrides.isEmpty) Map.empty
             else Map("pipeline" -> pipelineOverrides))
-        val cfg = ExtractJobConfig(nUnits = units, partitionsPerUnit = cpus,
+        val cfg = ExtractJobConfig(nUnits = units,
           cascade = graft.util.ScragConfig.cascadeConfig(resolved))
         // Stage the input ONCE, hive-partitioned by unit, so each unit's
         // run reads only its own files (partition pruning on the path) —
@@ -135,7 +136,7 @@ object Cli {
         // At real scale the source table is already unit-partitioned and
         // this step disappears. The round-robin spread gives every task
         // a share of each unit, so a unit is staged as `cpus` even files:
-        // url-hash mode runs a unit on its input splits, and one file
+        // extraction runs a unit on its input splits, and one file
         // would run it as one task.
         // A rerun restages with overwrite, so the copy serves no resume:
         // it is deleted once the units have run or failed.
@@ -148,17 +149,17 @@ object Cli {
         // inputs / large --units) — treat a missing path as zero rows
         // rather than letting the read throw
         val pagesSchema = pages.schema
-        val stagedPath = new org.apache.hadoop.fs.Path(staged)
+        val stagedPath = new Path(staged)
+        val fs = stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val ran =
           try ExtractJob.runUnits(spark,
             u => {
-              val unitPath = s"$staged/unit=$u"
-              if (new java.io.File(unitPath).isDirectory) spark.read.parquet(unitPath)
+              val unitPath = new Path(stagedPath, s"unit=$u")
+              if (fs.exists(unitPath)) spark.read.parquet(unitPath.toString)
               else spark.createDataFrame(
                 spark.sparkContext.emptyRDD[Row], pagesSchema)
             }, out, cfg)
-          finally stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(stagedPath, true)
+          finally fs.delete(stagedPath, true)
         // the reference's success epilogue (app.py:112-128): completion
         // line, extractor/processors, content size, environment, the
         // below-threshold note, and echoed warnings — batch analogues
@@ -195,8 +196,11 @@ object Cli {
         val outPath = args(2)
         val chunkSize = opt(args, "--chunk-size").map(_.toInt).getOrElse(512)
         val overlap = opt(args, "--chunk-overlap").map(_.toInt).getOrElse(50)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val inPath = new Path(in)
+        val inFs = inPath.getFileSystem(conf)
         val chunks: org.apache.spark.sql.DataFrame =
-          if (in.endsWith(".parquet") || new java.io.File(in).isDirectory) {
+          if (in.endsWith(".parquet") || inFs.getFileStatus(inPath).isDirectory) {
             val df = spark.read.parquet(in) // pre-chunked path
             if (df.columns.contains("chunk_index")) df
             // no index column: synthesize a distributed unique id — a
@@ -205,8 +209,8 @@ object Cli {
             // meant for arbitrary pre-chunked tables
             else df.withColumn("chunk_index", monotonically_increasing_id())
           } else {
-            val content = new String(
-              java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(in)), "UTF-8")
+            val stream = inFs.open(inPath)
+            val content = try new String(stream.readAllBytes(), "UTF-8") finally stream.close()
             val cs = graft.text.Chunker.chunk(content,
               graft.text.ChunkConfig(chunkSize = chunkSize, overlap = overlap))
             spark.createDataset(cs.toSeq.map(c => (c.chunk_id, c.text)))
@@ -222,8 +226,7 @@ object Cli {
             .map { case ((ci, text), v) => (ci, text, v) })
           .toDF("chunk_index", "chunk_text", "embedding")
         embedded.write.mode("overwrite").parquet(outPath)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val out = new org.apache.hadoop.fs.Path(outPath)
+        val out = new Path(outPath)
         val n = out.getFileSystem(conf).listStatus(out)
           .filter(_.getPath.getName.endsWith(".parquet"))
           .map(graft.table.IcebergLite.footerRows(_, conf)).sum
@@ -274,7 +277,7 @@ object Cli {
         val extracted = new IcebergLite(s"$work/extracted")
         val ran = ExtractJob.runUnits(spark,
           u => pages.where(pmod(xxhash64(col("url")), lit(4)) === u),
-          extracted, ExtractJobConfig(nUnits = 4, partitionsPerUnit = cpus))
+          extracted, ExtractJobConfig(nUnits = 4))
         val index = new IcebergLite(s"$work/index")
         val n = RagJobs.buildAndWrite(pages, index)
         val answer = RagJobs.query(index.read(spark), "analytics engine processes data", 3)

@@ -9,19 +9,14 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.util.Try
 
-/** Job shaping knobs for the extraction pipeline at scale.
-  * `partitionsPerUnit`, `bigHtmlBytes`, `hostBudget` and `saltBuckets`
-  * shape host-grouped mode only; url-hash mode extracts on the input's
-  * own partitions, spread round-robin to the core count when it has
-  * fewer.
+/** Job shaping knobs for the extraction pipeline at scale. Only
+  * [[ExtractJob.main]]'s synthetic source reads `partitionsPerUnit`:
+  * the job extracts on its input's own partitions, spread round-robin
+  * to the core count when it has fewer.
   */
 final case class ExtractJobConfig(
     nUnits: Int = 8,
     partitionsPerUnit: Int = 32,
-    bigHtmlBytes: Long = 256L * 1024,
-    groupByHost: Boolean = false,
-    hostBudget: Long = 10000,
-    saltBuckets: Int = 16,
     cascade: CascadeConfig = CascadeConfig())
 
 /** The north-rule extraction job (BASELINE.json): pages → cascade →
@@ -34,18 +29,14 @@ final case class ExtractJobConfig(
   *    committed input (each unit reads only its own input slice — no
   *    full rescan per unit). At 10^12 docs a unit is a group of Iceberg
   *    data files sized to minutes of cluster work.
-  *  - **Url-hash mode is map-side.** The default mode runs the cascade
-  *    on the input's own partitions: one scan, no exchange. An input
-  *    with fewer partitions than the cluster has cores is spread
-  *    round-robin to that width first, so a unit staged as one file
-  *    does not run its cascade in one task.
-  *  - **Host-grouped (politeness) mode** repartitions by host into
-  *    `partitionsPerUnit` partitions; hosts whose row count exceeds
-  *    `hostBudget` are salted with `xxhash64(url) % saltBuckets` so one
-  *    hot host cannot pin a partition (AQE covers shuffle skew, not
-  *    map-side compute skew — SURVEY.md §4.1). Pages of at least
-  *    `bigHtmlBytes` are split off and round-robin rebalanced so a 100MB
-  *    page cannot straggle a partition of 4KB pages; outputs are unioned.
+  *  - **Extraction is map-side.** The cascade runs on the input's own
+  *    partitions: one scan, no exchange. An input with fewer partitions
+  *    than the cluster has cores is spread round-robin to that width
+  *    first, so a unit staged as one file does not run its cascade in
+  *    one task. With no shuffle there is no host skew: a hot host's
+  *    pages stay in the splits that hold them. Round-robin staging (as
+  *    `Cli extract` stages) deals oversized pages out by count, and
+  *    Spark packs a unit's files into byte-range splits by bytes.
   *  - **Overlapped units.** Two writes are queued ahead of the publish:
   *    units u+1 and u+2 have started before unit u is published, so
   *    each unit's planning and publishing hide behind running jobs.
@@ -56,7 +47,7 @@ final case class ExtractJobConfig(
   */
 object ExtractJob {
 
-  /** Shape one unit's pages and run the cascade. The optional histogram
+  /** Run the cascade over one unit's pages. The optional histogram
     * accumulator is threaded into the cascade kernel itself so strategy
     * counts are collected during the caller's action with zero extra
     * row-codec passes.
@@ -65,14 +56,12 @@ object ExtractJob {
       hist: Option[MapAccumulator] = None): DataFrame = {
     // the kernel sees url and html only: an `extras` column would
     // switch extractPages to its extras path
-    val input = pages.select(col("url"), col("html"))
-    val extracted =
-      if (cfg.groupByHost) hostGrouped(input, cfg, hist)
-      else Extract.extractPages(atClusterWidth(input), cfg.cascade, hist).toDF()
-    extracted.withColumn("task_partition", spark_partition_id())
+    val input = atClusterWidth(pages.select(col("url"), col("html")))
+    Extract.extractPages(input, cfg.cascade, hist).toDF()
+      .withColumn("task_partition", spark_partition_id())
   }
 
-  /** Url-hash mode's input: its own partitions when it has at least one
+  /** The cascade's input: its own partitions when it has at least one
     * per core, else a round-robin spread to the core count. For a scan,
     * counting partitions plans its file splits and runs no job; it reads
     * the physical plan's RDD, since `pages.rdd` would plan a Row
@@ -87,50 +76,6 @@ object ExtractJob {
   private[graft] def atClusterWidth(pages: DataFrame): DataFrame = {
     val cores = pages.sparkSession.sparkContext.defaultParallelism
     if (pages.queryExecution.toRdd.getNumPartitions >= cores) pages else pages.repartition(cores)
-  }
-
-  /** Host-grouped (politeness) mode: salted host repartition for the
-    * pages under `bigHtmlBytes`, a round-robin pool for the rest.
-    */
-  private def hostGrouped(pages: DataFrame, cfg: ExtractJobConfig,
-      hist: Option[MapAccumulator]): DataFrame = {
-    // null html must remain a ROW (the cascade's fetch-failure reason
-    // row — errors as data): a bare length() is NULL for it, and a NULL
-    // predicate fails BOTH size buckets, silently dropping the page
-    val withLen = pages.withColumn("html_len", coalesce(length(col("html")), lit(0)))
-
-    val small = withLen.where(col("html_len") < cfg.bigHtmlBytes)
-    val big = withLen.where(col("html_len") >= cfg.bigHtmlBytes)
-
-    // skew pre-pass: hosts over budget get a per-url salt. The hot
-    // set is hash-aggregated (tiny: only over-budget hosts survive)
-    // and applied via broadcast left join — no driver collect, so
-    // the same plan holds when the hot set itself is large
-    val host = parse_url(col("url"), lit("HOST"))
-    val hotHosts = withLen.select(host.as("hot_host"))
-      .groupBy("hot_host").count()
-      .where(col("count") > cfg.hostBudget)
-      .select(col("hot_host"), lit(true).as("is_hot"))
-    val key = when(col("is_hot"),
-        concat(col("page_host"), lit("#"),
-          pmod(xxhash64(col("url")), lit(cfg.saltBuckets))))
-      .otherwise(col("page_host"))
-    val smallSpread = small.withColumn("page_host", host)
-      .join(broadcast(hotHosts), col("page_host") === col("hot_host"), "left")
-      .repartition(cfg.partitionsPerUnit, key)
-      .drop("page_host", "hot_host", "is_hot")
-
-    // round-robin spreads the huge blobs evenly without needing stats.
-    // Full unit width, NOT a narrowed pool: separating blobs from the
-    // 4KB pages is what prevents stragglers; once separated, the blob
-    // stage is uniform-expensive rows and deserves every core — a
-    // max(2, width/4) pool here measured as an Amdahl cap (oversized
-    // bodies are ~half the corpus BYTES at 0.5% of rows, and a fixed
-    // 2-partition stage froze 2->8-thread scaling at 0.63, SkewBench)
-    val bigSpread = big.repartition(cfg.partitionsPerUnit)
-
-    Extract.extractPages(smallSpread, cfg.cascade, hist).toDF()
-      .unionByName(Extract.extractPages(bigSpread, cfg.cascade, hist).toDF())
   }
 
   /** One unit's staged write, running on a thread of its own. The
@@ -194,15 +139,12 @@ object ExtractJob {
     * caller's thread, in unit order. On a failure every unpublished
     * write is cancelled and joined, so none outlives this call, and the
     * exception is the one of the earliest unit that failed.
-    * `failAfterUnits` is a test hook for kill-and-rerun resume proofs:
-    * it throws once that many units are published.
     */
   def runUnits(
       spark: SparkSession,
       unitPages: Int => DataFrame,
       out: IcebergLite,
-      cfg: ExtractJobConfig,
-      failAfterUnits: Int = Int.MaxValue): Seq[Int] = {
+      cfg: ExtractJobConfig): Seq[Int] = {
     val done = out.committedUnits(spark).toSet
     val todo = (0 until cfg.nUnits).filterNot(done)
     val processed = mutable.ArrayBuffer.empty[Int]
@@ -230,7 +172,7 @@ object ExtractJob {
     }
 
     try {
-      for (u <- todo.take(failAfterUnits)) {
+      for (u <- todo) {
         val next = Try(start(u))
         next.foreach(inFlight.enqueue(_))
         // a unit that cannot start fails the run after the units before it
@@ -240,12 +182,11 @@ object ExtractJob {
       }
       while (inFlight.nonEmpty) publishOldest()
     } finally inFlight.foreach(_.cancel())
-    if (todo.size > failAfterUnits)
-      throw new RuntimeException(s"injected failure before unit ${todo(failAfterUnits)}")
     processed.toSeq
   }
 
-  /** spark-submit main: synthetic-pages source.
+  /** spark-submit main: synthetic-pages source, generated as
+    * `partitionsPerUnit` (= cpus) partitions per unit.
     * args: outPath [nPages=20000] [nUnits=8] [cpus from SPARK_GRAFT_CPUS]
     */
   def main(args: Array[String]): Unit = {

@@ -22,8 +22,8 @@ final case class Page(
   *
   * HTML families (FIXTURES.md §A): article (readability/newspaper path),
   * plain (min-length / partial path), soup (malformed-markup path),
-  * empty (failure path), oversized (size-bucket path), skew (one hot
-  * host, salting path).
+  * empty (failure path), oversized (MB-size pages, about half the
+  * bytes), skew (one hot host).
   */
 object SyntheticPages {
 

@@ -74,45 +74,13 @@ object Bpe {
     trainWeighted(pieceFreq.asScala.toArray, numMerges, minPairFreq)
   }
 
-  /** Sequential in-rank-order merge application — the TRAINER's view of
-    * a word (training applies exactly one merge globally per round, so
-    * replaying the merge list in rank order over the raw split
-    * reproduces the incremental state bit-for-bit).
-    */
-  private def applyMergesInOrder(piece: String,
-      merges: IndexedSeq[(String, String)]): Array[String] = {
-    var syms = symbolsOf(piece)
-    var m = 0
-    while (m < merges.length && syms.length > 1) {
-      val (l, r) = merges(m)
-      var hit = false
-      var i = 0
-      while (!hit && i + 1 < syms.length) {
-        hit = syms(i) == l && syms(i + 1) == r
-        i += 1
-      }
-      if (hit) {
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var j = 0
-        while (j < syms.length) {
-          if (j + 1 < syms.length && syms(j) == l && syms(j + 1) == r) {
-            out += l + r; j += 2
-          } else { out += syms(j); j += 1 }
-        }
-        syms = out.toArray
-      }
-      m += 1
-    }
-    syms
-  }
-
   /** The aggregated (piece, freq) dict of a corpus — ONE corpus pass:
     * pretokenize kernel with per-partition HashMap combine, then a
     * hash agg. Zipf/Heaps means distinct pieces ≪ corpus tokens; this
     * table (not the corpus) is what training iterates over, exactly
     * the word-frequency-dict shape of Sennrich et al. 2016.
     */
-  private def pieceFreqTable(docs: DataFrame): DataFrame = {
+  private[text] def pieceFreqTable(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("text")).as[String]
@@ -134,9 +102,10 @@ object Bpe {
   /** UTF-8 binary string order (== code point order) — the ordering
     * Spark SQL's `orderBy(col)` applies to strings, mirrored here so
     * the driver-side argmax tie-break of [[trainWeighted]] is
-    * bit-identical to [[trainDistributedRounds]]'s SQL `ORDER BY f
-    * DESC, l, r`. Java String `<` is UTF-16 code-unit order, which
-    * differs for astral code points vs [U+E000, U+FFFF].
+    * bit-identical to an SQL `ORDER BY f DESC, l, r` (BpeSpec's
+    * per-round reference trainer). Java String `<` is UTF-16
+    * code-unit order, which differs for astral code points vs
+    * [U+E000, U+FFFF].
     */
   private[text] def cpLess(a: String, b: String): Boolean = {
     var i = 0
@@ -156,7 +125,7 @@ object Bpe {
     * adjacent symbol pairs over the distinct pieces (weighted by piece
     * frequency), merge the most frequent pair (ties → smallest (left,
     * right) in code-point order, matching the SQL `ORDER BY f DESC, l,
-    * r` of the per-round distributed path). Stops early when no pair
+    * r` of BpeSpec's per-round reference). Stops early when no pair
     * occurs at least `minPairFreq` times. Cost per round is O(total
     * symbols of the dict), so 32k production merges are driver-cheap
     * once the dict is in hand.
@@ -232,12 +201,8 @@ object Bpe {
     * do. This removes the previous shape's one-driver-round-trip-PER-
     * MERGE coordination (48 merges = 48 sequential jobs; a 32k
     * production vocab would be 32k), whose round count scaled with
-    * the vocab parameter rather than the data.
-    *
-    * [[trainDistributedRounds]] keeps the fully-distributed per-round
-    * argmax as the equality cross-check (BpeSpec pins both paths to
-    * identical merges) and as the fallback if the dict bound ever
-    * needs to be broken distributed-side.
+    * the vocab parameter rather than the data. BpeSpec keeps that
+    * per-round shape as a reference and pins both to identical merges.
     */
   def trainDistributed(docs: DataFrame, numMerges: Int,
       minPairFreq: Long = 2, maxDistinctPieces: Int = 1 << 22): Seq[(String, String)] = {
@@ -248,61 +213,8 @@ object Bpe {
     val rows = pieceFreqTable(docs).as[(String, Long)]
       .limit(maxDistinctPieces + 1).collect()
     require(rows.length <= maxDistinctPieces,
-      s"distinct piece dict exceeds bound $maxDistinctPieces — " +
-        "use trainDistributedRounds or raise the bound")
+      s"distinct piece dict exceeds bound $maxDistinctPieces — raise the bound")
     trainWeighted(rows, numMerges, minPairFreq)
-  }
-
-  /** The per-round fully-distributed trainer (the pre-optimization
-    * shape): each round maps the CACHED piece table (replaying merges
-    * so far — pure function of the broadcast merge list, so rounds
-    * are partitioning-independent), partially combines pair counts
-    * per partition, hash-aggregates, and collects ONE row: the argmax
-    * pair. numMerges rounds = numMerges bounded-output jobs over the
-    * piece table; document text is read once, ever. Kept as the
-    * equality cross-check for [[trainDistributed]] and for corpora
-    * whose distinct-piece dict genuinely cannot collect.
-    */
-  def trainDistributedRounds(docs: DataFrame, numMerges: Int,
-      minPairFreq: Long = 2): Seq[(String, String)] = {
-    require(minPairFreq >= 1, s"minPairFreq must be >= 1, got $minPairFreq")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val pieceFreq = pieceFreqTable(docs).as[(String, Long)].persist()
-    try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var done = false
-      while (merges.length < numMerges && !done) {
-        val sofar: IndexedSeq[(String, String)] = merges.toIndexedSeq
-        val top = pieceFreq
-          .mapPartitions { it =>
-            val m = new java.util.HashMap[(String, String), Long]()
-            it.foreach { case (piece, f) =>
-              val syms = applyMergesInOrder(piece, sofar)
-              var i = 0
-              while (i + 1 < syms.length) {
-                m.merge((syms(i), syms(i + 1)), f, _ + _)
-                i += 1
-              }
-            }
-            val out = new Array[(String, String, Long)](m.size)
-            val eit = m.entrySet().iterator()
-            var j = 0
-            while (eit.hasNext) {
-              val e = eit.next()
-              out(j) = (e.getKey._1, e.getKey._2, e.getValue); j += 1
-            }
-            out.iterator
-          }
-          .toDF("l", "r", "f").groupBy(col("l"), col("r"))
-          .agg(sum(col("f")).as("f"))
-          .orderBy(col("f").desc, col("l"), col("r"))
-          .limit(1).collect() // the argmax pair: 1 bounded row per round
-        if (top.isEmpty || top(0).getLong(2) < minPairFreq) done = true
-        else merges += ((top(0).getString(0), top(0).getString(1)))
-      }
-      merges.toSeq
-    } finally pieceFreq.unpersist()
   }
 
   /** Post-merge BPE token COUNT of one pretokenizer piece (the billing

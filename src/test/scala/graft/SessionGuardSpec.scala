@@ -12,6 +12,9 @@ import scala.jdk.CollectionConverters._
   * live in test code (`graft.fixtures`), not beside the decoders. No
   * process-wide state passes arguments: an oracle gets its tier as a
   * parameter, not through a system property or the active session.
+  * The job and table code reach files through the Hadoop `FileSystem`
+  * API only: `java.io.File` sees a local path, never a `file:`,
+  * `hdfs:` or `s3a:` URI.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -41,6 +44,13 @@ class SessionGuardSpec extends AnyFunSuite {
   test("main code sets no JVM system property and looks up no active session") {
     val global = """sys\.props\([^)]*\)\s*=|System\.setProperty|getActiveSession""".r
     val hits = sourcesWhere("src/main")(global.findFirstIn(_).isDefined)
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("job and table code name no java.io.File") {
+    val local = """java\.io\.File\b""".r
+    val hits = Seq("src/main/scala/graft/jobs", "src/main/scala/graft/table")
+      .flatMap(sourcesWhere(_)(local.findFirstIn(_).isDefined))
     assert(hits.isEmpty, hits.mkString(", "))
   }
 

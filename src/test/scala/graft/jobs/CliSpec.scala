@@ -69,6 +69,15 @@ class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(!new java.io.File(s"$out/_staged_pages").exists())
   }
 
+  test("extract verb: a file: URI table path commits every row") {
+    val out = tempDir("cli-extract-uri").resolve("table").toUri.toString
+    assert(out.startsWith("file:"))
+    Cli.main(Array("extract", "synth:200", out, "--units", "2"))
+    val t = new graft.table.IcebergLite(out)
+    assert(t.committedUnits(spark) == Seq(0, 1))
+    assert(t.read(spark).count() == 200)
+  }
+
   test("extract verb: a one-file parquet source is staged as several files per unit") {
     val work = tempDir("cli-extract-one-file")
     val src = work.resolve("pages.parquet").toString

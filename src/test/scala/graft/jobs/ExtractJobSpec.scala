@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.{SparkSuite, TempDirs}
+import graft.extract.{CascadeExtractor, Extracted}
 import graft.table.{IcebergLite, SyntheticPages}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,8 +10,9 @@ import java.nio.file.Files
 
 /** North-rule job mechanics: unit-granular checkpointed resume
   * (kill-and-rerun yields an identical table), manifest lineage,
-  * map-side url-hash plans, units overlapped two writes deep that fail
-  * cleanly, and host-grouped size-bucketed processing.
+  * map-side plans that spread a hot host and extract oversized pages
+  * where they lie, and units overlapped two writes deep that fail
+  * cleanly.
   */
 class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
@@ -68,9 +70,12 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val ranClean = ExtractJob.runUnits(spark, unitPages, clean, cfg)
     assert(ranClean == (0 until cfg.nUnits))
 
-    // killed after 2 units, then rerun
+    // killed when unit 2's input cannot be read, then rerun
     intercept[RuntimeException] {
-      ExtractJob.runUnits(spark, unitPages, resumed, cfg, failAfterUnits = 2)
+      ExtractJob.runUnits(spark, u => {
+        if (u == 2) throw new RuntimeException("killed before unit 2")
+        unitPages(u)
+      }, resumed, cfg)
     }
     assert(resumed.committedUnits(spark) == Seq(0, 1))
     assertNothingRunning()
@@ -153,14 +158,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(tableDigest(t) == tableDigest(clean))
   }
 
-  test("url-hash mode is map-side: one file scan, no exchange; host-grouped keeps its repartition") {
+  test("url-hash mode is map-side: one file scan, no exchange") {
     val pages = parquetPages(0L until 200L, files = 4) // one file per core
     val plan = ExtractJob.processUnit(pages, cfg).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert("FileScan parquet".r.findAllIn(plan).size == 1, plan)
-    val grouped = ExtractJob.processUnit(pages, cfg.copy(groupByHost = true))
-      .queryExecution.executedPlan.toString
-    assert(grouped.contains("Exchange hashpartitioning"), grouped)
   }
 
   test("url-hash mode spreads a unit staged as one file round-robin to the core count") {
@@ -203,21 +205,17 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(t.read(spark).columns.contains("task_partition"))
   }
 
-  test("oversized pages flow through the big bucket and extract correctly") {
+  test("an oversized page extracts where it lies, like CascadeExtractor.extract") {
     import testImplicits._
     // find an oversized-family id in the first 500
     val bigId = (0L until 500L).find(id =>
       SyntheticPages.familyOf(42L, id) == "oversized").get
-    val df = spark.range(bigId, bigId + 1).mapPartitions(
-      _.map(id => SyntheticPages.pageFor(42L, id))).toDF()
-    // host-grouped mode routes it through the big bucket; url-hash mode
-    // extracts it where it lies, with the same result
-    val results = Seq(true, false).map { grouped =>
-      ExtractJob.processUnit(df, cfg.copy(bigHtmlBytes = 100 * 1024, groupByHost = grouped))
-        .select("strategy_used", "succeeded").collect().toSeq
-    }
-    assert(results.forall(_.size == 1) && results(0)(0).getBoolean(1))
-    assert(results(0) == results(1))
+    val page = SyntheticPages.pageFor(42L, bigId)
+    val rows = ExtractJob.processUnit(Seq(page).toDF(), cfg)
+      .drop("task_partition").as[Extracted].collect().toSeq
+    val expected = new CascadeExtractor().extract(page.url, page.html, cfg.cascade)
+    assert(expected.succeeded)
+    assert(rows == Seq(expected))
   }
 
   test("re-publish is atomic: versioned manifest, unit never uncommitted") {
@@ -285,17 +283,21 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite with TempDirs {
     intercept[IllegalArgumentException](t.readAt(spark, 1))
   }
 
-  test("host-grouped mode with salting spreads the hot host") {
+  test("a hot host's pages in one input partition spread over every core") {
     import testImplicits._
     // skew family: all rows on host-0.example
     val skewIds = (0L until 2000L).filter(id =>
       SyntheticPages.familyOf(42L, id) == "skew").take(60)
-    val df = spark.createDataset(skewIds).mapPartitions(
+    val df = spark.createDataset(skewIds).coalesce(1).mapPartitions(
       _.map(id => SyntheticPages.pageFor(42L, id))).toDF()
-    val out = ExtractJob.processUnit(df,
-      cfg.copy(groupByHost = true, hostBudget = 10, saltBuckets = 4))
-    val parts = out.select("task_partition").distinct().count()
-    assert(parts > 1, s"hot host not spread: $parts partition(s)")
+    assert(df.rdd.getNumPartitions == 1)
+    val out = ExtractJob.processUnit(df, cfg)
+      .select("url", "succeeded", "task_partition").collect()
+    assert(out.length == skewIds.size)
+    assert(out.map(_.getString(0)).toSet.size == skewIds.size)
+    assert(out.forall(_.getString(0).startsWith("https://host-0.example/")))
+    assert(out.forall(_.getBoolean(1)))
+    assert(out.map(_.getInt(2)).toSet.size == 4)
   }
 }
 
