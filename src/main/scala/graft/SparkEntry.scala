@@ -19,11 +19,11 @@ import graft.queries._
   * family's registry under `graft.queries`.
   */
 object SparkEntry {
-  /** Flagship: the extraction cascade (the north-star operator) over the
-    * deterministic synthetic pages corpus. Driver smoke-checks rows>0.
+  /** Flagship: the extraction cascade (the north-star operator) over
+    * 1,000 deterministic synthetic pages; it reads no tier file.
+    * Driver smoke-checks rows>0.
     */
-  def entry(spark: SparkSession): DataFrame =
-    queries("cascade_extract")(spark, "/root/testdata/sf0.001")
+  def entry(spark: SparkSession): DataFrame = ExtractionQueries.cascade(spark, 1000L)
 
   /** Committed golden-parquet dir: expected outputs for operators whose
     * semantics DuckDB cannot recompute (extraction cascade, chunker)

@@ -29,10 +29,10 @@ object Cli {
       // Common-Crawl-style ingestion: a directory of .warc.gz files;
       // unparseable members become failure rows and are dropped here
       // (the cascade records its own per-row failures downstream).
-      // readAuto plans one task per MEMBER GROUP via cdx-style sidecar
-      // indexes (built on first touch), so few fat archives still use
-      // the full cluster width
-      graft.sources.Warc.readAuto(spark, src.stripPrefix("warc:"))
+      // Each archive streams in one task and writes nothing beside the
+      // input; the staging repartition below spreads the cascade over
+      // every core however few the archives are
+      graft.sources.Warc.read(spark, src.stripPrefix("warc:"))
         .where(org.apache.spark.sql.functions.col("succeeded"))
         .select("url", "warc_ts", "html")
     else if (src.startsWith("url:")) {

@@ -2,25 +2,31 @@ package graft.queries
 
 import graft.SparkEntry.goldenDir
 import graft.queries.Shared._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The extraction tier (north rule): the HTML cascade in batch and as a
   * stream, PDF text, out-links, sitemaps, and the WARC and CDX formats.
   */
 object ExtractionQueries {
+  /** The cascade over `nPages` synthetic pages, sorted by url: the
+    * cascade_extract query and `SparkEntry.entry`.
+    */
+  private[graft] def cascade(s: SparkSession, nPages: Long): DataFrame = {
+    val pages = graft.table.SyntheticPages.generate(s, nPages)
+    // the narrow result is held before the sort: the sort's range
+    // sampling would otherwise run the cascade once more
+    graft.extract.Extract.extractPages(pages.toDF())
+      .toDF()
+      .select(col("url"), col("strategy_used"), col("succeeded"),
+        col("partial"), length(col("extracted_text")).as("text_len"),
+        col("title"), col("failure_reason"))
+      .localCheckpoint(eager = true)
+      .orderBy(col("url"))
+  }
+
   val all: Seq[Query] = Seq(
-    Query("cascade_extract", (s, dir) => {
-      val pages = graft.table.SyntheticPages.generate(s, pagesFor(dir))
-      // the narrow result is held before the sort: the sort's range
-      // sampling would otherwise run the cascade once more
-      graft.extract.Extract.extractPages(pages.toDF())
-        .toDF()
-        .select(col("url"), col("strategy_used"), col("succeeded"),
-          col("partial"), length(col("extracted_text")).as("text_len"),
-          col("title"), col("failure_reason"))
-        .localCheckpoint(eager = true)
-        .orderBy(col("url"))
-    },
+    Query("cascade_extract", (s, dir) => cascade(s, pagesFor(dir)),
       ("SELECT url, strategy_used, succeeded, partial, text_len, title, failure_reason " +
         s"FROM read_parquet('$goldenDir/cascade_sf001.parquet') " +
         "ORDER BY url")),

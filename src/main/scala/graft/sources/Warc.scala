@@ -1,30 +1,34 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** From-scratch WARC (ISO 28500, the Common-Crawl container format)
   * encode/decode. Real Common-Crawl files are a CONCATENATION of
-  * per-record gzip members (`.warc.gz`), so a reader can split a file
-  * at member boundaries and decode records independently — that
-  * per-record framing is exactly what makes the format splittable for
-  * distributed processing, and both sides are implemented here:
+  * per-record gzip members (`.warc.gz`), so records decode one member
+  * at a time, and both sides are implemented here:
   *
   *  - [[encodeFile]]: records → one gzip member each (raw-deflate +
   *    gzip header/trailer written by hand) → concatenated bytes.
-  *  - [[parseFile]]: walks the multi-member stream with an Inflater
-  *    per member, then parses each record's CRLF header block and
-  *    Content-Length-framed payload.
+  *  - [[members]]: the one member walker, over any `InputStream`: it
+  *    inflates one member at a time and checks its trailer. [[read]]
+  *    runs it on each archive's Hadoop stream; [[parseFile]] and
+  *    [[memberOffsets]] run it on in-memory bytes. [[parseRecord]]
+  *    parses each record's CRLF header block and Content-Length-framed
+  *    payload.
   *
   * Errors are DATA: a malformed member/record yields one record with
   * `warcType = "error"` and the reason in `headers("x-parse-error")`,
   * never an exception — the per-row contract the extraction cascade
   * uses (a poison record costs one row, not a task retry at 10^12
-  * docs).
+  * docs). Only an I/O failure of the underlying stream fails the task.
   */
 object Warc {
 
@@ -100,80 +104,112 @@ object Warc {
   private def error(reason: String): WarcRecord =
     WarcRecord(null, "error", Map("x-parse-error" -> reason), Array.emptyByteArray)
 
-  /** Walk a multi-member gzip stream, emitting each decoded member with
-    * its compressed (offset, length); returns the first framing error,
-    * if any. Shared by the direct decode path and the cdx-style member
-    * indexer.
-    */
-  private def walkMembers(bytes: Array[Byte])(
-      emit: (Array[Byte], Int, Int) => Unit): Option[String] = {
-    var pos = 0
-    while (pos < bytes.length) {
-      if (pos + 10 > bytes.length ||
-          (bytes(pos) & 0xff) != 0x1f || (bytes(pos + 1) & 0xff) != 0x8b)
-        return Some(s"bad gzip magic at offset $pos")
-      if (bytes(pos + 2) != 8) return Some("unsupported CM")
-      val flg = bytes(pos + 3) & 0xff
-      var p = pos + 10
-      if ((flg & 4) != 0) { // FEXTRA
-        if (p + 2 > bytes.length) return Some("truncated FEXTRA")
-        val xlen = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
-        p += 2 + xlen
-      }
-      if ((flg & 8) != 0) { while (p < bytes.length && bytes(p) != 0) p += 1; p += 1 } // FNAME
-      if ((flg & 16) != 0) { while (p < bytes.length && bytes(p) != 0) p += 1; p += 1 } // FCOMMENT
-      if ((flg & 2) != 0) p += 2 // FHCRC
-      if (p > bytes.length) return Some("truncated gzip header")
-      val inflater = new Inflater(true)
-      inflater.setInput(bytes, p, bytes.length - p)
-      val out = new ByteArrayOutputStream(8192)
-      val buf = new Array[Byte](8192)
-      try {
-        while (!inflater.finished()) {
-          val n = inflater.inflate(buf)
-          if (n == 0 && inflater.needsInput())
-            return Some("truncated deflate stream")
-          out.write(buf, 0, n)
-        }
-      } catch {
-        case e: java.util.zip.DataFormatException =>
-          return Some(s"deflate error: ${e.getMessage}")
-      }
-      val consumed = (bytes.length - p) - inflater.getRemaining
-      inflater.end()
-      val member = out.toByteArray
-      // verify the RFC 1952 trailer (CRC32 + ISIZE)
-      val tp = p + consumed
-      if (tp + 8 > bytes.length) return Some("truncated gzip trailer")
-      def le32(o: Int): Long =
-        (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-        ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-      val crc = new CRC32
-      crc.update(member)
-      if (le32(tp) != crc.getValue) return Some("gzip CRC mismatch")
-      if (le32(tp + 4) != (member.length.toLong & 0xffffffffL))
-        return Some("gzip ISIZE mismatch")
-      emit(member, pos, (tp + 8) - pos)
-      pos = tp + 8
-    }
-    None
-  }
+  /** One decoded gzip member and its compressed (offset, length). */
+  private[graft] final case class Member(bytes: Array[Byte], offset: Long, length: Long)
 
-  /** Split a multi-member gzip stream; returns (members, trailingError). */
-  private def gunzipMembers(bytes: Array[Byte]): (Seq[Array[Byte]], Option[String]) = {
-    val members = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    val err = walkMembers(bytes)((m, _, _) => members += m)
-    (members.toSeq, err)
-  }
+  /** Walk a multi-member gzip stream lazily: one `Right` per member,
+    * then at most one `Left` with the first framing error, which ends
+    * the walk. It holds one member and one read buffer, never the
+    * archive, and closes `in` once the walk ends. An I/O exception from
+    * `in` is not a framing error: it propagates and fails the task.
+    */
+  private[graft] def members(in: InputStream): Iterator[Either[String, Member]] =
+    new Iterator[Either[String, Member]] {
+      private val buf = new Array[Byte](64 * 1024)
+      private val chunk = new Array[Byte](8192)
+      private var pos, lim = 0
+      private var base = 0L // archive offset of buf(0)
+      private val inflater = new Inflater(true)
+      private var pending: Either[String, Member] = null
+      private var ended = false
+
+      private def fill(): Boolean = pos < lim || {
+        base += lim; pos = 0; lim = math.max(0, in.read(buf)); lim > 0
+      }
+      private def byte(): Int =
+        if (fill()) { pos += 1; buf(pos - 1) & 0xff } else -1
+      private def skip(n: Int): Boolean = (0 until n).forall(_ => byte() >= 0)
+      private def zeroTerminated(): Boolean = { var b = byte(); while (b > 0) b = byte(); b == 0 }
+      private def le32(): Long =
+        (0 until 4).foldLeft(0L) { (v, i) =>
+          val b = byte(); if (v < 0 || b < 0) -1L else v | (b.toLong << (8 * i)) }
+
+      /** The next member, its framing error, or null at a clean end. */
+      private def step(): Either[String, Member] = {
+        if (!fill()) return null
+        val start = base + pos
+        val h = Array.fill(10)(byte())
+        if (h(9) < 0 || h(0) != 0x1f || h(1) != 0x8b)
+          return Left(s"bad gzip magic at offset $start")
+        if (h(2) != 8) return Left("unsupported CM")
+        val flg = h(3)
+        if ((flg & 4) != 0) { // FEXTRA
+          val lo = byte(); val hi = byte()
+          if (hi < 0) return Left("truncated FEXTRA")
+          if (!skip(lo | (hi << 8))) return Left("truncated gzip header")
+        }
+        if (((flg & 8) != 0 && !zeroTerminated()) || // FNAME
+            ((flg & 16) != 0 && !zeroTerminated()) || // FCOMMENT
+            ((flg & 2) != 0 && !skip(2))) // FHCRC
+          return Left("truncated gzip header")
+        inflater.reset()
+        val out = new ByteArrayOutputStream(8192)
+        val crc = new CRC32
+        try {
+          while (!inflater.finished()) {
+            if (inflater.needsInput()) {
+              if (!fill()) return Left("truncated deflate stream")
+              inflater.setInput(buf, pos, lim - pos)
+              pos = lim
+            }
+            val n = inflater.inflate(chunk)
+            out.write(chunk, 0, n)
+            crc.update(chunk, 0, n)
+          }
+        } catch {
+          case e: DataFormatException => return Left(s"deflate error: ${e.getMessage}")
+        }
+        pos -= inflater.getRemaining // the trailer and the next member start there
+        // verify the RFC 1952 trailer (CRC32 + ISIZE)
+        val (crcField, isize) = (le32(), le32())
+        if (isize < 0) return Left("truncated gzip trailer")
+        if (crcField != crc.getValue) return Left("gzip CRC mismatch")
+        if (isize != (out.size.toLong & 0xffffffffL)) return Left("gzip ISIZE mismatch")
+        Right(Member(out.toByteArray, start, base + pos - start))
+      }
+
+      def hasNext: Boolean = {
+        if (pending == null && !ended) {
+          pending = step()
+          if (pending == null || pending.isLeft) {
+            ended = true; inflater.end(); in.close()
+          }
+        }
+        pending != null
+      }
+
+      def next(): Either[String, Member] = {
+        if (!hasNext) throw new NoSuchElementException("no more gzip members")
+        val m = pending
+        pending = null
+        m
+      }
+    }
+
+  /** Records of a `.warc.gz` stream, lazily (+ at most one trailing
+    * error record if the member stream is malformed).
+    */
+  private def records(in: InputStream): Iterator[WarcRecord] =
+    members(in).map(_.fold(error, m => parseRecord(m.bytes)))
 
   /** (offset, compressedLength) of every gzip member — the cdx-style
     * record index of a `.warc.gz`. Built by one full decode pass,
     * exactly like Common Crawl's published cdx indexes are.
     */
   def memberOffsets(bytes: Array[Byte]): (Seq[(Long, Long)], Option[String]) = {
-    val offs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val err = walkMembers(bytes)((_, off, len) => offs += ((off.toLong, len.toLong)))
-    (offs.toSeq, err)
+    val (errs, offs) = members(new ByteArrayInputStream(bytes))
+      .map(_.map(m => (m.offset, m.length))).toSeq.partitionMap(identity)
+    (offs, errs.headOption)
   }
 
   /** Offset of the first CRLF CRLF at/after `from`, or -1 — the header
@@ -216,10 +252,8 @@ object Warc {
   /** `.warc.gz` bytes → records (+ at most one trailing error record if
     * the member stream is malformed).
     */
-  def parseFile(bytes: Array[Byte]): Seq[WarcRecord] = {
-    val (members, err) = gunzipMembers(bytes)
-    members.map(parseRecord) ++ err.map(error).toSeq
-  }
+  def parseFile(bytes: Array[Byte]): Seq[WarcRecord] =
+    records(new ByteArrayInputStream(bytes)).toVector
 
   /** Record types whose payload is page content. `warcinfo`, `request`,
     * `metadata` and `revisit` records (one or more per page in a real
@@ -245,28 +279,38 @@ object Warc {
   /** WARC ingestion source: `.warc.gz` files or directories of them → a
     * pages DataFrame `(url, warc_ts, html, warc_file, succeeded,
     * failure_reason)` feeding the extraction cascade — the real
-    * Common-Crawl entry point. Built on Spark's binaryFile source (one
-    * task per file; at Common-Crawl's ~1 GB-per-file layout that is the
-    * natural split unit, and a custom FileFormat splitting at member
-    * boundaries would be the next step if files were larger). Parse
-    * failures are rows; non-page record types are dropped.
+    * Common-Crawl entry point. binaryFile lists the archives (only
+    * `path` is selected, so it reads no bytes and packs the files into
+    * tasks by size); each task opens its archives through the Hadoop
+    * `FileSystem` with the session's Hadoop configuration (so
+    * `spark.hadoop.*` settings such as S3A credentials reach it) and
+    * walks their gzip members lazily: a task holds one member, never an
+    * archive. The parallelism is one task per archive at most, which a
+    * Common-Crawl crawl (tens of thousands of ~1 GB archives) exceeds
+    * by far. Parse failures are rows; non-page record types are
+    * dropped.
     */
   def read(spark: SparkSession, paths: String*): DataFrame = {
     import spark.implicits._
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.warc.gz")
       .load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        recordRows(path, parseFile(bytes).iterator)
+      .select(col("path"))
+      .as[String]
+      .mapPartitions(_.flatMap { path =>
+        val p = new Path(path)
+        val in = p.getFileSystem(conf.value.value).open(p)
+        // the walk closes `in` at its end; a task that fails or stops
+        // early closes it here
+        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        recordRows(path, records(in))
       })
       .toDF("url", "warc_ts", "html", "warc_file", "succeeded", "failure_reason")
   }
 
-  /** Record → row mapping shared by the whole-file and member-split
-    * readers (same output schema, same errors-as-rows contract).
-    */
+  /** Record → row mapping of [[read]] (errors-as-rows contract). */
   private def recordRows(path: String, records: Iterator[WarcRecord])
       : Iterator[(String, String, Array[Byte], String, Boolean, String)] =
     records.collect {
@@ -287,115 +331,6 @@ object Warc {
         (r.targetUri, r.headers.getOrElse("warc-date", null),
           body, path, true, null: String)
     }
-
-  // ---------------- member-split read (cdx-style index) ----------------
-  //
-  // `read` is one task per archive — the right unit when archives are
-  // ~1 GB Common-Crawl segments and there are millions of them, but a
-  // parallelism ceiling when files are few and fat. Common Crawl solves
-  // this with PUBLISHED cdx indexes (member offsets per record) enabling
-  // random access into the .warc.gz; the same design here:
-  //
-  //   writeMemberIndexes — one decode pass per archive emits a sidecar
-  //     `<file>.warc.gz.idx` ("offset length" per gzip member). Built
-  //     once per archive, like cdx generation at crawl time.
-  //   readIndexed — plans one task per MEMBER GROUP: sidecars are read
-  //     as a distributed text source, members are grouped into
-  //     contiguous ~bytesPerSplit ranges RELATIONALLY (no driver-side
-  //     index materialization — at 10^12 docs the index itself is big),
-  //     and each task seeks into its range with the Hadoop FS API
-  //     (works identically on file://, HDFS, S3A).
-
-  val IndexSuffix = ".idx"
-
-  /** Build missing sidecar member indexes (one "offset length" line per
-    * gzip member). Returns the number of archives indexed.
-    */
-  def writeMemberIndexes(spark: SparkSession, dir: String): Long = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc.gz")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (path, bytes) =>
-        val p = new org.apache.hadoop.fs.Path(path + IndexSuffix)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        if (fs.exists(p)) 0L
-        else {
-          val (offs, err) = memberOffsets(bytes)
-          // a framing error invalidates offsets past it; the direct
-          // reader surfaces it as an error row — don't index the file
-          if (err.isDefined) 0L
-          else {
-            val out = fs.create(p, true)
-            out.write(offs.map { case (o, l) => s"$o $l" }
-              .mkString("", "\n", "\n").getBytes(UTF_8))
-            out.close()
-            1L
-          }
-        }
-      })
-      .reduce(_ + _)
-  }
-
-  /** Member-split WARC read: same rows as [[read]], one task per member
-    * GROUP (contiguous ~`bytesPerSplit` compressed ranges), planned from
-    * the sidecar indexes without collecting them to the driver.
-    */
-  def readIndexed(spark: SparkSession, dir: String,
-      bytesPerSplit: Long = 32L * 1024 * 1024): DataFrame = {
-    import spark.implicits._
-    val entries = spark.read.textFile(s"$dir/*.warc.gz$IndexSuffix")
-      .select(input_file_name().as("idx"), col("value"))
-      .select(regexp_replace(col("idx"), "\\.idx$", "").as("warc"),
-        split(col("value"), " ").getItem(0).cast("long").as("off"),
-        split(col("value"), " ").getItem(1).cast("long").as("len"))
-    // contiguous, disjoint, covering ranges: a member belongs to the
-    // window its START offset falls in
-    val splits = entries
-      .groupBy(col("warc"), floor(col("off") / bytesPerSplit).as("grp"))
-      .agg(min("off").as("start"), max(col("off") + col("len")).as("end"))
-      .select(col("warc"), col("start"), col("end"))
-    // EXPLICIT partition count: the shuffle carries only (warc, start,
-    // end) descriptors — a few KB however big the archives are — so
-    // AQE's byte-based coalescing would fold it to ONE partition and
-    // serialize the whole decode behind a single task (measured: flat
-    // ~4.7k docs/s at local[4] AND local[16]). A user-specified count
-    // is exempt from AQE coalescing; 3x parallelism keeps every core
-    // fed while group sizes vary (a task owns ~1/3 core's worth).
-    val parts = math.max(1, spark.sparkContext.defaultParallelism * 3)
-    splits.as[(String, Long, Long)]
-      .repartition(parts, col("warc"), col("start")) // spread groups over tasks
-      .mapPartitions(_.flatMap { case (warc, start, end) =>
-        val p = new org.apache.hadoop.fs.Path(warc)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(p)
-        val buf = new Array[Byte]((end - start).toInt)
-        try { in.seek(start); in.readFully(buf) } finally in.close()
-        recordRows(warc, parseFile(buf).iterator)
-      })
-      .toDF("url", "warc_ts", "html", "warc_file", "succeeded", "failure_reason")
-  }
-
-  /** The production entry point: member-split read of the archives that
-    * have a sidecar index (building any missing ones first — a one-time
-    * cost per archive, like cdx generation), unioned with the whole-file
-    * read of the archives that cannot be indexed (a framing error), so
-    * their valid members and their error rows are kept.
-    */
-  def readAuto(spark: SparkSession, dir: String): DataFrame = {
-    writeMemberIndexes(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val names = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).map(_.getPath.getName).toSet
-    val unindexed = names.toSeq.sorted
-      .filter(n => n.endsWith(".warc.gz") && !names(n + IndexSuffix))
-      .map(n => new org.apache.hadoop.fs.Path(p, n).toString)
-    if (!names.exists(_.endsWith(".warc.gz" + IndexSuffix))) read(spark, dir)
-    else if (unindexed.isEmpty) readIndexed(spark, dir)
-    else readIndexed(spark, dir).union(read(spark, unindexed: _*))
-  }
 
   /** CDX-style record index construction with POINT-READ verification —
     * the Common Crawl cdx artifact's defining property: each (offset,

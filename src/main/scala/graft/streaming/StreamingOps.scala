@@ -1,10 +1,11 @@
 package graft.streaming
 
 import graft.extract.{CascadeConfig, Extract}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** One event of the stateful sessionizer. `ts` is the watermark column;
   * `ts_us` carries full microsecond precision for the session logic
@@ -56,44 +57,40 @@ object StreamingOps {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** FileStreamSource requires a directory: run `body` on `path` itself,
-    * or on a fresh dir holding a copy of a lone file, deleted once
-    * `body` returns.
+  /** A parquet stream over `path`, a directory or a lone file.
+    * FileStreamSource reads directories only, so a lone file streams its
+    * parent directory filtered to the file's glob-escaped name, with no
+    * copy. The Hadoop `FileSystem` tells which it is, so a `file:`,
+    * `hdfs:` or `s3a:` URI works like a plain path.
     */
-  private def withSourceDir[T](path: String)(body: String => T): T = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) body(path)
-    else {
-      val d = Files.createTempDirectory("graft-stream-src")
-      try {
-        Files.copy(p, d.resolve(p.getFileName))
-        body(d.toString)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
-    }
+  private def parquetStream(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val stream = spark.readStream.schema(spark.read.parquet(path).schema)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory)
+      stream.parquet(path)
+    else stream
+      .option("pathGlobFilter", p.getName.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
+      .parquet(p.getParent.toString)
   }
 
-  /** Drain a memory-sink stream over `sourcePath` and return its result
-    * table. `build` makes the streaming frame from the source dir; the
-    * query starts under `statePartitions` (see [[withStatePartitions]])
-    * with an AvailableNow trigger and is stopped before a staged source
-    * copy is deleted. The memory sink holds the result, so the returned
+  /** Drain the memory-sink stream `build` makes and return its result
+    * table. The query starts under `statePartitions` (see
+    * [[withStatePartitions]]) with an AvailableNow trigger and is stopped
+    * once drained. The memory sink holds the result, so the returned
     * frame no longer reads the source.
     */
-  private def drainToMemory(spark: SparkSession, sourcePath: String,
-      queryNameBase: String, outputMode: String, statePartitions: Int)(
-      build: String => DataFrame): DataFrame = {
+  private def drainToMemory(spark: SparkSession, queryNameBase: String,
+      outputMode: String, statePartitions: Int)(build: => DataFrame): DataFrame = {
     val queryName = unique(queryNameBase)
-    withSourceDir(sourcePath) { srcDir =>
-      val q = withStatePartitions(spark, statePartitions) {
-        build(srcDir).writeStream
-          .outputMode(outputMode)
-          .format("memory")
-          .queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.processAllAvailable() finally q.stop()
+    val q = withStatePartitions(spark, statePartitions) {
+      build.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
+    try q.processAllAvailable() finally q.stop()
     spark.table(queryName)
   }
 
@@ -104,9 +101,8 @@ object StreamingOps {
     */
   def windowedEventCounts(spark: SparkSession, eventsPath: String,
       queryNameBase: String = "graft_stream_events"): DataFrame =
-    drainToMemory(spark, eventsPath, queryNameBase, "complete", 8) { srcDir =>
-      val schema = spark.read.parquet(srcDir).schema
-      spark.readStream.schema(schema).parquet(srcDir)
+    drainToMemory(spark, queryNameBase, "complete", 8) {
+      parquetStream(spark, eventsPath)
         // parquet carries TIMESTAMP_NTZ; watermarks need TIMESTAMP (UTC session)
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "2 days")
@@ -172,9 +168,8 @@ object StreamingOps {
       }
     }
 
-    drainToMemory(spark, eventsPath, queryNameBase, "append", 8) { srcDir =>
-      val schema = spark.read.parquet(srcDir).schema
-      spark.readStream.schema(schema).parquet(srcDir)
+    drainToMemory(spark, queryNameBase, "append", 8) {
+      parquetStream(spark, eventsPath)
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "0 seconds")
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
@@ -208,10 +203,9 @@ object StreamingOps {
     // partition per micro-batch — the heaviest case for the narrow
     // state partitioning (see withStatePartitions), so it runs at the
     // narrowest setting of the family (4, like streamDedup)
-    drainToMemory(spark, eventsPath, queryNameBase, "append", 4) { srcDir =>
-      val schema = spark.read.parquet(srcDir).schema
+    drainToMemory(spark, queryNameBase, "append", 4) {
       def side(t: String, prefix: String) =
-        spark.readStream.schema(schema).parquet(srcDir)
+        parquetStream(spark, eventsPath)
           .withColumn("ts", col("ts").cast("timestamp"))
           .where(col("event_type") === t)
           .withWatermark("ts", "2 days")
@@ -240,9 +234,8 @@ object StreamingOps {
     */
   def streamDedup(spark: SparkSession, docsPath: String,
       queryNameBase: String = "graft_stream_dedup"): DataFrame =
-    drainToMemory(spark, docsPath, queryNameBase, "append", 4) { srcDir =>
-      val schema = spark.read.parquet(srcDir).schema
-      spark.readStream.schema(schema).parquet(srcDir)
+    drainToMemory(spark, queryNameBase, "append", 4) {
+      parquetStream(spark, docsPath)
         .withColumn("copy", explode(
           when(pmod(col("doc_id"), lit(3)) === 0, array(lit(0), lit(1)))
             .otherwise(array(lit(0)))))
@@ -300,8 +293,7 @@ object StreamingOps {
     * batch-equality property the driver oracle checks.
     *
     * History = doc_id % 5 != 0 (pre-indexed); the new 20% is staged as
-    * `nBatches` parquet files consumed one file per trigger. A staged
-    * copy of a lone input file is deleted once the query stops. The
+    * `nBatches` parquet files consumed one file per trigger. The
     * returned pair table is materialized (a local checkpoint) before
     * the `graft-stream-inc` work dir is deleted, so the frame reads
     * no file of it.
@@ -316,62 +308,60 @@ object StreamingOps {
     try {
       val (indexDir, textsDir, newDir, pairsDir, ckpt) =
         (s"$work/index", s"$work/texts", s"$work/new", s"$work/pairs", s"$work/ckpt")
-      withSourceDir(docsPath) { srcDir =>
-        import spark.implicits._
-        val docs = spark.read.parquet(srcDir)
-          .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
-        val isNew = pmod(col("doc_id"), lit(5)) === 0
+      import spark.implicits._
+      val docs = spark.read.parquet(docsPath)
+        .where(col("doc_id") < 2000).select(col("doc_id"), col("text"))
+      val isNew = pmod(col("doc_id"), lit(5)) === 0
 
-        // seed the persisted index tables with the history; every commit —
-        // seed and per-batch alike — is its OWN subdirectory written with
-        // mode=overwrite, keyed by batchId, so foreachBatch's documented
-        // at-least-once delivery is idempotent: a retried batch rewrites
-        // its subdirs byte-identically instead of double-appending pairs
-        // and double-committing bands (which would make the retry collide
-        // with its own first attempt). Readers glob the subdirs.
-        val oldDocs = docs.where(!isNew)
-        graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
-          shingleSize = 3).write.parquet(s"$indexDir/seed")
-        oldDocs.write.parquet(s"$textsDir/seed")
-        // stage the incoming batches as separate files (one per trigger)
-        docs.where(isNew)
-          .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
-          .write.parquet(newDir)
-        // pairs sink must exist even if every batch emits nothing
-        spark.emptyDataset[(Long, Long, Long)]
-          .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
+      // seed the persisted index tables with the history; every commit —
+      // seed and per-batch alike — is its OWN subdirectory written with
+      // mode=overwrite, keyed by batchId, so foreachBatch's documented
+      // at-least-once delivery is idempotent: a retried batch rewrites
+      // its subdirs byte-identically instead of double-appending pairs
+      // and double-committing bands (which would make the retry collide
+      // with its own first attempt). Readers glob the subdirs.
+      val oldDocs = docs.where(!isNew)
+      graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
+        shingleSize = 3).write.parquet(s"$indexDir/seed")
+      oldDocs.write.parquet(s"$textsDir/seed")
+      // stage the incoming batches as separate files (one per trigger)
+      docs.where(isNew)
+        .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
+        .write.parquet(newDir)
+      // pairs sink must exist even if every batch emits nothing
+      spark.emptyDataset[(Long, Long, Long)]
+        .toDF("id_a", "id_b", "jaccard_bp").write.parquet(s"$pairsDir/seed")
 
-        val schema = docs.schema
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(newDir)
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val b = batch.persist()
-            // a RETRIED batch may have committed b<id> subdirs before its
-            // first attempt failed; excluding the batch's own ids from the
-            // history views makes the mining input identical on retry
-            // (and gives last-write-wins semantics for re-crawled ids)
-            val bIds = broadcast(b.select(col("doc_id")))
-            val history = spark.read.parquet(s"$indexDir/*")
-              .join(bIds, Seq("doc_id"), "left_anti")
-            val historyTexts = spark.read.parquet(s"$textsDir/*")
-              .join(bIds, Seq("doc_id"), "left_anti")
-            graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
-                threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
-              .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
-            // commit this batch into the index tables — the next batch
-            // mines against history + everything ingested before it
-            graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
-              shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-            b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
-            b.unpersist()
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      val schema = docs.schema
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(newDir)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.persist()
+          // a RETRIED batch may have committed b<id> subdirs before its
+          // first attempt failed; excluding the batch's own ids from the
+          // history views makes the mining input identical on retry
+          // (and gives last-write-wins semantics for re-crawled ids)
+          val bIds = broadcast(b.select(col("doc_id")))
+          val history = spark.read.parquet(s"$indexDir/*")
+            .join(bIds, Seq("doc_id"), "left_anti")
+          val historyTexts = spark.read.parquet(s"$textsDir/*")
+            .join(bIds, Seq("doc_id"), "left_anti")
+          graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
+              threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
+            .write.mode("overwrite").parquet(s"$pairsDir/b$batchId")
+          // commit this batch into the index tables — the next batch
+          // mines against history + everything ingested before it
+          graft.ops.Dedup.lshBandIndex(b, numHashes = 64, bands = 32,
+            shingleSize = 3).write.mode("overwrite").parquet(s"$indexDir/b$batchId")
+          b.write.mode("overwrite").parquet(s"$textsDir/b$batchId")
+          b.unpersist()
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
       // the pair table is bounded by the output (doc_id < 2000): hold it
       // in the block manager so the work dir can go before returning
       spark.read.parquet(s"$pairsDir/*").localCheckpoint(eager = true)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Writes PLANS.md: the formatted physical plan of each headline query
   * with a one-paragraph reading of why that shape is the one we want at
   * 100 TB. Regenerate after plan-affecting changes:
-  *   runMain graft.tools.DumpPlans [sfDir=/root/testdata/sf0.01]
+  *   runMain graft.tools.DumpPlans <sfDir>
   */
 object DumpPlans {
 
@@ -239,7 +239,11 @@ object DumpPlans {
       "(as at this tier)."))
 
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
+    if (args.isEmpty) {
+      System.err.println("usage: graft.tools.DumpPlans <sfDir>")
+      sys.exit(2)
+    }
+    val sfDir = args(0)
     // a fixed width: the dumped plans show partition counts
     val spark = graft.util.Sessions.local(8, "graft-plans")
     val sb = new StringBuilder

@@ -11,8 +11,12 @@ package graft.tools
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.tools.TimeQuery <queryName> <sfDir> [reps=2]")
+      sys.exit(2)
+    }
     val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val sfDir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = graft.util.Sessions.local(graft.util.Sessions.cpus, s"time-$name")
     for (r <- 1 to reps) {

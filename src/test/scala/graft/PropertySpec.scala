@@ -168,14 +168,54 @@ object PropertySpec extends Properties("graft") {
       else out.length <= payload.length
     }
 
-  property("warc: parseFile total on corrupted valid files") =
-    forAll(Gen.choose(0, 200), Gen.choose(Byte.MinValue, Byte.MaxValue)) { (at, b) =>
+  /** A one-record `.warc.gz` with one byte overwritten. */
+  private val corruptedWarc: Gen[Array[Byte]] =
+    for (at <- Gen.choose(0, 200); b <- Gen.choose(Byte.MinValue, Byte.MaxValue)) yield {
       val f = graft.sources.Warc.encodeFile(Seq(
         graft.sources.Warc.encodeRecord("https://h.example/x",
           "2024-01-01T00:00:00Z", ("body " * 20).getBytes("UTF-8"))))
       val c = f.clone()
       c(at % f.length) = b
+      c
+    }
+
+  property("warc: parseFile total on corrupted valid files") =
+    forAll(corruptedWarc) { c =>
       graft.sources.Warc.parseFile(c).forall(r => r.warcType != null)
+    }
+
+  /** A valid multi-member `.warc.gz` of arbitrary payloads. */
+  private val warcFile: Gen[Array[Byte]] =
+    Gen.listOf(Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)).map { ps =>
+      graft.sources.Warc.encodeFile(ps.zipWithIndex.map { case (p, i) =>
+        graft.sources.Warc.encodeRecord(s"https://h.example/$i", "2024-01-01T00:00:00Z", p)
+      })
+    }
+
+  /** `bytes` served at most `k` bytes per `read` call. */
+  private def trickle(bytes: Array[Byte], k: Int): java.io.InputStream =
+    new java.io.ByteArrayInputStream(bytes) {
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        super.read(b, off, math.min(len, k))
+    }
+
+  private def walk(in: java.io.InputStream) =
+    graft.sources.Warc.members(in).map(_.map(m => (m.bytes.toSeq, m.offset, m.length))).toList
+
+  property("warc: member walk over k-byte reads equals the whole-array walk") =
+    forAll(warcFile, Gen.choose(1, 64)) { (f, k) =>
+      val whole = walk(new java.io.ByteArrayInputStream(f))
+      // GZIPInputStream reads concatenated members: an independent reference
+      val reference =
+        if (f.isEmpty) Array.emptyByteArray
+        else new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(f)).readAllBytes()
+      walk(trickle(f, k)) == whole && whole.forall(_.isRight) &&
+        whole.flatMap(_.toOption.get._1).sameElements(reference)
+    }
+
+  property("warc: member walk over k-byte reads, corrupted files") =
+    forAll(corruptedWarc, Gen.choose(1, 64)) { (c, k) =>
+      walk(trickle(c, k)) == walk(new java.io.ByteArrayInputStream(c))
     }
 
   property("bpe: countTokens total, deterministic, >= piece count") =

@@ -14,7 +14,10 @@ import scala.jdk.CollectionConverters._
   * parameter, not through a system property or the active session.
   * The job and table code reach files through the Hadoop `FileSystem`
   * API only: `java.io.File` sees a local path, never a `file:`,
-  * `hdfs:` or `s3a:` URI.
+  * `hdfs:` or `s3a:` URI. Main code takes the session's Hadoop
+  * configuration: a fresh `Configuration` drops its `spark.hadoop.*`
+  * settings, such as S3A credentials. Tools take their tier as an
+  * argument; only Bench, the external driver's surface, defaults one.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -38,6 +41,19 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("main code names no absolute checkout path") {
     val hits = sourcesContaining("src/main", Seq("", "root", "repo").mkString("/"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("main code names no test-data tier outside Bench") {
+    val tier = Seq("", "root", "testdata").mkString("/")
+    val hits = sourcesContaining("src/main", tier)
+      .filterNot(_ == Paths.get("src/main/scala/graft/Bench.scala"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("main code builds no Hadoop Configuration of its own") {
+    val fresh = """new\s+(org\.apache\.hadoop\.conf\.)?Configuration\s*\(""".r
+    val hits = sourcesWhere("src/main")(fresh.findFirstIn(_).isDefined)
     assert(hits.isEmpty, hits.mkString(", "))
   }
 

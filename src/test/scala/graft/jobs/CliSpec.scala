@@ -3,6 +3,7 @@ package graft.jobs
 import graft.{SparkSuite, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** CLI verb smoke tests: the reference's standalone embed/index verbs
   * (core/cli/app.py:131-215, 218-271) over the library seams, plus the
@@ -102,8 +103,15 @@ class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
         graft.sources.Warc.encodeFile(batch.map(p =>
           graft.sources.Warc.encodeRecord(p.url, "2024-01-01T00:00:00Z", p.html))))
     }
+    def listing(): Seq[String] = {
+      val s = Files.list(warcDir)
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    val before = listing()
     val out = work.resolve("table").toString
-    Cli.main(Array("extract", s"warc:$warcDir", out, "--units", "2"))
+    Cli.main(Array("extract", s"warc:${warcDir.toUri}", out, "--units", "2"))
+    // the read writes nothing beside its input
+    assert(listing() == before && before.forall(_.endsWith(".warc.gz")), listing())
     val t = new graft.table.IcebergLite(out)
     assert(t.read(spark).count() == 50)
     assert(t.read(spark).where(org.apache.spark.sql.functions.col("succeeded"))

@@ -39,6 +39,10 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
         .collect()
       assert(rows.map(_.getAs[Long]("n")).sum == 20)
       assert(staged() == before, "graft-stream-src dir left behind")
+      // the same file named by its file: URI streams the same rows
+      val viaUri = StreamingOps.windowedEventCounts(spark, lone.toUri.toString, "spec_events_uri")
+        .collect()
+      assert(viaUri.map(_.toString).sorted.toSeq == rows.map(_.toString).sorted.toSeq)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
