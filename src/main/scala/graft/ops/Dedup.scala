@@ -424,120 +424,115 @@ object Dedup {
 
   // ---------------- connected-components dedup clusters ----------------
 
-  /** Connected components over a near-dup pair table via alternating
-    * large-star / small-star (Kiveris et al. 2014, "Connected
-    * Components in MapReduce and Beyond" — the published O(log²n)-round
-    * distributed union-find; in practice a handful of rounds). This is
-    * the exact-cluster upgrade over [[applyPairDedup]]'s greedy
-    * one-pass rule: in a transitive chain a–b–c the greedy applier can
-    * drop c whose canonical b was itself dropped, while components
-    * canonicalize every member to the cluster-minimum id.
+  /** Edge count up to which the contraction runs as ONE pass in ONE
+    * partition, whose forest is then exact. That task receives each edge
+    * twice (once per endpoint); [[unionFindForest]] holds per edge the
+    * ids received (32 bytes), their sorted copy (32), an Int parent per
+    * node (≤ 8) and ≤ 32 bytes of array growth: under 110 bytes per edge.
+    */
+  private val OnePartitionEdges = 1000000L
+
+  /** Safety cap on multi-partition passes; a 2048-node path takes 5. */
+  private val MaxPasses = 30
+
+  /** Union-find over one partition's edges, always linking the larger
+    * root under the smaller, so every root is its component's minimum.
+    * Emits (node, root) for every non-root node seen: the output depends
+    * on the edge SET alone, so a retried task emits the same rows.
+    */
+  private[ops] def unionFindForest(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { case (u, v) => ends += u; ends += v }
+    val e = ends.result()
+    val ids = e.clone() // sorted and unique: index order is id order
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    val parent = Array.tabulate(n)(identity)
+    @annotation.tailrec def find(i: Int): Int = // with path halving
+      if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, n, id))
+    for (k <- e.indices by 2) {
+      val a = root(e(k))
+      val b = root(e(k + 1))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    Iterator.range(0, n).filter(i => find(i) != i).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** One contraction pass: every edge is keyed under BOTH endpoints, so
+    * a node's partition sees all of its edges; [[unionFindForest]] runs
+    * per partition and the forests' distinct union is the next edge set.
+    * Keyed by one end alone, a chain a→b→c could keep its two edges in
+    * different partitions and come back unchanged: a false fixpoint. The
+    * explicit partition count keeps AQE from folding the pass into one task.
+    */
+  private[graft] def contractionPass(edges: DataFrame, partitions: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(explode(array(col("u"), col("v"))).as("k"), col("u"), col("v"))
+      .repartition(partitions, col("k"))
+      .select("u", "v").as[(Long, Long)]
+      .mapPartitions(unionFindForest)
+      .toDF("u", "v").distinct()
+  }
+
+  /** Connected components over a near-dup pair table by union-find
+    * contraction, FP-Hadoop's intermediate reduce (PAPERS.md): each
+    * partition merges its partial groups before the next merge. The
+    * exact-cluster upgrade over [[applyPairDedup]]'s greedy rule, which
+    * in a chain a–b–c can drop c whose canonical b was itself dropped.
     *
-    * Each round is two (shuffle on node id → hash-agg min → re-join)
-    * passes over the EDGE table only — never the documents — so the
-    * cost is bounded by the pair count, and rounds by the log of the
-    * largest component's diameter (near-dup clusters are clique-ish:
-    * diameter 1–2, measured 3 rounds to fixpoint on the 10-clique
-    * adversarial tier). Lineage is truncated per round with an eager
-    * localCheckpoint — the standard guard against iterative-plan blowup.
+    * The canonical edge set is materialized once. Up to
+    * `OnePartitionEdges` edges, one single-partition pass is exact. Above
+    * it, checkpointed passes over the shuffle partitions repeat until the
+    * edge set stops changing: a one-pass fingerprint (count + XOR of row
+    * hashes) probes each pass and an exact `except` confirms a "stable"
+    * probe, so a collision costs a pass, never a wrong answer. A fixpoint
+    * is a star forest: every node points at its component's minimum.
     *
     * Returns (id, component) for every node of `pairs`, component = the
     * cluster's minimum id.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame =
-    connectedComponentsWithRounds(pairs, maxRounds)._1
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponentsWithRounds(pairs)._1
 
-  /** [[connectedComponents]] plus the round count it took to converge —
-    * the bound the scale evidence reports.
-    */
-  /** One-pass order-independent edge-set fingerprint: (count, bit_xor
-    * of row hashes). The set is distinct, so XOR is collision-stable
-    * against reordering, and under ANSI arithmetic XOR cannot overflow.
-    */
-  private def edgeFingerprint(edges: DataFrame): (Long, Long) = {
-    val fp = edges.select(xxhash64(col("u"), col("v")).as("h"))
-      .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
-    (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
-  }
+  /** [[connectedComponents]] plus the number of contraction passes it ran. */
+  def connectedComponentsWithRounds(pairs: DataFrame): (DataFrame, Int) =
+    connectedComponentsWithRounds(pairs, OnePartitionEdges)
 
-  def connectedComponentsWithRounds(pairs: DataFrame,
-      maxRounds: Int = 25): (DataFrame, Int) = {
-    // canonical directed edges (larger id → smaller id), deduped
-    var edges = pairs
+  /** Tests lower the bound to drive small graphs through the fixpoint. */
+  private[graft] def connectedComponentsWithRounds(pairs: DataFrame,
+      onePartitionEdges: Long): (DataFrame, Int) = {
+    var edges = pairs // larger id → smaller id
       .select(greatest(col("id_a"), col("id_b")).cast("long").as("u"),
         least(col("id_a"), col("id_b")).cast("long").as("v"))
-      .where(col("u") =!= col("v")).distinct()
+      .where(col("u") =!= col("v"))
       .localCheckpoint(true)
-    var rounds = 0
-    var done = false
-    // seeded from the INITIAL edge set (not a sentinel) so an
-    // already-converged input is detected in round 1, keeping the
-    // reported round counts comparable with the pre-fingerprint code
-    var lastFp = edgeFingerprint(edges)
-    while (!done && rounds < maxRounds) {
-      // LARGE-STAR: over the symmetrized graph, every neighbor v > u
-      // re-links to m = min(Γ(u) ∪ {u}). Flattens tall chains.
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mL = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val large = sym.join(mL, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      // NOT distinct'd: duplicates (bounded at 2x by the symmetrized
-      // union) change neither mS's min nor `small`'s rows — small has
-      // its own distinct — so deduping here bought nothing but a full
-      // extra exchange per round
-      // SMALL-STAR: edges are (larger → smaller); every smaller
-      // neighbor and u itself re-link to m = min(Γ(u)). Flattens stars.
-      val mS = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(mS, "u")
-        .where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mS.select(col("u"), col("m").as("v")))
-        .distinct()
-        // the eager localCheckpoint is LOAD-BEARING for the logical
-        // plan, not just the physical data: persist() keeps each
-        // round's plan nested inside the next and Catalyst re-optimizes
-        // the whole tower every iteration — measured as a planning
-        // blow-up past ~10 rounds (a 12-round path graph went from
-        // seconds to unbounded). Checkpointing truncates lineage each
-        // round, so planning cost stays constant per round.
-        .localCheckpoint(true)
-      // fixpoint when the edge SET is unchanged. The per-round probe is
-      // a cheap one-pass fingerprint (count + order-independent XOR of
-      // row hashes — the edge set is distinct, and XOR cannot overflow
-      // under ANSI arithmetic); only when it reports "stable" does the
-      // EXACT two-sided except check confirm — so the join-shaped check
-      // runs once at convergence instead of every round, and a
-      // fingerprint collision (~2^-64) costs an extra round, never a
-      // wrong answer
-      val fpNow = edgeFingerprint(small)
-      if (fpNow == lastFp)
-        done = small.except(edges).isEmpty && edges.except(small).isEmpty
-      lastFp = fpNow
-      edges = small
-      rounds += 1
+    var passes = 1
+    if (edges.count() <= onePartitionEdges) edges = contractionPass(edges, 1)
+    else {
+      val partitions = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      var lastFp = (-1L, 0L) // no edge set has count -1
+      var done = false
+      while (!done) {
+        require(passes <= MaxPasses,
+          s"connected components did not converge in $MaxPasses passes")
+        val next = contractionPass(edges, partitions).localCheckpoint(true)
+        val fp = next.select(xxhash64(col("u"), col("v")).as("h"))
+          .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
+        val fpNow = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
+        // two distinct sets of equal count: one inclusion is equality
+        done = fpNow == lastFp && next.except(edges).isEmpty
+        if (!done) passes += 1
+        lastFp = fpNow
+        edges = next
+      }
     }
-    require(done, s"connectedComponents did not converge in $maxRounds rounds")
-    // at fixpoint the graph is a star forest: u → component root v;
-    // roots themselves are their own component
-    val roots = edges.select(col("v")).distinct()
-      .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
+    // a star forest: u → its component's minimum v, never itself a child
     val assign = edges.select(col("u").as("id"), col("v").as("component"))
-      .union(roots.select(col("v").as("id"), col("v").as("component")))
-    (assign, rounds)
-  }
-
-  /** Cluster-exact dedup applier: keep one document (the minimum id)
-    * per connected component — the upgrade over [[applyPairDedup]]'s
-    * greedy rule. Docs in no pair are kept untouched (left join).
-    */
-  def ccDedup(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val cc = connectedComponents(pairs)
-    docs.join(cc.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .where(col("component").isNull || col("component") === col("doc_id"))
-      .drop("component")
+      .union(edges.select(col("v").as("id"), col("v").as("component")).distinct())
+    (assign, passes)
   }
 
   // ---------------- cross-document substring dedup ----------------
@@ -796,9 +791,10 @@ object Dedup {
     * when five mirrors of a page near-dup each other, you keep the
     * cleanest copy, not the numerically-first crawl.
     *
-    * Scale shape: the component assignment is the bounded-round
-    * star-contraction loop; the best-pick is ONE map-side-combinable
-    * min(struct) aggregate over (component) — no window, no sort —
+    * Scale shape: the component assignment is the union-find
+    * contraction of [[connectedComponents]] (one pass below its edge
+    * bound); the best-pick is ONE map-side-combinable min(struct)
+    * aggregate over (component) — no window, no sort —
     * followed by an id-keyed equi-join of the (cluster-count-bounded)
     * best table.
     *

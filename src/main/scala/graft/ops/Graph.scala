@@ -30,12 +30,12 @@ import org.apache.spark.sql.functions._
   * one aggregation (sum by dst) with map-side partial combine; the edge
   * set is computed once and localCheckpoint'd, and each round's rank
   * frame is localCheckpoint'd too — the same lineage-truncation
-  * discipline as [[Dedup.connectedComponentsWithRounds]] (without it,
-  * Catalyst re-optimizes a plan tower that grows per round). At 10^12
-  * edges the join shuffles on the edge src key; skewed in-degree (hub
-  * hosts) affects only the reduce-side SUM, which AQE skew-split
-  * handles because partial aggregation has already collapsed each map
-  * partition's contributions to one row per (dst) key.
+  * discipline as the multi-pass [[Dedup.connectedComponentsWithRounds]]
+  * (without it, Catalyst re-optimizes a plan tower that grows per
+  * round). At 10^12 edges the join shuffles on the edge src key; skewed
+  * in-degree (hub hosts) affects only the reduce-side SUM, which AQE
+  * skew-split handles because partial aggregation has already collapsed
+  * each map partition's contributions to one row per (dst) key.
   */
 object Graph {
 

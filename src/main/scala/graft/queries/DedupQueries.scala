@@ -89,12 +89,12 @@ object DedupQueries {
         |ORDER BY doc_id""".stripMargin),
 
     Query("dedup_cc", (s, dir) => {
-      // exact-cluster dedup: minhash pair mining → alternating
-      // large-star/small-star connected components (Kiveris et al.
-      // 2014) — every pair member canonicalizes to its cluster-MINIMUM
-      // id, fixing the greedy applier's transitive-chain misses. The
-      // oracle recomputes components with a recursive CTE over the
-      // same exact-jaccard pair set
+      // exact-cluster dedup: minhash pair mining → union-find
+      // contraction into connected components — every pair member
+      // canonicalizes to its cluster-MINIMUM id, fixing the greedy
+      // applier's transitive-chain misses. The oracle recomputes
+      // components with a recursive CTE over the same exact-jaccard
+      // pair set
       val docs = t(s, dir, "documents").where(col("doc_id") < 2000)
       val pairs = graft.ops.Dedup.minhashLshPairs(docs,
         threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
@@ -105,7 +105,7 @@ object DedupQueries {
     },
       // independent derivation of the components: min-label closure by
       // recursive CTE (transitive reachability) over the exact-jaccard
-      // pair set — no star-contraction logic shared with the kernel
+      // pair set — no union-find logic shared with the kernel
       s"""WITH RECURSIVE $exactJaccardCte,
         |edges AS (SELECT id_a AS u, id_b AS v FROM exact_pairs
         |          UNION ALL SELECT id_b, id_a FROM exact_pairs),
@@ -406,9 +406,9 @@ object DedupQueries {
         .orderBy(col("doc_id"))
     },
       // components by min-label recursive closure (independent of the
-      // kernel's star contraction), quality from the shared CTE, pick
-      // by row_number (score desc, id) — the kernel's min(struct) agg
-      // must land on the same member
+      // kernel's union-find contraction), quality from the shared CTE,
+      // pick by row_number (score desc, id) — the kernel's min(struct)
+      // agg must land on the same member
       s"""WITH RECURSIVE $exactJaccardCte,
         |$textAnalysisCtes,
         |edges AS (SELECT id_a AS u, id_b AS v FROM exact_pairs

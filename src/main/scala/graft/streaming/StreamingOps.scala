@@ -319,7 +319,11 @@ object StreamingOps {
       // at-least-once delivery is idempotent: a retried batch rewrites
       // its subdirs byte-identically instead of double-appending pairs
       // and double-committing bands (which would make the retry collide
-      // with its own first attempt). Readers glob the subdirs.
+      // with its own first attempt). Readers list the whole tree: a glob
+      // path makes Spark's sink-metadata probe stat a literal "*" and log
+      // a FileNotFoundException per read.
+      def readTree(dir: String) =
+        spark.read.option("recursiveFileLookup", "true").parquet(dir)
       val oldDocs = docs.where(!isNew)
       graft.ops.Dedup.lshBandIndex(oldDocs, numHashes = 64, bands = 32,
         shingleSize = 3).write.parquet(s"$indexDir/seed")
@@ -345,9 +349,9 @@ object StreamingOps {
           // history views makes the mining input identical on retry
           // (and gives last-write-wins semantics for re-crawled ids)
           val bIds = broadcast(b.select(col("doc_id")))
-          val history = spark.read.parquet(s"$indexDir/*")
+          val history = readTree(indexDir)
             .join(bIds, Seq("doc_id"), "left_anti")
-          val historyTexts = spark.read.parquet(s"$textsDir/*")
+          val historyTexts = readTree(textsDir)
             .join(bIds, Seq("doc_id"), "left_anti")
           graft.ops.Dedup.incrementalNearDupPairs(history, historyTexts, b,
               threshold = 0.8, numHashes = 64, bands = 32, shingleSize = 3)
@@ -364,7 +368,7 @@ object StreamingOps {
       try q.processAllAvailable() finally q.stop()
       // the pair table is bounded by the output (doc_id < 2000): hold it
       // in the block manager so the work dir can go before returning
-      spark.read.parquet(s"$pairsDir/*").localCheckpoint(eager = true)
+      readTree(pairsDir).localCheckpoint(eager = true)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 }

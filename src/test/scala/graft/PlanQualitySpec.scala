@@ -184,11 +184,11 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite with TempDirs {
     }
   }
 
-  test("dedup_substring past the checkpoint: no text in any exchange, bounded exchange count") {
-    // substringDupPairs' own plan over the checkpointed match table: the
-    // diagonal prefilter, the island window and the shared-mass
-    // aggregate. The bound is the plan's exchange count when the gate
-    // was added (5)
+  /** substringDupPairs' own plan over the checkpointed match table: the
+    * diagonal prefilter, the island window and the shared-mass aggregate.
+    * Planned without broadcasts or AQE, so the gates see every exchange.
+    */
+  private def substringPairsPlan: org.apache.spark.sql.execution.SparkPlan = {
     val conf = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false")
@@ -200,19 +200,55 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite with TempDirs {
       val shared = (1 to 40).map(i => s"w$i").mkString(" ")
       val docs = Seq((1L, s"alpha $shared beta"), (2L, s"gamma $shared delta"),
         (3L, "unrelated words only")).toDF("doc_id", "text")
-      val plan = graft.ops.Dedup.substringDupPairs(docs).queryExecution.executedPlan
-      val exchanges = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }
-      exchanges.foreach { e =>
-        assert(!e.output.exists(_.name.toLowerCase.contains("text")),
-          s"exchange carries text: ${e.output.map(_.name).mkString(", ")}")
-      }
-      assert(exchanges.nonEmpty && exchanges.size <= 5, plan.toString)
+      graft.ops.Dedup.substringDupPairs(docs).queryExecution.executedPlan
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("dedup_substring past the checkpoint: no text in any exchange, bounded exchange count") {
+    // the bound is the plan's exchange count when the gate was added (5)
+    val plan = substringPairsPlan
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }
+    exchanges.foreach { e =>
+      assert(!e.output.exists(_.name.toLowerCase.contains("text")),
+        s"exchange carries text: ${e.output.map(_.name).mkString(", ")}")
+    }
+    assert(exchanges.nonEmpty && exchanges.size <= 5, plan.toString)
+  }
+
+  test("dedup_substring past the checkpoint: prefilter and shared mass hash-aggregate map-side, one island window") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val plan = substringPairsPlan
+    val aggs = plan.collect { case a: HashAggregateExec => a }
+    def keys(a: HashAggregateExec) = a.groupingExpressions.map(_.name)
+    // the diagonal prefilter's count combines map-side, before its exchange
+    assert(aggs.exists(a => keys(a) == Seq("id_a", "id_b", "diag") &&
+      a.aggregateExpressions.exists(_.mode == Partial)), plan.toString)
+    // shared mass, count(distinct fp) per pair: (pair, fp) is deduped on
+    // both sides of its exchange
+    assert(aggs.count(a => keys(a) == Seq("id_a", "id_b", "fp")) == 2, plan.toString)
+    assert(plan.collect { case a: SortAggregateExec => a }.isEmpty, plan.toString)
+    // exactly one window: the island numbering, per diagonal, in ia order
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.size == 1, plan.toString)
+    assert(windows.head.partitionSpec.map(_.sql) == Seq("id_a", "id_b", "diag") &&
+      windows.head.orderSpec.map(_.child.sql) == Seq("ia"), plan.toString)
+  }
+
+  test("connected components: a contraction pass has one endpoint-keyed exchange, one for distinct, no join") {
+    import testImplicits._
+    val edges = Seq((2L, 1L), (3L, 2L), (5L, 4L)).toDF("u", "v")
+    val plan = graft.ops.Dedup.contractionPass(edges, 4).queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), s"a contraction pass must not join:\n$plan")
+    assert("""Exchange hashpartitioning\(k#\d+L?, 4\)""".r.findAllIn(plan).size == 1, plan)
+    assert("""Exchange hashpartitioning\(u#\d+L?, v#\d+L?, \d+\)""".r.findAllIn(plan).size == 1, plan)
+    assert("Exchange".r.findAllIn(plan).size == 2, plan)
   }
 
   test("contamination_check broadcasts the eval side; train never shuffles pre-join") {

@@ -294,6 +294,58 @@ object PropertySpec extends Properties("graft") {
       partitions && inGroup && cell >= 0 && cell < k
     }
 
+  /** A near-dup pair set of `n` components (isolated pairs, chains and
+    * cliques) on permuted ids: a component's minimum sits anywhere in it,
+    * a pair's larger id is as often first as second, and components
+    * interleave across partitions.
+    */
+  private def nearDupGraph(n: Int): Gen[Seq[(Long, Long)]] = for {
+    shapes <- Gen.listOfN(n, Gen.oneOf(Gen.const(("pair", 2)),
+      Gen.choose(2, 16).map(("chain", _)), Gen.choose(2, 16).map(("clique", _))))
+    seed <- Gen.long
+  } yield {
+    val perm = new scala.util.Random(seed).shuffle((0L until shapes.map(_._2).sum).toVector)
+    shapes.zip(shapes.scanLeft(0)(_ + _._2)).flatMap { case ((shape, k), first) =>
+      val nodes = perm.slice(first, first + k)
+      if (shape == "clique") nodes.combinations(2).map(p => (p(0), p(1)))
+      else nodes.sliding(2).map(p => (p(0), p(1)))
+    }
+  }
+
+  /** The reference: BFS on the driver from each unlabeled node in
+    * ascending id order, so every node gets its component's minimum.
+    */
+  private def bfsComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    for (s <- adj.keys.toSeq.sorted if !label.contains(s)) {
+      label(s) = s
+      val queue = scala.collection.mutable.Queue(s)
+      while (queue.nonEmpty)
+        for (n <- adj(queue.dequeue()) if !label.contains(n)) { label(n) = s; queue += n }
+    }
+    label.toMap
+  }
+
+  property("connectedComponents equals a driver BFS, in one pass and past the edge bound") =
+    Prop { params =>
+      // ONE draw of 300 components, run once per regime: a forAll would
+      // start a hundred Spark runs per regime, minutes for the same shapes
+      val seed = params.initialSeed.getOrElse(org.scalacheck.rng.Seed.random())
+      val edges = nearDupGraph(300).pureApply(params, seed)
+      val spark = graft.util.Sessions.local(4, "PropertySpec")
+      import spark.implicits._
+      val pairs = edges.toDF("id_a", "id_b")
+      val want = bfsComponents(edges)
+      val ok = Seq(graft.ops.Dedup.connectedComponentsWithRounds(pairs),
+          graft.ops.Dedup.connectedComponentsWithRounds(pairs, 0L)).forall { case (cc, _) =>
+        val rows = cc.collect().map(r => r.getLong(0) -> r.getLong(1))
+        rows.length == want.size && rows.toMap == want
+      }
+      // no further draws needed once the one draw holds
+      Prop.Result(if (ok) Prop.Proof else Prop.False).label(s"seed ${seed.toBase64}")
+    }
+
   property("lineHash: deterministic, distinct on distinct short strings (no trivial collisions)") =
     forAll(Gen.listOf(Gen.asciiPrintableStr.map(_.take(30))).map(_.distinct.take(50))) { ls =>
       val hs = ls.map(graft.ops.Dedup.lineHash)

@@ -198,10 +198,9 @@ class OpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
   }
 
   test("connectedComponents: 2048-node path converges in O(log diameter) rounds") {
-    // the adversarial worst case for star contraction — one path graph,
-    // diameter 2047. Kiveris et al. bound alternating large/small-star
-    // at O(log^2 n) with O(log n) typical; the fixpoint must land well
-    // under the 25-round cap with every node labeled by the path min
+    // one path graph, diameter 2047: the worst case for contraction
+    // schemes that move a label one hop per round. Under the one-partition
+    // bound it is one exact pass, with every node labeled by the path min
     val pairs = (0L until 2047L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs)
     val rows = cc.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -436,15 +435,29 @@ class OpsSpec extends AnyFunSuite with SparkSuite with TempDirs {
     assert(rounds <= 4, s"chain of diameter 3 should contract in O(log) rounds, took $rounds")
   }
 
-  test("ccDedup keeps cluster minima where greedy applyPairDedup over-drops") {
-    val docs = (1L to 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    // a->b->c chain as ordered pairs: greedy drops BOTH 2 and 3 (each
-    // appears as an id_b) even though 3's canonical 2 was itself dropped;
-    // cc keeps exactly one doc (the min) per component
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val kept = Dedup.ccDedup(docs, pairs).orderBy("doc_id")
-      .collect().map(_.getLong(0))
-    assert(kept.toSeq == Seq(1L, 4L, 5L)) // 4 untouched by any pair
+  /** Components of `pairs` through the multi-partition fixpoint (edge
+    * bound 0), checked against the expected minimum label per node.
+    */
+  private def contractedPasses(pairs: Seq[(Long, Long)], minLabel: Map[Long, Long]): Int = {
+    val (cc, passes) = Dedup.connectedComponentsWithRounds(pairs.toDF("id_a", "id_b"), 0L)
+    val got = cc.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(got.length == minLabel.size && got.toMap == minLabel)
+    passes
+  }
+
+  test("connectedComponents above the edge bound: 2048-node path in few passes") {
+    val pairs = (0L until 2047L).map(i => (i, i + 1))
+    val passes = contractedPasses(pairs, (0L until 2048L).map(_ -> 0L).toMap)
+    assert(passes <= 8, s"path-graph contraction took $passes passes")
+  }
+
+  test("connectedComponents above the edge bound: permuted 3000-node path in few passes") {
+    // ids along the path are a seeded permutation, so the minimum sits
+    // mid-path and neighbouring ids hash to unrelated partitions
+    val ids = new scala.util.Random(7).shuffle((0L until 3000L).toVector)
+    val pairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    val passes = contractedPasses(pairs, ids.map(_ -> 0L).toMap)
+    assert(passes <= 8, s"permuted-path contraction took $passes passes")
   }
 
   test("redactPii: counts and sequential replacement") {

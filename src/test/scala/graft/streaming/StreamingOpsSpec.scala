@@ -145,6 +145,32 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
+  test("streaming incremental dedup logs no FileNotFoundException warning") {
+    // reading a directory through a glob makes Spark's sink-metadata
+    // probe stat the literal glob path and log the miss with its trace
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("capture-warn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warnings.add(e.toImmutable)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    val pairs = try StreamingOps.streamIncrementalDedup(spark,
+      "/root/testdata/sf0.001/documents.parquet", nBatches = 2).count()
+    finally { root.removeAppender(capture); capture.stop() }
+    def causes(t: Throwable): Iterator[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    val notFound = warnings.toArray(Array.empty[LogEvent]).filter(e =>
+      causes(e.getThrown).exists(_.isInstanceOf[java.io.FileNotFoundException]))
+    assert(pairs > 0 && notFound.isEmpty,
+      notFound.map(e => s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}").mkString("\n"))
+  }
+
   test("stateful sessionization (flatMapGroupsWithState) matches batch sessions past the watermark") {
     val sfDir = "/root/testdata/sf0.001"
     val gapMs = 30L * 60 * 1000
