@@ -1,179 +1,78 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
-/** Driver-run benchmark. Prints exactly ONE JSON line:
-  * {"metric","value","unit","queries",{...},"sf", plus "extract" and
-  * "scaling" sections}.
+/** Driver-run query benchmark: `runMain graft.Bench [q1,q2,...]` times
+  * every registered query (or the named ones) over the tier at
+  * `SPARK_GRAFT_SF_DIR` and prints exactly ONE JSON line:
+  * {"metric","value","unit","queries":{...},"sf","scaling":null}.
+  * A failed query reads -1.0 and is named on stderr. The exit status
+  * stays 0: a reader of the line keeps the other queries' timings.
   *
-  * The scaling section is the BASELINE.json north-rule evidence: the
-  * identical extraction job (scan parquet pages → cascade → count) run
-  * at local[N] and local[4N] on the same pre-written input, reporting
-  * docs/sec at both and efficiency = (rate_4N / rate_N) / 4. Pages are
-  * written once with many small files and read with a small
-  * maxPartitionBytes so both parallelism levels have enough input
-  * splits — the local-mode stand-in for a 1000-executor file layout.
+  * Extraction scaling is the benchmark's `scaling_eff`
+  * (`perfbench/run.py --workload crawl_extract`), 1 to 4 threads,
+  * measured end to end into a committed table.
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = graft.util.Sessions.local(cpus, s"graft-bench-$cpus")
-    // small splits: both scaling levels get enough input partitions
-    s.conf.set("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-    s
+  /** Per query, in name order: its best seconds over three reps, or the
+    * class of the exception that failed it.
+    *
+    * Each rep materializes the whole result through the `noop` sink, as a
+    * caller receiving it would. `.count()` is not that: it lets Catalyst
+    * prune projections and the final sort, so per-row kernels the result
+    * needs may never run (text_analysis: 0.14 s counted vs 1.82 s
+    * materialized at sf0.1, local[4] on a 4-core host).
+    *
+    * Rep visits are interleaved across the suite (rep 1 of every query,
+    * then rep 2, then rep 3): back-to-back reps trap all of an early
+    * query's visits in the session's cold window (codegen backlog,
+    * first-touch JIT and parquet footers). Streaming queries run last:
+    * their checkpoint/memory-sink machinery and AQE-disabled sessions
+    * otherwise leave residue that taxes whatever batch query follows.
+    */
+  private[graft] def timeSuite(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[(String, Either[String, Double])] = {
+    val ordered = queries
+      .sortBy { case (name, _) => (name.startsWith("stream_"), name) }
+    val failed = scala.collection.mutable.Map.empty[String, String]
+    val best = scala.collection.mutable.Map.empty[String, Double]
+    for (_ <- 1 to 3; (name, fn) <- ordered if !failed.contains(name)) {
+      try {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val t = (System.nanoTime() - t0) / 1e9
+        if (!best.get(name).exists(_ <= t)) best(name) = t
+      } catch { case NonFatal(e) => failed(name) = e.getClass.getName }
+    }
+    ordered.map { case (name, _) =>
+      name -> failed.get(name).toLeft(best(name))
+    }.sortBy(_._1)
   }
 
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
+  /** The JSON line: a failed query reads -1.0 and stays out of `value`. */
+  private[graft] def render(sfDir: String,
+      results: Seq[(String, Either[String, Double])]): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"${v.getOrElse(-1.0)}%.3f" }
+      .mkString("{", ",", "}")
+    val total = results.flatMap(_._2.toOption).sum
+    f"""{"metric":"total_query_sec","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","scaling":null}"""
   }
 
   def main(args: Array[String]): Unit = {
+    val names = args match {
+      case Array()     => SparkEntry.queries.keySet
+      case Array(list) => SparkEntry.queryNames(list)
+    }
+    val queries = SparkEntry.queries.toSeq.filter { case (name, _) => names(name) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.util.Sessions.cpus
-    // "all" (default) | "queries" | "scaling" — the partial modes exist
-    // for isolated measurement; the driver always runs "all"
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "all")
-    // N -> 4N with headroom below the machine's core count: on a real
-    // cluster 4N executors don't share cores with the N-executor run's
-    // GC/driver threads; local[cpus] would conflate that contention
-    // with scaling. Peak throughput is additionally reported at
-    // local[cpus].
-    val nLow = math.max(1, cpus / 8)
-    val nHigh = math.max(2, cpus / 2)
-    // sized so the local[4N] timed run is several seconds, not
-    // sub-second — otherwise fixed job overhead (session, scheduling,
-    // first-stage JIT) masks the true scaling
-    val scalePages =
-      if (sfDir.contains("sf0.1")) 480000L
-      else if (sfDir.contains("sf0.01")) 120000L else 8000L
-
-    // ---- stage the scaling input once (not timed) ----
-    // queries mode never reads it (the suite reads sfDir, and per-query
-    // min-of-3 reps already absorbs JIT warmup), so skip the minutes of
-    // staging + warmup entirely there
-    val pagesPath: String =
-      if (mode == "queries") null
-      else {
-        val p = Files.createTempDirectory("graft-bench-pages").toString
-        val s = session(cpus)
-        graft.table.SyntheticPages.generate(s, scalePages, partitions = 128)
-          .toDF().write.mode("overwrite").parquet(p)
-        // JIT warmup of the extraction kernels (C2 needs a real pass)
-        graft.extract.Extract.extractPages(
-          graft.table.SyntheticPages.generate(s, 8000, partitions = 32).toDF()).count()
-        s.stop()
-        p
-      }
-
-    // ---- scaling FIRST: same job, nLow vs cpus threads, same input ----
-    // runs before the query suite so the timed regions see a young heap
-    // (the 70-execution query loop measurably taxes a later scaling
-    // phase through GC pressure: ~0.83 -> ~0.74 efficiency). Three timed
-    // runs per level, best taken (steadier JIT/page cache); a GC barrier
-    // between levels so the earlier level's garbage does not tax the
-    // later level's timed region.
-    def extractionRate(n: Int, reps: Int = 2): Double = {
-      val s = session(n)
-      val pages = s.read.parquet(pagesPath)
-      val secs = (1 to reps).map { _ =>
-        time(graft.extract.Extract.extractPages(pages).filter(_.succeeded).count())._2
-      }
-      s.stop()
-      System.gc()
-      Thread.sleep(500)
-      scalePages / secs.min
-    }
-    // levels are visited INTERLEAVED (low, high, low, high, ...) and each
-    // level reports its best visit: a slow host phase (shared sandbox)
-    // then penalizes both levels equally instead of corrupting the
-    // ratio, which is what the efficiency metric actually is. Three
-    // visits: observed host drift is minutes-scale, so more visits =
-    // more chances both levels sample the same clean window.
-    // mode=="queries" SKIPS scaling and emits scaling:null — fabricated
-    // 1.0 rates would otherwise flow into a bogus 0.25 "efficiency" and
-    // clobber the real BENCH.md record
-    // TWO N->4N pairs: nLow->nHigh (4->16: both leave core headroom, the
-    // clean cluster analogue) and nMid->cpus (8->32: evidences the >=0.8
-    // rule at full machine width too — round-3 verdict item #10)
-    val nMid = math.max(2, cpus / 4)
-    val scalingOpt: Option[(Double, Double, Double, Double, Double, Double)] =
-      if (mode == "queries") None
-      else {
-        val visits = (1 to 3).map(_ =>
-          (extractionRate(nLow), extractionRate(nMid),
-            extractionRate(nHigh), extractionRate(cpus)))
-        val rl = visits.map(_._1).max
-        val rm = visits.map(_._2).max
-        val rh = visits.map(_._3).max
-        val rPeak = visits.map(_._4).max
-        Some((rl, rm, rh, rPeak,
-          (rh / rl) / (nHigh.toDouble / nLow),
-          (rPeak / rm) / (cpus.toDouble / nMid)))
-      }
-    // the staged corpus is hundreds of MB per run — don't leak it
-    if (pagesPath != null) try {
-      val walk = java.nio.file.Files.walk(Paths.get(pagesPath))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-    // ---- per-query timings at the configured parallelism ----
-    // each query runs 3x and reports the min: the first rep pays
-    // first-touch JIT + parquet-footer costs that otherwise land on
-    // whichever query runs early (round-2 verdict: dedup_exact "regressed"
-    // 0.72 -> 1.89 s cold but was 0.62 s warm), and rep 2 still sees
-    // occasional AQE-replan/GC spikes on the join-heavy queries (round-3
-    // verdict: rag_topk/semi_join at 2.6-3x their paired-sweep cost).
-    // Streaming queries run LAST: their checkpoint/memory-sink machinery
-    // and disabled-AQE sessions otherwise leave residue that taxes
-    // whatever batch query follows alphabetically.
-    // Rep visits are INTERLEAVED ACROSS THE SUITE (rep 1 of every
-    // query, then rep 2, then rep 3; min per query) — the same
-    // methodology the scaling block uses for levels. Back-to-back reps
-    // put all three visits of an early-alphabet query inside the
-    // session's cold window (codegen-compiler backlog, executor
-    // warm-up), which inflated the 7-8 alphabetically-first queries
-    // 10-14x in the round-4 driver run; interleaving guarantees every
-    // query gets at least two visits against a fully warmed session.
-    // failed query -> exception class, reported on stderr below
-    val failed = scala.collection.mutable.Map.empty[String, String]
-    val results = if (mode == "scaling") Seq.empty else {
-      val sQ = session(cpus)
-      val ordered = SparkEntry.queries.toSeq.sortBy { case (name, _) =>
-        (name.startsWith("stream_"), name)
-      }
-      val bestSecs = scala.collection.mutable.Map.empty[String, Double]
-      for (_ <- 1 to 3; (name, fn) <- ordered if !failed.contains(name)) {
-        try {
-          val t = time(fn(sQ, sfDir).count())._2
-          if (!bestSecs.get(name).exists(_ <= t)) bestSecs(name) = t
-        } catch { case e: Throwable => failed(name) = e.getClass.getName }
-      }
-      sQ.stop()
-      ordered.map { case (name, _) =>
-        name -> (if (failed.contains(name)) -1.0 else bestSecs(name))
-      }.sortBy(_._1)
-    }
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val scaling = scalingOpt match {
-      case None => "null"
-      case Some((rateLow, rateMid, rateHigh, ratePeak, efficiency, efficiencyFull)) =>
-        f"""{"pages":$scalePages,"cpus_low":$nLow,"cpus_mid":$nMid,"cpus_high":$nHigh,"cpus_peak":$cpus,""" +
-        f""""docs_per_sec_low":${rateLow}%.1f,"docs_per_sec_mid":${rateMid}%.1f,""" +
-        f""""docs_per_sec_high":${rateHigh}%.1f,"docs_per_sec_peak":${ratePeak}%.1f,""" +
-        f""""docs_per_sec_per_thread_high":${rateHigh / nHigh}%.2f,"efficiency":${efficiency}%.3f,""" +
-        f""""efficiency_full_width":${efficiencyFull}%.3f}"""
-    }
-    val json =
-      f"""{"metric":"total_query_sec","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","scaling":$scaling}"""
-    // all sessions are stopped by here; silence any lingering logger and
+    val spark = graft.util.Sessions.local(graft.util.Sessions.cpus, "graft-bench")
+    val results = try timeSuite(spark, sfDir, queries) finally spark.stop()
+    val json = render(sfDir, results)
+    // the session is stopped by here; silence any lingering logger and
     // flush so the ONE JSON line cannot interleave with shutdown WARNs
     org.apache.log4j.LogManager.getRootLogger
       .setLevel(org.apache.log4j.Level.ERROR)
@@ -182,97 +81,17 @@ object Bench {
     Console.out.flush()
     // bench_result.json is the AUTHORITATIVE structured output: Spark's
     // shutdown-hook logging has interleaved with the stdout JSON line in
-    // past rounds (nulling the driver's best-effort `parsed` field), and
-    // sbt prefixes stdout with "[info] ". The file is written before any
-    // shutdown hook can run and is byte-identical to the printed line.
+    // past rounds, and sbt prefixes stdout with "[info] ". The file is
+    // written before any shutdown hook can run and is byte-identical to
+    // the printed line.
     try Files.write(Paths.get("bench_result.json"), (json + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
+    val failed = results.collect { case (name, Left(cls)) => s"$name ($cls)" }
     if (failed.nonEmpty)
-      System.err.println("[bench] failed queries: " + failed.toSeq.sorted
-        .map { case (name, cls) => s"$name ($cls)" }.mkString(", "))
+      System.err.println("[bench] failed queries: " + failed.mkString(", "))
     // cheap extra channel: the same line on stderr, unprefixed by any
     // logger formatting
     System.err.println(json)
     System.err.flush()
-
-    // best-effort BENCH.md for the judge (throughput at both levels) —
-    // NEVER written in queries-only mode (no scaling numbers to record)
-    if (scalingOpt.isDefined) try {
-      val (rateLow, rateMid, rateHigh, ratePeak, efficiency, efficiencyFull) =
-        scalingOpt.get
-      val md =
-        f"""# BENCH — extraction scaling evidence (driver-run)
-           |
-           |Input: $scalePages synthetic pages (deterministic corpus, seed 42),
-           |written once as parquet, identical bytes for both runs.
-           |Job: scan → cascade extraction (newspaper/readability/bs4) → count.
-           |
-           || parallelism | docs/sec | docs/sec/thread |
-           || --- | --- | --- |
-           || local[$nLow] | $rateLow%.1f | ${rateLow / nLow}%.1f |
-           || local[$nMid] | $rateMid%.1f | ${rateMid / nMid}%.1f |
-           || local[$nHigh] | $rateHigh%.1f | ${rateHigh / nHigh}%.1f |
-           || local[$cpus] (peak) | $ratePeak%.1f | ${ratePeak / cpus}%.1f |
-           |
-           |**Scaling efficiency, two N->4N pairs:
-           |$nLow->$nHigh: $efficiency%.3f; $nMid->$cpus (full width): $efficiencyFull%.3f**
-           |(target >= 0.8). The $nLow->$nHigh pair leaves core headroom for
-           |GC/driver threads at both levels, as a real cluster's executors
-           |would; the $nMid->$cpus pair evidences the rule at full machine
-           |width, where the 4N level shares cores with GC/driver work.
-           |
-           |## Full-width (8->32) ceiling adjudication (measured 2026-08-17)
-           |
-           |The residual 8->32 gap is the MACHINE's, not the engine's —
-           |three independent measurements (one-off probes, since deleted;
-           |`python3 perfbench/run.py --trace 1` now measures scaling):
-           |1. **GC attribution**: after sizing the young gen for 32
-           |   allocation-heavy threads (-Xmn16g of 24g, build.sbt — an A/B
-           |   worth +25-30%% at local[32] and flat at local[8]), collector
-           |   time is 0.4%% of wall at 8 threads and 2.1%% at 32 —
-           |   GC explains at most ~2 points of the gap.
-           |2. **Pure-bandwidth ceiling**: a Spark-free, GC-free probe (32
-           |   threads each stream-summing a PRIVATE 256 MB array) scales
-           |   8->32 at 0.743 efficiency on this box (5.77 -> 4.28 GB/s per
-           |   thread, 137 GB/s aggregate). No memory-resident workload can
-           |   scale past the memory system it runs on; extraction's 0.69
-           |   is ~93%% of that attainable ceiling.
-           |3. **Two-JVM cross-check**: two concurrent local[16] JVMs sum
-           |   only 12-19%% above one local[32] JVM (interleaved rounds) —
-           |   bounding every single-JVM effect (scheduler, locks, shared
-           |   heap) at well under the bandwidth share of the gap.
-           |On a real cluster the 4N executors are separate <=16-core JVMs
-           |on separate machines with their OWN memory systems — both
-           |confounds vanish, which is what the $nLow->$nHigh pair (cores
-           |left free for the runtime at both levels) models: $efficiency%.3f.
-           |
-           |Reference baseline (BASELINE.md): >= 10 URLs/minute single process
-           |= 0.17 docs/sec; this engine: $ratePeak%.0f docs/sec at $cpus threads.
-           |
-           |Per-query timings in the raw JSON are the min of 3 reps each,
-           |with rep visits INTERLEAVED across the suite (rep 1 of every
-           |query, then rep 2, then rep 3) so every query's min is
-           |measured against a fully warmed session — back-to-back reps
-           |previously inflated the first ~8 alphabetical queries 10-14x
-           |by trapping all their reps in the session's cold window.
-           |Scale-tier evidence (10x facts, sf1-equivalent): BENCH_SCALE.md.
-           |
-           |**Structured output: `bench_result.json` is authoritative.**
-           |It is byte-identical to the stdout JSON line but immune to the
-           |shutdown-hook log interleaving that has nulled the driver's
-           |best-effort stdout parse in past rounds; the same line is also
-           |emitted unprefixed on stderr.
-           |
-           |Host note: this is a shared sandbox; absolute docs/sec swings
-           |up to ~40%% across hours at zero guest-visible steal (measured:
-           |the same committed kernel at 7.4k then 5.3k docs/s single-thread
-           |an hour apart). Efficiency is a within-run ratio with interleaved
-           |level visits precisely so host phases cancel; compare absolute
-           |rates only within one run.
-           |
-           |Raw: $json
-           |""".stripMargin
-      Files.write(Paths.get("BENCH.md"), md.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
   }
 }

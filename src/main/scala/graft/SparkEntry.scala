@@ -47,6 +47,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (name, q) => name -> q.run }
 
+  /** The names in a comma-separated list, each a registered query: the
+    * optional query-list argument of Verify and Bench.
+    */
+  private[graft] def queryNames(list: String): Set[String] = {
+    val names = list.split(",").toSet
+    val unknown = names -- registry.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** DuckDB oracles for the tier at `sfDir`. Same logic, same rounding,
     * same ORDER BY.
     */

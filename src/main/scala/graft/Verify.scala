@@ -1,14 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failed query
+  * is named in the closing `[verify]` line; the exit status stays 0. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional third arg: comma-separated query names to dump (builder
     // iteration aid; the driver always passes exactly two args)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case Array(s, o, f) => (s, o, Some(SparkEntry.queryNames(f)))
     }
     val spark = graft.util.Sessions.local(graft.util.Sessions.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -19,7 +21,7 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           None
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(s"$name (${e.getClass.getName})")
         }
