@@ -39,7 +39,7 @@ object SparkEntry {
   val goldenDir: String =
     java.nio.file.Paths.get("src/test/resources/golden").toAbsolutePath.toString
 
-  private lazy val registry: Map[String, Query] = Query.registry(
+  private[graft] lazy val registry: Map[String, Query] = Query.registry(
     RelationalQueries.all, StreamingQueries.all, ExtractionQueries.all,
     DedupQueries.all, SimilarityQueries.all, TextQueries.all,
     MultimodalQueries.all, CrawlQueries.all, SketchQueries.all)
@@ -56,10 +56,4 @@ object SparkEntry {
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     names
   }
-
-  /** DuckDB oracles for the tier at `sfDir`. Same logic, same rounding,
-    * same ORDER BY.
-    */
-  def oracleSql(spark: SparkSession, sfDir: String): Map[String, String] =
-    registry.map { case (name, q) => name -> q.oracle(spark, sfDir) }
 }

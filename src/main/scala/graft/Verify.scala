@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A failed query
@@ -13,12 +14,28 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(SparkEntry.queryNames(f)))
     }
     val spark = graft.util.Sessions.local(graft.util.Sessions.cpus, "graft-verify")
-    new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq
+    val failed = try dump(spark, sfDir, outDir, only) finally spark.stop()
+    System.err.println(s"[verify] ${failed.size} failed queries" +
+      failed.mkString(if (failed.isEmpty) "" else ": ", ", ", ""))
+  }
+
+  /** Dumps each selected query and writes the oracles built for them;
+    * returns the failed ones as `name (exception class)`. A query's
+    * oracle is built first, inside the query's guard: an oracle that
+    * reads the tier (the self-sizing ones) fails only its own query,
+    * and a query that fails after its oracle keeps that oracle in
+    * oracle_sql.json.
+    */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Seq[String] = {
+    Files.createDirectories(Paths.get(outDir))
+    val oracles = Seq.newBuilder[(String, String)]
+    val failed = SparkEntry.registry.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+      .flatMap { case (name, query) =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          oracles += name -> query.oracle(spark, sfDir)
+          query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           None
         } catch { case NonFatal(e) =>
@@ -38,11 +55,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql(spark, sfDir)
+    val json = oracles.result()
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    System.err.println(s"[verify] ${failed.size} failed queries" +
-      failed.mkString(if (failed.isEmpty) "" else ": ", ", ", ""))
+    failed
   }
 }

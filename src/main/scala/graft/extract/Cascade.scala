@@ -23,8 +23,7 @@ final case class Extracted(
     title: String,
     author: String,
     publish_date: java.sql.Timestamp,
-    warnings: Seq[String],
-    extras: Map[String, String] = Map.empty)
+    warnings: Seq[String])
 
 /** Cascade configuration — mirrors the reference defaults:
   * strategy order newspaper → readability → http
@@ -59,11 +58,8 @@ final case class CascadeConfig(
 final class CascadeExtractor {
   private val parser = new HtmlParser
   private val stats = new DomStats
-  private var extras: Map[String, String] = Map.empty
 
-  def extract(url: String, html: Array[Byte], cfg: CascadeConfig,
-      sourceExtras: Map[String, String] = Map.empty): Extracted = {
-    extras = sourceExtras // passthrough metadata spill (SURVEY.md §1.2)
+  def extract(url: String, html: Array[Byte], cfg: CascadeConfig): Extracted = {
     try extractUnsafe(url, html, cfg)
     catch {
       case e: Throwable =>
@@ -76,7 +72,7 @@ final class CascadeExtractor {
 
   private def fail(url: String, reason: String): Extracted =
     Extracted(url, null, Nil, null, succeeded = false, reason,
-      partial = false, null, null, null, Nil, extras)
+      partial = false, null, null, null, Nil)
 
   private def extractUnsafe(url: String, html: Array[Byte], cfg: CascadeConfig): Extracted = {
     if (html == null || html.length == 0) return fail(url, "no_html_or_url")
@@ -137,7 +133,7 @@ final class CascadeExtractor {
     Extracted(url, r.content,
       r.spans.map { case (s, e, k) => Span(s, e, k) }.toSeq,
       name, succeeded = true, null, partial,
-      r.title, r.author, r.publishDate, warnings, extras)
+      r.title, r.author, r.publishDate, warnings)
 }
 
 object CascadeExtractor {
@@ -178,9 +174,6 @@ object Extract {
     *    kernel itself during whatever action the caller runs — no extra
     *    pass, no per-row serde detour (an earlier map-over-Row layer
     *    cost one full row-codec pass on the north-star hot path).
-    *  - An `extras: map<string,string>` input column (source metadata
-    *    spill, SURVEY.md §1.2) is carried through to the output; absent
-    *    column → empty map, with the two-column hot path untouched.
     */
   def extractPages(pages: DataFrame,
       cfg: CascadeConfig = CascadeConfig(),
@@ -190,28 +183,16 @@ object Extract {
         a.add(if (r.strategy_used == null) "FAILED" else r.strategy_used))
       r
     }
-    if (pages.columns.contains("extras"))
-      pages.select(col("url"), col("html"), col("extras"))
-        .as(pageWithExtrasEncoder)
-        .mapPartitions { it =>
-          val ex = CascadeExtractor.pooled()
-          it.map { case (u, h, xs) =>
-            count(ex.extract(u, h, cfg, if (xs == null) Map.empty else xs))
-          }
-        }(extractedEncoder)
-    else
-      pages.select(col("url"), col("html"))
-        .as(pageEncoder)
-        .mapPartitions { it =>
-          val ex = CascadeExtractor.pooled()
-          it.map { case (u, h) => count(ex.extract(u, h, cfg)) }
-        }(extractedEncoder)
+    pages.select(col("url"), col("html"))
+      .as(pageEncoder)
+      .mapPartitions { it =>
+        val ex = CascadeExtractor.pooled()
+        it.map { case (u, h) => count(ex.extract(u, h, cfg)) }
+      }(extractedEncoder)
   }
 
   // Derived once: deriving a product encoder reflects over its type,
   // which profiled as the largest part of planning an extraction unit
   private lazy val pageEncoder = Encoders.product[(String, Array[Byte])]
-  private lazy val pageWithExtrasEncoder =
-    Encoders.product[(String, Array[Byte], Map[String, String])]
   private lazy val extractedEncoder = Encoders.product[Extracted]
 }

@@ -161,7 +161,7 @@ object Cli {
             }, out, cfg)
           finally fs.delete(stagedPath, true)
         // the reference's success epilogue (app.py:112-128): completion
-        // line, extractor/processors, content size, environment, the
+        // line, extractor, content size, environment, the
         // below-threshold note, and echoed warnings — batch analogues
         // (aggregate character count, distinct warnings bounded at 3).
         // Counts, characters and the partial probe are one pass.
@@ -175,7 +175,6 @@ object Cli {
         if (args.contains("--async")) println("  mode: async (experimental)")
         println("Pipeline completed successfully.")
         println(s"  extractor: ${cfg.cascade.strategies.mkString(", ")}")
-        println("  processors: normalize_whitespace")
         println(s"  content-characters: $chars")
         println(s"  saved-to: ${args(2)}")
         println(s"  environment: ${resolved.environment}")

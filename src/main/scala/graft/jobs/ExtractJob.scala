@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.util.Try
 
-/** Job shaping knobs for the extraction pipeline at scale. Only
-  * [[ExtractJob.main]]'s synthetic source reads `partitionsPerUnit`:
-  * the job extracts on its input's own partitions, spread round-robin
-  * to the core count when it has fewer.
+/** Job shaping knobs for the extraction pipeline at scale.
+  * `partitionsPerUnit` sizes [[ExtractJob.main]]'s synthetic source
+  * only. The benchmark's crawl_extract workload sets it too, but the
+  * job never reads it: it extracts on its input's own partitions,
+  * spread round-robin to the core count when it has fewer.
   */
 final case class ExtractJobConfig(
     nUnits: Int = 8,
@@ -54,8 +55,7 @@ object ExtractJob {
     */
   def processUnit(pages: DataFrame, cfg: ExtractJobConfig,
       hist: Option[MapAccumulator] = None): DataFrame = {
-    // the kernel sees url and html only: an `extras` column would
-    // switch extractPages to its extras path
+    // the round-robin spread ships only the kernel's two columns
     val input = atClusterWidth(pages.select(col("url"), col("html")))
     Extract.extractPages(input, cfg.cascade, hist).toDF()
       .withColumn("task_partition", spark_partition_id())

@@ -34,7 +34,7 @@ object RagJobs {
               "chunk_size" -> c.chunk_size.toString,
               "total_chunks" -> c.total_chunks.toString,
               "overlap_size" -> c.overlap_size.toString,
-              "extractor" -> e.strategy_used) ++ e.extras)
+              "extractor" -> e.strategy_used))
         }
       }
       .mapPartitions { it =>

@@ -419,7 +419,7 @@ object TextQueries {
       // output shape (processors/base.py:41-61) — Python \s semantics
       t(s, dir, "documents")
         .select(col("doc_id"), col("text").as("content"))
-        .transform(d => graft.jobs.Pipeline.registry("normalize_whitespace")(d))
+        .transform(graft.jobs.Pipeline.normalizeWhitespace())
         .select(col("doc_id"), col("content"),
           col("char_count").cast("long").as("char_count"),
           col("meets_threshold"))

@@ -5,10 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One vector-index row (core/rag/stores/base.py:11-23 → typed).
-  * `meta` is the open metadata dict's spill column (same convention as
-  * Extracted.extras): the reference's per-chunk metadata projection
-  * (rag/stages/index.py:131-148) lands here — chunk_size, total_chunks,
-  * overlap_size, extractor — plus any source passthrough keys.
+  * `meta` is the open metadata dict's spill column: the reference's
+  * per-chunk metadata projection (rag/stages/index.py:131-148) lands
+  * here — chunk_size, total_chunks, overlap_size, extractor.
   */
 final case class IndexDoc(
     id: String,

@@ -251,18 +251,6 @@ class CascadeSpec extends AnyFunSuite {
     assert(PageCodec.decode(bytes).contains("é"))
   }
 
-  test("extras metadata spill survives the cascade (SURVEY §1.2 contract)") {
-    val ex = CascadeExtractor.pooled()
-    val xs = Map("source" -> "cc-main-2026", "warc_file" -> "w-00042")
-    val html = fixtureHtml.getBytes(StandardCharsets.UTF_8)
-    val ok = ex.extract("https://x.example/a", html, CascadeConfig(), xs)
-    assert(ok.succeeded && ok.extras == xs)
-    val failed = ex.extract("https://x.example/b", Array.empty, CascadeConfig(), xs)
-    assert(!failed.succeeded && failed.extras == xs) // carried on failure rows too
-    // no extras supplied → empty map, not a stale previous value
-    assert(ex.extract("https://x.example/c", html, CascadeConfig()).extras.isEmpty)
-  }
-
   test("strategy registry drives the cascade (config-ordered, unknown skipped)") {
     val ex = CascadeExtractor.pooled()
     val html = fixtureHtml.getBytes(StandardCharsets.UTF_8)

@@ -42,19 +42,6 @@ class ExtractSparkSpec extends AnyFunSuite with SparkSuite {
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
   }
 
-  test("extras column passes through extractPages; absent column → empty map") {
-    import org.apache.spark.sql.functions._
-    val pages = SyntheticPages.generate(spark, 20, seed = 42, partitions = 2).toDF()
-    val withExtras = pages.withColumn("extras",
-      map(lit("warc_file"), concat(lit("w-"), xxhash64(col("url")).cast("string"))))
-    val out = Extract.extractPages(withExtras).collect()
-    assert(out.length == 20)
-    assert(out.forall(e => e.extras.keySet == Set("warc_file")))
-    // no extras column → hot two-column path, empty maps
-    val plain = Extract.extractPages(pages).collect()
-    assert(plain.forall(_.extras.isEmpty))
-  }
-
   test("strategy histogram accumulates inside the kernel during the action") {
     val hist = new graft.util.MapAccumulator
     spark.sparkContext.register(hist, "strategy-hist-spec")

@@ -186,6 +186,8 @@ class CliSpec extends AnyFunSuite with SparkSuite with TempDirs {
     val s = out.toString
     assert(s.contains("Pipeline completed successfully."), s)
     assert(s.contains("  extractor: "), s)
+    // the job runs no processor, so the epilogue names none
+    assert(!s.linesIterator.exists(_.trim.startsWith("processors:")), s)
     assert(s.contains("  environment: default"), s)
     assert(s.contains("  note: content below configured minimum threshold"), s)
     assert(s.toLowerCase.contains("warning:"), s)

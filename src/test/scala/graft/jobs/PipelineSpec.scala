@@ -1,45 +1,10 @@
 package graft.jobs
 
 import graft.SparkSuite
-import graft.table.{IcebergLite, SyntheticPages}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-/** PipelineRunner composition parity (core/pipeline.py:26-97) and SQL
-  * registration of native expressions.
-  */
+/** SQL registration of native expressions. */
 class PipelineSpec extends AnyFunSuite with SparkSuite {
-
-  test("extract -> processor fold -> store; processors normalize content") {
-    val dir = Files.createTempDirectory("pipe").toString
-    val out = new IcebergLite(dir)
-    val pages = SyntheticPages.generate(spark, 120, partitions = 4).toDF()
-    val result = Pipeline.run(pages, store = Some(out))
-    val rows = result.where(col("succeeded")).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val content = r.getAs[String]("content")
-      // normalize_whitespace: no doubled spaces, no newlines
-      assert(!content.contains("\n") && !content.contains("  "))
-      assert(r.getAs[Int]("char_count") == content.length)
-      assert(r.getAs[Boolean]("meets_threshold"))
-    }
-    // extraction columns preserved alongside processor output
-    assert(result.columns.contains("extracted_text") &&
-      result.columns.contains("strategy_used"))
-    // stored and committed
-    val stored = out.read(spark).count()
-    assert(stored == 120)
-    assert(out.manifest(spark).select("rows").collect()(0).getString(0) == stored.toString)
-    out.drop(spark)
-  }
-
-  test("unknown processor names silently skipped (reference behavior)") {
-    val pages = SyntheticPages.generate(spark, 10, partitions = 2).toDF()
-    val result = Pipeline.run(pages, processors = Seq("bogus", "normalize_whitespace"))
-    assert(result.count() == 10)
-  }
 
   test("cosine_sim registered for SQL") {
     graft.functions.Register.all(spark)
